@@ -139,41 +139,46 @@ object CtbIngest {
       .withColumnRenamed("value", LINE)
       .drop("_pid", "_mid", "_file")
 
-    val (clean, errors) = applyRowRules(numbered, canonical, keyCols = Nil)
-    IngestResult(clean, errors, fileFailed = false, failureReason = None)
+    val tagged = tagRows(numbered, canonical, keyCols = Nil)
+    IngestResult(cleanRows(tagged), errorRows(tagged, keyCols = Nil),
+      fileFailed = false, failureReason = None)
   }
 
-  /** B6-B13 row rules over numbered lines: width check, trim, null-if-empty,
-    * typed casts, row-drop, error strings. `keyCols` (e.g. the source-file
-    * column in the multi-file path) ride through to both outputs.
+  /** Column of a tagged frame holding the row's error strings. */
+  private val ERRS = "_errs"
+
+  /** B6-B13 row rules over numbered lines, as ONE tagged frame: `keyCols`
+    * (e.g. the source-file column in the multi-file path), the typed
+    * canonical columns, and `_errs` — the row's error strings, empty iff
+    * the row survives. Clean rows and error rows are two filters over this
+    * one plan ([[cleanRows]], [[errorRows]]), so a caller that persists it
+    * parses the lines once for both.
     */
-  private def applyRowRules(
+  private def tagRows(
       numbered: DataFrame,
       canonical: Seq[String],
-      keyCols: Seq[String]): (DataFrame, DataFrame) = {
+      keyCols: Seq[String]): DataFrame = {
     val ncols = canonical.length
     val parts = split(col(LINE), "\t", -1)
     val widthOk = size(parts) === ncols
     val keys = keyCols.map(col)
+    val widthErr = "_width_err"
 
-    // B6 errors: wrong width -> skip row, record error with line number+content.
-    val widthErrors = numbered
-      .filter(!widthOk)
-      .select(keys :+ concat(
-        lit("Row "), col(LINENO),
-        lit(s" has incorrect number of columns. Expected $ncols, got "), size(parts),
-        lit(". Row content: "), col(LINE)).as("error"): _*)
-
+    // B6: wrong width -> the row's only error, with line number + content;
+    // its fields stay null, so no cast error can join it.
     // B7+B8: trim each field, empty -> NULL. Trim is WHITESPACE-exact
     // (python str.strip()), not Spark trim's spaces-only: a CRLF file
     // leaves "\r" on every row's last field, which space-trim would feed
     // into the date/int casts and silently drop every row (B12).
     def wsTrim(c: Column): Column = regexp_replace(c, "^\\s+|\\s+$", "")
-    val wide = numbered
-      .filter(widthOk)
-      .select(keys ++ (col(LINENO) +: canonical.zipWithIndex.map { case (name, i) =>
-        nullif(wsTrim(parts.getItem(i)), lit("")).as(name)
-      }): _*)
+    val fields = numbered.select(keys ++ Seq(col(LINENO),
+      when(!widthOk, concat(
+        lit("Row "), col(LINENO),
+        lit(s" has incorrect number of columns. Expected $ncols, got "), size(parts),
+        lit(". Row content: "), col(LINE))).as(widthErr)) ++
+      canonical.zipWithIndex.map { case (name, i) =>
+        when(widthOk, nullif(wsTrim(parts.getItem(i)), lit(""))).as(name)
+      }: _*)
 
     // B9/B10: typed casts. For each typed column build (value, ok) pairs.
     // try_* keeps this ANSI-safe (Spark 4 defaults to ANSI mode).
@@ -195,40 +200,48 @@ object CtbIngest {
           lit(s": Could not parse date '"), col(name), lit(s"' for column '$name' (expected yyyy-MM-dd)."))
         (v, ok, err)
     }
+    val casts = canonical.map(castCol)
 
-    val casts = canonical.map(n => n -> castCol(n)).toMap
-    val rowOk = casts.values.map(_._2).reduce(_ && _)
-
-    // B13: cast errors, one row per failing field.
-    val castErrors = wide
-      .select(keys :+ array(canonical.map { n =>
-        val (_, ok, err) = casts(n)
-        when(!ok, err).otherwise(lit(null))
-      }: _*).as("errs"): _*)
-      .select(keys :+ explode(col("errs")).as("error"): _*)
-      .filter(col("error").isNotNull)
-
-    // B12: the row-drop rule — keep a row iff every typed column either was
-    // NULL/empty in the source or cast successfully.
-    val clean = wide
-      .filter(rowOk)
-      .select(keys ++ canonical.map(n => casts(n)._1.as(n)): _*)
-
-    (clean, widthErrors.unionByName(castErrors))
+    // B13: one error per failing field; B12: a row with any error is
+    // dropped from the clean rows (not inserted null-padded).
+    val castErrs = array_compact(array(casts.map { case (_, ok, err) => when(!ok, err) }: _*))
+    fields.select(keys ++ canonical.zip(casts).map { case (n, (v, _, _)) => v.as(n) } :+
+      when(col(widthErr).isNotNull, array(col(widthErr))).otherwise(castErrs).as(ERRS): _*)
   }
+
+  /** The rows of a tagged frame that survived every rule, without `_errs`. */
+  private def cleanRows(tagged: DataFrame): DataFrame =
+    tagged.filter(size(col(ERRS)) === 0).drop(ERRS)
+
+  /** One row per error string of a tagged frame, with its `keyCols`. */
+  private def errorRows(tagged: DataFrame, keyCols: Seq[String]): DataFrame =
+    tagged.select(keyCols.map(col) :+ explode(col(ERRS)).as("error"): _*)
 
   /** Result of ingesting a whole set of files as one distributed plan.
     *
-    * @param clean       surviving rows, full canonical schema, plus a
-    *                    `_src_file` column for per-file accounting
-    * @param errors      per-row error strings with their `_src_file`
+    * @param tagged      every data row of the files that did not fail whole:
+    *                    `_src_file`, the full canonical schema (null-filled
+    *                    for a file whose header names fewer columns) and
+    *                    `_errs`, the row's error strings — empty iff the row
+    *                    is clean. [[clean]] and [[errors]] are two filters
+    *                    over it, so persisting it parses the batch once.
+    * @param files       every file that yielded scan rows, sorted — read off
+    *                    the stats pass, so naming them costs no extra job
+    *                    (a 0-byte file yields no rows and is not listed)
     * @param fileFailed  whole-file failures (B1 empty / header-only, B5
     *                    unknown header): file path -> reason
     */
   final case class MultiIngestResult(
-      clean: DataFrame,
-      errors: DataFrame,
-      fileFailed: Map[String, String])
+      tagged: DataFrame,
+      files: Seq[String],
+      fileFailed: Map[String, String]) {
+
+    /** Surviving rows: `_src_file` plus the full canonical schema. */
+    def clean: DataFrame = cleanRows(tagged)
+
+    /** Per-row error strings with their `_src_file`. */
+    def errors: DataFrame = errorRows(tagged, keyCols = Seq(SRC_FILE))
+  }
 
   val SRC_FILE = "_src_file"
 
@@ -268,7 +281,7 @@ object CtbIngest {
   }
 
   /** Multi-file core: the single-file semantics (B1-B13), applied per
-    * source file, driven by ONE stats pass and one header-collection pass.
+    * source file, driven by ONE stats pass.
     *
     * How it scales past the sequential per-file driver loop:
     *   1. per-(file, partition) stats — counts, min id, min/max non-blank
@@ -280,12 +293,16 @@ object CtbIngest {
     *      rows of different files never share a (file, partition) key
     *      ordering problem because a partition reads its files
     *      sequentially.
-    *   2. all header lines are fetched in ONE filter keyed by the per-file
-    *      header coordinates from (1) — not one driver round-trip per file.
-    *   3. files are grouped by canonical header layout; each group runs the
-    *      shared row-rule pipeline once, with per-file line offsets and
-    *      bounds applied via literal lookup maps. In the common case (every
-    *      file shares the CTB layout) the whole batch is ONE plan.
+    *   2. the same pass carries each chunk's first non-blank line, so every
+    *      file's header reaches the driver with its stats — no second pass.
+    *   3. files are grouped by canonical header layout; each group tags its
+    *      rows with the shared row rules once, with per-file line offsets
+    *      and bounds applied via literal lookup maps. In the common case
+    *      (every file shares the CTB layout) the whole batch is ONE plan,
+    *      and clean rows and errors are two filters over it.
+    *
+    * The file list comes from (1) too, so a caller needs no separate
+    * `input_file_name` pass to learn which files the batch held.
     *
     * Whole-file failures (empty, header-only, unknown columns) affect only
     * their file and are reported in `fileFailed`.
@@ -311,23 +328,24 @@ object CtbIngest {
       spark_partition_id().as("_pid"), monotonically_increasing_id().as("_mid"),
       input_file_name().as("_file"))
 
-    // (1) one stats pass, keyed by (file, partition)
+    // (1) one stats pass, keyed by (file, partition); it also carries each
+    // chunk's first non-blank line, so the header needs no second pass
     val statRows = ids.groupBy(col("_file"), col("_pid")).agg(
         count(lit(1)).as("n"), min(col("_mid")).as("m0"),
         min(when(nonblank, col("_mid"))).as("nbMin"),
-        max(when(nonblank, col("_mid"))).as("nbMax"))
+        max(when(nonblank, col("_mid"))).as("nbMax"),
+        min_by(col("value"), when(nonblank, col("_mid"))).as("nbFirst"))
       .collect()
 
     val failures = scala.collection.mutable.Map[String, String]()
 
     // per-file chunk bookkeeping -> adjust / header / last line numbers
     final case class FileMeta(
-        adjust: Map[Int, Long], hdrLineno: Long, lastLineno: Long,
-        hdrPid: Int, hdrMid: Long)
+        adjust: Map[Int, Long], hdrLineno: Long, lastLineno: Long, header: String)
     val metas: Map[String, FileMeta] = statRows.groupBy(_.getString(0)).flatMap {
       case (file, rows) =>
         val chunks = rows.map(r => (r.getInt(1), r.getLong(2), r.getLong(3),
-            if (r.isNullAt(4)) None else Some(r.getLong(4)),
+            if (r.isNullAt(4)) None else Some((r.getLong(4), r.getString(6))),
             if (r.isNullAt(5)) None else Some(r.getLong(5))))
           .sortBy(_._1) // pid order = offset order within one file (see above)
         if (chunks.forall(_._4.isEmpty)) {
@@ -338,44 +356,29 @@ object CtbIngest {
           val adjust = chunks.map { case (pid, n, m0, _, _) =>
             val a = off - m0 + 1; off += n; (pid, a)
           }.toMap
-          val hdr = chunks.collect { case (pid, _, _, Some(nb), _) => (pid, nb) }
-            .minBy { case (pid, nb) => nb + adjust(pid) }
-          val hdrLineno = hdr._2 + adjust(hdr._1)
+          // (2) the header: the first non-blank line of the earliest chunk
+          val (hdrLineno, header) = chunks
+            .collect { case (pid, _, _, Some((nb, line)), _) => (nb + adjust(pid), line) }
+            .minBy(_._1)
           val lastLineno = chunks
             .collect { case (pid, _, _, _, Some(nb)) => nb + adjust(pid) }.max
           if (lastLineno == hdrLineno) {
             failures(file) = "File contains no data rows" // B1
             None
-          } else Some(file -> FileMeta(adjust, hdrLineno, lastLineno, hdr._1, hdr._2))
+          } else Some(file -> FileMeta(adjust, hdrLineno, lastLineno, header))
         }
     }
 
-    // (2) all headers in one filter/collect
-    val headerLines: Map[String, String] =
-      if (metas.isEmpty) Map.empty
-      else ids.filter(metas.map { case (f, m) =>
-          col("_file") === f && col("_pid") === m.hdrPid && col("_mid") === m.hdrMid
-        }.reduce(_ || _))
-        .select(col("_file"), col("value")).collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-
     // B3+B4+B5 per file; group survivors by canonical layout
-    val canonicalByFile: Map[String, Seq[String]] = headerLines.flatMap {
-      case (file, line) =>
-        val canonical = line.split("\t", -1).toSeq.map(CtbSchema.canonicalName)
+    val canonicalByFile: Map[String, Seq[String]] = metas.flatMap {
+      case (file, meta) =>
+        val canonical = meta.header.split("\t", -1).toSeq.map(CtbSchema.canonicalName)
         val unknown = canonical.filterNot(columnTypes.contains)
         if (unknown.nonEmpty) {
           failures(file) = s"Schema mismatch. Unknown columns: ${unknown.mkString(", ")}" // B5
           None
         } else Some(file -> canonical)
     }
-
-    val emptyClean = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(StructField(SRC_FILE, StringType) +: sparkSchema.fields))
-    val emptyErr = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField(SRC_FILE, StringType), StructField("error", StringType))))
 
     // (3) one row-rule plan per distinct layout
     val groups = canonicalByFile.groupBy(_._2).toSeq.map {
@@ -395,18 +398,21 @@ object CtbIngest {
           .withColumnRenamed("value", LINE)
           .withColumnRenamed("_file", SRC_FILE)
           .drop("_pid", "_mid")
-        val (clean, errors) = applyRowRules(numbered, canonical, keyCols = Seq(SRC_FILE))
+        val tagged = tagRows(numbered, canonical, keyCols = Seq(SRC_FILE))
         // null-fill to the full canonical schema so layout groups union
         val present = canonical.toSet
-        val full = canonicalColumns.foldLeft(clean) { (df, c) =>
-          if (present.contains(c)) df else df.withColumn(c, lit(null).cast(sparkSchema(c).dataType))
-        }.select(col(SRC_FILE) +: canonicalColumns.map(col): _*)
-        (full, errors)
+        tagged.select(col(SRC_FILE) +: canonicalColumns.map { c =>
+          if (present.contains(c)) col(c) else lit(null).cast(sparkSchema(c).dataType).as(c)
+        } :+ col(ERRS): _*)
     }
+    val emptyTagged = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType(StructField(SRC_FILE, StringType) +: sparkSchema.fields :+
+        StructField(ERRS, ArrayType(StringType))))
 
     MultiIngestResult(
-      clean = groups.map(_._1).foldLeft(emptyClean)(_ unionByName _),
-      errors = groups.map(_._2).foldLeft(emptyErr)(_ unionByName _),
+      tagged = groups.reduceOption(_ unionByName _).getOrElse(emptyTagged),
+      files = statRows.map(_.getString(0)).distinct.sorted.toSeq,
       fileFailed = failures.toMap)
   }
 

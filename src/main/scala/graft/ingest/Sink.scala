@@ -17,8 +17,8 @@ import org.apache.spark.sql.types.StructType
   * `batchSize` with PER-BATCH error isolation and partial-success
   * accounting — a failing batch records its error and the loop continues;
   * the file counts as successfully processed iff at least one row landed.
-  * Batch ids derive from per-partition monotonic ids (no global sort), so
-  * slicing is partition-parallel; the per-batch commit loop itself is a
+  * Slices are cut on the driver from row-id runs read back in one job (no
+  * global sort, no per-slice count); the per-batch commit loop itself is a
   * faithful reproduction of the reference's RPC batching — at production
   * scale a connector's own batched writer replaces it (Spark's file
   * committer is all-or-nothing per job, which cannot express the
@@ -152,7 +152,9 @@ object Sink {
   def writeBatchIdempotent(df: DataFrame, sinkDir: String, batchId: Long): Unit =
     df.write.mode("overwrite").parquet(s"$sinkDir/batch=$batchId")
 
-  /** C3: append `clean` to `path` in batches of at most `batchSize` rows.
+  /** C3: append `clean` to `path` in batches of at most `batchSize` rows —
+    * the one-key case of [[appendBatchedByKey]]: exactly
+    * `ceil(rows / batchSize)` batches, in input order.
     *
     * @param writeBatch pluggable batch writer (tests inject failures to
     *                   exercise the partial-success accounting); default
@@ -162,33 +164,97 @@ object Sink {
       clean: DataFrame,
       path: String,
       batchSize: Int,
-      writeBatchOpt: Option[(DataFrame, Long) => Unit] = None): BatchedWriteResult = {
+      writeBatchOpt: Option[(DataFrame, Long) => Unit] = None): BatchedWriteResult =
+    appendBatchedByKey(clean.withColumn(OneKey, lit("")), OneKey, path, batchSize, writeBatchOpt)
+      .getOrElse("", BatchedWriteResult(0L, 0, Nil))
+
+  private val OneKey = "_sink_key"
+  private val RowId = "_sink_rid"
+
+  /** C3 for many keys at once (e.g. the files of one micro-batch): each
+    * key's rows are appended in slices of at most `batchSize` rows, with
+    * per-key partial-success accounting, and the key column is dropped
+    * from what is written.
+    *
+    * Row ids are fixed once, in a persisted frame sorted by key within
+    * each partition (input order kept inside a key), so a key's rows in
+    * one partition carry consecutive ids whatever the partition layout.
+    * One job reads back each partition's (key, first id, row count) runs;
+    * the driver cuts every key's runs into exact slices —
+    * `ceil(rows / batchSize)` per key, sizes known — and the only other
+    * jobs are the writes, one per slice.
+    *
+    * @param keyCol        non-null string column naming each row's key
+    * @param writeBatchOpt `writeBatch(slice, i)` gets the slice's 0-based
+    *                      index within its key; default appends parquet
+    * @return the accounting of every key that has at least one row
+    */
+  def appendBatchedByKey(
+      rows: DataFrame,
+      keyCol: String,
+      path: String,
+      batchSize: Int,
+      writeBatchOpt: Option[(DataFrame, Long) => Unit] = None): Map[String, BatchedWriteResult] = {
     require(batchSize >= 1, s"appendBatched: batchSize must be >= 1, got $batchSize")
     val writeBatch = writeBatchOpt.getOrElse(
       (df: DataFrame, _: Long) => df.write.mode("append").parquet(path))
-    // batch id from the per-partition monotonic id: groups of <= batchSize
-    // rows within each partition — bounded batch size without a global sort
-    // persisted so batch membership is computed once and stays stable across
-    // the per-batch actions (monotonic ids must not be re-derived per pass)
-    val withBatch = clean.withColumn("_batch",
-      expr(s"monotonically_increasing_id() div $batchSize")).persist()
+    val withIds = rows
+      .withColumn(RowId, monotonically_increasing_id())
+      .sortWithinPartitions(col(keyCol), col(RowId))
+      .withColumn(RowId, monotonically_increasing_id())
+      .persist()
     try {
-      val batchIds = withBatch.select(col("_batch")).distinct()
-        .collect().map(_.getLong(0)).sorted
-      var inserted = 0L
-      val errors = Seq.newBuilder[String]
-      batchIds.zipWithIndex.foreach { case (b, i) =>
-        val batch = withBatch.filter(col("_batch") === b).drop("_batch")
-        try {
-          val n = batch.count()
-          writeBatch(batch, b)
-          inserted += n
-        } catch {
-          case e: Exception =>
-            errors += s"Batch ${i + 1} insertion failed: ${e.getMessage}"
+      val runs = withIds.select(col(keyCol), col(RowId)).rdd.mapPartitions { it =>
+        val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
+        it.foreach { r =>
+          val k = r.getString(0)
+          if (out.nonEmpty && out.last._1 == k) {
+            val (_, first, n) = out.last
+            out(out.length - 1) = (k, first, n + 1)
+          } else out += ((k, r.getLong(1), 1L))
         }
+        out.iterator
+      }.collect()
+      runs.groupBy(_._1).toSeq.sortBy(_._1).map { case (key, keyRuns) =>
+        val slices = cut(keyRuns.map(r => (r._2, r._3)).sortBy(_._1).toSeq, batchSize)
+        var inserted = 0L
+        val errors = Seq.newBuilder[String]
+        slices.zipWithIndex.foreach { case (ranges, i) =>
+          val slice = withIds
+            .filter(ranges.map { case (a, b) => col(RowId).between(a, b) }.reduce(_ || _))
+            .drop(RowId, keyCol)
+          try {
+            writeBatch(slice, i.toLong)
+            inserted += ranges.map { case (a, b) => b - a + 1 }.sum
+          } catch {
+            case e: Exception =>
+              errors += s"Batch ${i + 1} insertion failed: ${e.getMessage}"
+          }
+        }
+        key -> BatchedWriteResult(inserted, slices.length, errors.result())
+      }.toMap
+    } finally withIds.unpersist(false)
+  }
+
+  /** Cuts one key's id runs — (first id, row count), in id order — into
+    * consecutive slices of `size` rows (the last may be short); a slice is
+    * its list of inclusive id ranges.
+    */
+  private def cut(runs: Seq[(Long, Long)], size: Int): Seq[Seq[(Long, Long)]] = {
+    val slices = Seq.newBuilder[Seq[(Long, Long)]]
+    var cur = Vector.empty[(Long, Long)]
+    var room = size.toLong
+    runs.foreach { case (first, n) =>
+      var start = first
+      var left = n
+      while (left > 0) {
+        val take = math.min(left, room)
+        cur :+= (start -> (start + take - 1))
+        start += take; left -= take; room -= take
+        if (room == 0) { slices += cur; cur = Vector.empty; room = size.toLong }
       }
-      BatchedWriteResult(inserted, batchIds.length, errors.result())
-    } finally withBatch.unpersist(false)
+    }
+    if (cur.nonEmpty) slices += cur
+    slices.result()
   }
 }

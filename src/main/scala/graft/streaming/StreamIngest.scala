@@ -7,7 +7,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.hadoop.fs.Path
-import java.util.concurrent.Executors
 import java.util.concurrent.atomic.AtomicLong
 
 /** The reference's poll -> process -> ack cycle (reference main.py:648-687)
@@ -34,30 +33,33 @@ import java.util.concurrent.atomic.AtomicLong
   * and notification and the run continues (reference's per-message
   * try/except, main.py:662-677).
   *
-  * Scale notes:
-  *   - the whole micro-batch is parsed and validated as ONE distributed
-  *     plan (CtbIngest.ingestManyLines — per-file line numbers from a
-  *     single stats pass, one row-rule pipeline per distinct header
-  *     layout), so ingest cost is O(#layouts) Spark jobs per trigger, not
-  *     O(#files);
-  *   - row-error accounting is batch-wide: per-file error counts and
-  *     bounded notification samples come from ONE aggregation, and the
-  *     error sink gets ONE append per trigger instead of one per file;
-  *   - per-file sink COMMITS (the C3 batched append whose partial-success
-  *     accounting is per file) run concurrently from a bounded driver
-  *     pool; only the physical parquet appends serialize through
-  *     [[sinkLock]], because concurrent append jobs into ONE directory
-  *     race on the output committer's shared `_temporary` dir. Planning,
-  *     batch-id collection and per-batch counts — the scheduler-floor-bound
-  *     bulk of a small file's commit — overlap across files.
+  * Scale notes — the jobs one micro-batch launches, whatever its file count:
+  *   - parse (CtbIngest.ingestManyLines): one (file, partition) stats
+  *     aggregation, which also names the batch's files and carries their
+  *     headers (two jobs: the shuffle map stage and the result). The rows of
+  *     every file become ONE tagged frame (typed columns plus each row's
+  *     errors), persisted once; clean rows and row errors are two filters
+  *     over it. With one header layout this is one plan;
+  *   - commit (Sink.appendBatchedByKey): one job reads back every file's
+  *     row-id runs, then one write per slice of at most `batchSize` rows —
+  *     the only jobs that grow with the data, as in the reference's batch
+  *     loop;
+  *   - accounting: one job for every file's row-error count and bounded
+  *     notification sample, and ONE append into the error sink carrying the
+  *     row errors and every whole-file failure of the batch.
+  * A batch whose sink is missing (C2) or whose parse throws is not parsed:
+  * one distinct-collect names its files, and the one errors append fails
+  * them all.
   */
 object StreamIngest {
 
   final case class RunStats(filesSeen: Long, filesSucceeded: Long)
 
-  /** Serializes physical appends into the shared sink/error directories
-    * (see scale notes above). JVM-wide on purpose: two concurrent drains
-    * against the same directories must not interleave committer state.
+  /** Serializes physical appends into the shared sink/error directories:
+    * concurrent append jobs into ONE directory race on the output
+    * committer's shared `_temporary` dir. JVM-wide on purpose: two
+    * concurrent drains against the same directories must not interleave
+    * committer state.
     */
   private val sinkLock = new Object
 
@@ -114,103 +116,26 @@ object StreamIngest {
         // materialized whole files in driver memory, main.py:366 — rejected
         // here); the batch's rows are parsed as one distributed plan.
         val spark2 = batch.sparkSession
-        val files = batch.select(input_file_name().as("f")).distinct()
-          .collect().map(_.getString(0)).sorted
+        def scanFiles(): Seq[String] = batch.select(input_file_name()).distinct()
+          .collect().map(_.getString(0)).sorted.toSeq
+        val (files, parsed) =
+          if (!Sink.tableExists(spark2, cfg.sinkDir))
+            // C2: missing destination table fails the file, no auto-create
+            (scanFiles(), Left(s"Destination table '${cfg.sinkDir}' does not exist. " +
+              "Please ensure the table is created before running."))
+          else try {
+            val multi = CtbIngest.ingestManyLines(spark2, batch)
+            (multi.files, Right(multi))
+          } catch { case e: Exception =>
+            // a scan-level poison batch (unreadable file, vanished split)
+            // must not kill the run (E1): fail the batch's files with the
+            // cause, keep draining subsequent triggers
+            (scanFiles(), Left(s"Batch parse failed: $e"))
+          }
         files.foreach(f => seenInBatch.add(new Path(f).getName))
-
         if (files.nonEmpty) {
-          val sinkOk = Sink.tableExists(spark2, cfg.sinkDir)
-          val empty = CtbIngest.MultiIngestResult(
-            spark2.emptyDataFrame, spark2.emptyDataFrame, Map.empty)
-          val multi =
-            if (!sinkOk) empty // C2 short-circuit: don't parse
-            else try CtbIngest.ingestManyLines(spark2, batch)
-            catch { case e: Exception =>
-              // a scan-level poison batch (unreadable file, vanished split)
-              // must not kill the run (E1): fail the batch's files with the
-              // cause, keep draining subsequent triggers
-              empty.copy(fileFailed = files.map(f => f -> s"Batch parse failed: $e").toMap)
-            }
-          val clean = if (sinkOk) multi.clean.persist() else multi.clean
-          val errors = if (sinkOk) multi.errors.persist() else multi.errors
-          val anyCommittable = sinkOk && files.exists(f => !multi.fileFailed.contains(f))
-          // batch-wide row-error accounting: ONE aggregation for per-file
-          // counts + bounded samples, ONE append into the error sink
-          val errStats: Map[String, (Long, Seq[String])] =
-            if (!anyCommittable) Map.empty
-            else {
-              // Bound the notification sample BEFORE any aggregation buffer:
-              // the window ranks errors per file through a spillable sort, so
-              // only the 20 lexicographically-first survive into
-              // collect_list (when() yields null past the cap; collect_list
-              // skips nulls). A pathological million-error file thus never
-              // materializes its error strings in one executor buffer.
-              val perFile = org.apache.spark.sql.expressions.Window
-                .partitionBy(col(CtbIngest.SRC_FILE)).orderBy(col("error"))
-              errors
-                .withColumn("rn", row_number().over(perFile))
-                .groupBy(col(CtbIngest.SRC_FILE))
-                .agg(count(lit(1)).as("n"),
-                  collect_list(when(col("rn") <= 20, col("error"))).as("sample"))
-                .collect()
-                .map(r => r.getString(0) -> (r.getLong(1), r.getSeq[String](2).sorted.toList: Seq[String]))
-                .toMap
-            }
-          if (anyCommittable && errStats.nonEmpty) sinkLock.synchronized {
-            errors.drop(CtbIngest.SRC_FILE).write.mode("append").parquet(cfg.errorsDir)
-          }
-          val pool = Executors.newFixedThreadPool(math.min(8, files.length))
-          try {
-            files.map { file =>
-              pool.submit(new Runnable { def run(): Unit = {
-                seen.incrementAndGet()
-                val name = new Path(file).getName
-                try {
-                  if (!sinkOk) {
-                    // C2: missing destination table fails the file, no auto-create
-                    fileFailed(spark2, cfg, notifier, name,
-                      s"Destination table '${cfg.sinkDir}' does not exist. " +
-                        "Please ensure the table is created before running.")
-                  } else if (multi.fileFailed.contains(file)) {
-                    fileFailed(spark2, cfg, notifier, name, multi.fileFailed(file))
-                  } else {
-                    // per-file commit section over the persisted parsed batch:
-                    // C3 batched append + accounting stay per file; only the
-                    // physical append holds the lock
-                    val (nErrors, errSample) = errStats.getOrElse(file, (0L, Seq.empty[String]))
-                    val w = Sink.appendBatched(
-                      clean.filter(col(CtbIngest.SRC_FILE) === file).drop(CtbIngest.SRC_FILE),
-                      cfg.sinkDir, cfg.batchSize,
-                      writeBatchOpt = Some((df, _) => sinkLock.synchronized {
-                        df.write.mode("append").parquet(cfg.sinkDir)
-                      }))
-                    if (w.insertedRows > 0) {
-                      // partial success IS success (reference main.py:470-495)
-                      succeeded.incrementAndGet()
-                      if (w.batchErrors.isEmpty && nErrors == 0)
-                        notifier.notifySuccess(name, w.insertedRows)
-                      else
-                        notifier.notifyError(name,
-                          s"Inserted ${w.insertedRows} rows with ${nErrors} row-level " +
-                            s"errors and ${w.batchErrors.size} batch errors:\n" +
-                            (w.batchErrors ++ errSample).mkString("\n"))
-                    } else {
-                      fileFailed(spark2, cfg, notifier, name,
-                        s"No valid rows from '$name' could be inserted into the sink." +
-                          (if (nErrors > 0) "\nRow-level errors:\n" + errSample.mkString("\n") else ""))
-                    }
-                  }
-                } catch {
-                  case e: Exception => // poison file must not kill the run (E1)
-                    try fileFailed(spark2, cfg, notifier, name, e.toString)
-                    catch { case _: Exception => () }
-                }
-              }})
-            }.foreach(_.get()) // per-file try/catch above: get() only joins
-          } finally {
-            pool.shutdown()
-            if (sinkOk) { clean.unpersist(false); errors.unpersist(false) }
-          }
+          seen.addAndGet(files.length.toLong)
+          succeeded.addAndGet(commitBatch(spark2, cfg, notifier, files, parsed)): Unit
         }
       }
       .start()
@@ -251,19 +176,140 @@ object StreamIngest {
     RunStats(seen.get(), succeeded.get())
   }
 
-  /** Failure path: every file-scoped failure converges on error-sink write +
-    * D3 notification (reference §3.3 convergence). The parquet append holds
-    * [[sinkLock]] — failure handlers may run concurrently from the commit
-    * pool.
+  /** What one file of a micro-batch came to. */
+  private sealed trait Outcome
+  private final case class Loaded(rows: Long) extends Outcome
+  private final case class Partial(report: String) extends Outcome
+  private final case class Failed(reason: String) extends Outcome
+
+  /** Commits one parsed micro-batch: the keyed batched append of every
+    * committable file and its accounting, ONE errors append (row errors
+    * plus every whole-file failure), then the notifications in file order.
+    * `parsed` is Left(reason) when the whole batch fails (C2, parse
+    * failure). Returns the number of files that succeeded.
+    */
+  private def commitBatch(
+      spark: SparkSession, cfg: GraftConfig, notifier: Notifier,
+      files: Seq[String], parsed: Either[String, CtbIngest.MultiIngestResult]): Long = {
+    parsed.foreach(_.tagged.persist())
+    val outcomes = try {
+      val (outcomes, rowErrors) = parsed match {
+        case Left(reason) => (files.map(_ -> Failed(reason)), None)
+        case Right(multi) =>
+          val (outcomes, anyRowErrors) = commitFiles(cfg, files, multi)
+          (outcomes, Option.when(anyRowErrors)(multi.errors.select("error")))
+      }
+      appendErrors(spark, cfg, rowErrors,
+        outcomes.collect { case (file, Failed(reason)) => s"${new Path(file).getName}: $reason" })
+      outcomes
+    } finally parsed.foreach(_.tagged.unpersist(false))
+
+    outcomes.foreach { case (file, outcome) =>
+      val name = new Path(file).getName
+      outcome match {
+        case Loaded(rows) => notifier.notifySuccess(name, rows)
+        case Partial(report) => notifier.notifyError(name, report)
+        case Failed(reason) => notifier.notifyError(name, reason)
+      }
+    }
+    outcomes.count(!_._2.isInstanceOf[Failed]).toLong
+  }
+
+  /** Every file's outcome: whole-file failures as parsed, the rest from
+    * one keyed batched append and one row-error aggregation. Also tells
+    * whether any row error exists.
+    */
+  private def commitFiles(
+      cfg: GraftConfig, files: Seq[String],
+      multi: CtbIngest.MultiIngestResult): (Seq[(String, Outcome)], Boolean) = {
+    val committed: Either[String,
+        (Map[String, (Long, Seq[String])], Map[String, Sink.BatchedWriteResult])] =
+      if (files.forall(multi.fileFailed.contains)) Right((Map.empty, Map.empty))
+      else try {
+        val errStats = errorStats(multi.errors)
+        Right((errStats, Sink.appendBatchedByKey(multi.clean, CtbIngest.SRC_FILE,
+          cfg.sinkDir, cfg.batchSize,
+          writeBatchOpt = Some((df, _) => sinkLock.synchronized {
+            df.write.mode("append").parquet(cfg.sinkDir)
+          }))))
+      } catch {
+        // poison data surfacing at commit must not kill the run (E1)
+        case e: Exception => Left(e.toString)
+      }
+    val outcomes = files.map { file =>
+      file -> ((multi.fileFailed.get(file), committed) match {
+        case (Some(reason), _) => Failed(reason)
+        case (None, Left(cause)) => Failed(cause)
+        case (None, Right((errStats, writes))) =>
+          accountFile(new Path(file).getName,
+            writes.getOrElse(file, Sink.BatchedWriteResult(0L, 0, Nil)),
+            errStats.getOrElse(file, (0L, Nil)))
+      })
+    }
+    (outcomes, committed.exists(_._1.nonEmpty))
+  }
+
+  /** ONE append into the error sink: `rowErrors` (an `error` column) and
+    * the whole-file `failures`; nothing when both are empty.
+    */
+  private def appendErrors(
+      spark: SparkSession, cfg: GraftConfig,
+      rowErrors: Option[DataFrame], failures: Seq[String]): Unit = {
+    import spark.implicits._
+    val entries = rowErrors.fold(failures.toDF("error"))(_.unionByName(failures.toDF("error")))
+    if (rowErrors.nonEmpty || failures.nonEmpty)
+      sinkLock.synchronized(entries.write.mode("append").parquet(cfg.errorsDir))
+  }
+
+  /** C3 accounting of one committed file (reference main.py:470-495):
+    * partial success IS success; a file with no row landed fails.
+    */
+  private def accountFile(
+      name: String, w: Sink.BatchedWriteResult, errs: (Long, Seq[String])): Outcome = {
+    val (nErrors, errSample) = errs
+    if (w.insertedRows > 0 && w.batchErrors.isEmpty && nErrors == 0) Loaded(w.insertedRows)
+    else if (w.insertedRows > 0)
+      Partial(s"Inserted ${w.insertedRows} rows with ${nErrors} row-level " +
+        s"errors and ${w.batchErrors.size} batch errors:\n" +
+        (w.batchErrors ++ errSample).mkString("\n"))
+    else Failed(s"No valid rows from '$name' could be inserted into the sink." +
+      (if (nErrors > 0) "\nRow-level errors:\n" + errSample.mkString("\n") else ""))
+  }
+
+  /** Each file's row-error count and notification sample — its 20
+    * lexicographically first errors — in one job without a shuffle: a
+    * partition keeps at most 20 errors per file in a bounded heap (so a
+    * million-error file never holds its strings in one buffer), and the
+    * driver merges the partitions' counts and samples.
+    */
+  private def errorStats(errors: DataFrame): Map[String, (Long, Seq[String])] = {
+    import scala.collection.mutable
+    val cap = 20
+    errors.rdd.mapPartitions { rows =>
+      // per file: error count and a max-heap of its `cap` smallest errors
+      val acc = mutable.Map.empty[String, (Long, mutable.PriorityQueue[String])]
+      rows.foreach { r =>
+        val file = r.getString(0)
+        val (n, top) = acc.getOrElse(file, (0L, mutable.PriorityQueue.empty[String]))
+        top.enqueue(r.getString(1))
+        if (top.size > cap) top.dequeue()
+        acc(file) = (n + 1, top)
+      }
+      acc.iterator.map { case (file, (n, top)) => (file, n, top.toList) }
+    }.collect()
+      .groupBy(_._1)
+      .map { case (file, parts) =>
+        file -> (parts.map(_._2).sum, parts.flatMap(_._3).sorted.take(cap).toSeq)
+      }
+  }
+
+  /** Failure path of the 0-byte files, found after the drain: error-sink
+    * write + D3 notification (reference §3.3 convergence).
     */
   private def fileFailed(
       spark: SparkSession, cfg: GraftConfig, notifier: Notifier,
       name: String, reason: String): Unit = {
-    import spark.implicits._
-    sinkLock.synchronized {
-      Seq(s"$name: $reason").toDF("error")
-        .write.mode("append").parquet(cfg.errorsDir)
-    }
+    appendErrors(spark, cfg, None, Seq(s"$name: $reason"))
     notifier.notifyError(name, reason)
   }
 }

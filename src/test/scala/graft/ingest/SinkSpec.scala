@@ -23,7 +23,7 @@ class SinkSpec extends AnyFunSuite with SparkSpec {
     Sink.init(spark, path, (1 to 0).toDF("v").schema)
     val res = Sink.appendBatched((1 to 10).toDF("v"), path, batchSize = 3)
     assert(res.insertedRows == 10)
-    assert(res.attemptedBatches >= 4) // ceil(10/3) per partition grouping
+    assert(res.attemptedBatches == 4) // ceil(10/3), whatever the partition layout
     assert(res.batchErrors.isEmpty)
     assert(spark.read.parquet(path).count() == 10)
   }
@@ -158,5 +158,36 @@ class SinkSpec extends AnyFunSuite with SparkSpec {
     assert(res.batchErrors.head.contains("injected RPC failure"))
     assert(res.insertedRows == 5) // the surviving batch
     assert(spark.read.parquet(path).count() == 5)
+  }
+
+  test("keyed append: interleaved keys slice exactly per key; a failure stays in its key") {
+    import spark.implicits._
+    val path = tmp("sinkkey")
+    // ONE partition whose rows alternate between the keys: "a" holds the
+    // odd values 1..13 (7 rows), "b" the even ones 2..12 (6 rows)
+    val df = (1 to 13).map(v => (v.toLong, if (v % 2 == 1) "a" else "b")).toDF("v", "k")
+      .coalesce(1)
+    val slices = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
+    val res = Sink.appendBatchedByKey(df, "k", path, batchSize = 3,
+      writeBatchOpt = Some { (slice, i) =>
+        assert(slice.columns.toSeq == Seq("v"), "the key column is not written")
+        val vs = slice.collect().map(_.getLong(0)).toSeq
+        slices += i -> vs
+        if (i == 1 && vs.forall(_ % 2 == 0)) throw new RuntimeException("injected b failure")
+        slice.write.mode("append").parquet(path)
+      })
+    val seen = slices.toSeq
+    // exact slices, in input order within each key, never mixing keys
+    assert(seen.filter(_._2.forall(_ % 2 == 1)) == Seq(
+      0L -> Seq(1L, 3L, 5L), 1L -> Seq(7L, 9L, 11L), 2L -> Seq(13L)))
+    assert(seen.filter(_._2.forall(_ % 2 == 0)) == Seq(
+      0L -> Seq(2L, 4L, 6L), 1L -> Seq(8L, 10L, 12L)))
+    assert(res("a") == Sink.BatchedWriteResult(7, 3, Nil))
+    assert(res("b").insertedRows == 3 && res("b").attemptedBatches == 2)
+    assert(res("b").batchErrors.size == 1 &&
+      res("b").batchErrors.head.startsWith("Batch 2 insertion failed: injected b failure"))
+    // every row outside the failed slice landed exactly once
+    assert(spark.read.parquet(path).as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L, 9L, 11L, 13L))
   }
 }

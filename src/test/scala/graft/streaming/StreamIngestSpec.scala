@@ -41,6 +41,76 @@ class StreamIngestSpec extends AnyFunSuite with SparkSpec {
       batchSize = 2)
   }
 
+  /** One drain cycle; it must leave no persisted RDD behind. (The session
+    * is shared, so RDDs an earlier suite left persisted are not its own.)
+    */
+  private def runOnce(cfg: GraftConfig, notifier: LogNotifier): StreamIngest.RunStats = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val stats = StreamIngest.runOnce(spark, cfg, notifier)
+    val left = spark.sparkContext.getPersistentRDDs -- before
+    assert(left.isEmpty, s"runOnce left persisted RDDs: ${left.values.mkString(", ")}")
+    stats
+  }
+
+  /** Jobs `body` launches, as (non-write jobs, write jobs). A write job is
+    * one whose SQL execution plans a parquet insert. The file source's own
+    * parallel listing of a trigger's files (one job once a trigger holds
+    * more than `spark.sql.sources.parallelPartitionDiscovery.threshold`
+    * files, before the batch reaches `foreachBatch`) is left out.
+    */
+  private def countJobs(body: => Unit): (Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.SQLExecution
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val writeExecs = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    val writes = new java.util.concurrent.atomic.AtomicInteger
+    val others = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart
+            if s.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") =>
+          writeExecs.add(s.executionId): Unit
+        case _ =>
+      }
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val exec = Option(j.properties).flatMap(p =>
+          Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY))).map(_.toLong)
+        val listing = Option(j.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description")))
+          .exists(_.startsWith("Listing leaf files and directories"))
+        if (exec.exists(writeExecs.contains)) writes.incrementAndGet(): Unit
+        else if (!listing) others.incrementAndGet(): Unit
+      }
+    }
+    org.apache.spark.GraftTestHooks.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try body
+    finally {
+      org.apache.spark.GraftTestHooks.drainListenerBus(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    (others.get, writes.get)
+  }
+
+  /** The 3-file trigger: 1 + 2 + 2 clean rows, one row error in file three. */
+  private def writeThreeFiles(cfg: GraftConfig): Unit = {
+    writeFile(cfg, "CTB_one.tsv",
+      rawHeaders.mkString("\t") +: Seq(validRow("A1")).map(_.mkString("\t")))
+    writeFile(cfg, "CTB_two.tsv",
+      rawHeaders.mkString("\t") +: Seq(validRow("B1"), validRow("B2")).map(_.mkString("\t")))
+    writeFile(cfg, "CTB_three.tsv",
+      rawHeaders.mkString("\t") +: Seq(
+        validRow("C1"), validRow("C2"), validRow("C3").updated(7, "junk")).map(_.mkString("\t")))
+  }
+
+  /** The 50-file trigger: file i holds 1 + i % 3 clean rows. */
+  private def writeFiftyFiles(cfg: GraftConfig): Unit =
+    (1 to 50).foreach { i =>
+      writeFile(cfg, f"CTB_f$i%02d.tsv",
+        rawHeaders.mkString("\t") +:
+          (1 to (1 + i % 3)).map(j => validRow(s"F$i-$j").mkString("\t")))
+    }
+
   private def writeFile(cfg: GraftConfig, name: String, lines: Seq[String]): Unit =
     Files.write(Paths.get(cfg.inputDir, name),
       lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
@@ -56,7 +126,7 @@ class StreamIngestSpec extends AnyFunSuite with SparkSpec {
       Seq((rawHeaders :+ "Mystery").mkString("\t"), (validRow("X") :+ "x").mkString("\t")))
     writeFile(cfg, "ignored.txt", Seq("not matching the glob")) // A1 pushdown
 
-    val stats = StreamIngest.runOnce(spark, cfg, notifier)
+    val stats = runOnce(cfg, notifier)
     assert(stats.filesSeen == 2)       // glob filtered the third file out
     assert(stats.filesSucceeded == 1)
     assert(spark.read.parquet(cfg.sinkDir).count() == 3)
@@ -70,7 +140,7 @@ class StreamIngestSpec extends AnyFunSuite with SparkSpec {
 
     // second run: checkpoint = ack; nothing new -> no-op + D4 no-data
     val notifier2 = new LogNotifier()
-    val stats2 = StreamIngest.runOnce(spark, cfg, notifier2)
+    val stats2 = runOnce(cfg, notifier2)
     assert(stats2.filesSeen == 0)
     assert(spark.read.parquet(cfg.sinkDir).count() == 3) // unchanged
     assert(notifier2.sent.map(_.subject).forall(_.startsWith("INFO: No CTB Documents")))
@@ -86,7 +156,7 @@ class StreamIngestSpec extends AnyFunSuite with SparkSpec {
         validRow("B").updated(7, "not-a-number"),
         validRow("C")).map(_.mkString("\t")))
 
-    val stats = StreamIngest.runOnce(spark, cfg, notifier)
+    val stats = runOnce(cfg, notifier)
     assert(stats.filesSucceeded == 1) // partial success IS success (main.py:470-495)
     assert(spark.read.parquet(cfg.sinkDir).count() == 2)
     val err = notifier.sent.find(_.subject.startsWith("ERROR")).get
@@ -98,15 +168,9 @@ class StreamIngestSpec extends AnyFunSuite with SparkSpec {
     val cfg = mkCfg()
     val notifier = new LogNotifier()
     Sink.init(spark, cfg.sinkDir, graft.schema.CtbSchema.sparkSchema)
-    writeFile(cfg, "CTB_one.tsv",
-      rawHeaders.mkString("\t") +: Seq(validRow("A1")).map(_.mkString("\t")))
-    writeFile(cfg, "CTB_two.tsv",
-      rawHeaders.mkString("\t") +: Seq(validRow("B1"), validRow("B2")).map(_.mkString("\t")))
-    writeFile(cfg, "CTB_three.tsv",
-      rawHeaders.mkString("\t") +: Seq(
-        validRow("C1"), validRow("C2"), validRow("C3").updated(7, "junk")).map(_.mkString("\t")))
+    writeThreeFiles(cfg)
 
-    val stats = StreamIngest.runOnce(spark, cfg, notifier)
+    val stats = runOnce(cfg, notifier)
     assert(stats.filesSeen == 3)
     assert(stats.filesSucceeded == 3)
     assert(spark.read.parquet(cfg.sinkDir).count() == 5) // 1 + 2 + 2
@@ -130,7 +194,7 @@ class StreamIngestSpec extends AnyFunSuite with SparkSpec {
       Seq((rawHeaders :+ "Alien").mkString("\t"), (validRow("A") :+ "x").mkString("\t")))
     writeFile(cfg, "CTB_bad2.tsv", Seq("", "   ")) // blank lines only -> File is empty
 
-    val stats = StreamIngest.runOnce(spark, cfg, notifier)
+    val stats = runOnce(cfg, notifier)
     assert(stats.filesSeen == 2)
     assert(stats.filesSucceeded == 0)
     assert(spark.read.parquet(cfg.sinkDir).count() == 0) // nothing landed
@@ -154,7 +218,7 @@ class StreamIngestSpec extends AnyFunSuite with SparkSpec {
     writeFile(cfg, "CTB_good.tsv",
       rawHeaders.mkString("\t") +: Seq(validRow("A")).map(_.mkString("\t")))
 
-    val stats = StreamIngest.runOnce(spark, cfg, notifier)
+    val stats = runOnce(cfg, notifier)
     assert(stats.filesSeen == 2)
     assert(stats.filesSucceeded == 1)
     assert(notifier.sent.exists(s =>
@@ -169,7 +233,7 @@ class StreamIngestSpec extends AnyFunSuite with SparkSpec {
     assert(!Files.exists(Paths.get(cfg.inputDir, "CTB_zero.tsv")))
     assert(Files.exists(Paths.get(cfg.archiveDir, "CTB_zero.tsv")))
     val errBefore = notifier.sent.count(_.subject.startsWith("ERROR"))
-    val stats2 = StreamIngest.runOnce(spark, cfg, notifier)
+    val stats2 = runOnce(cfg, notifier)
     assert(stats2.filesSeen == 0)
     assert(notifier.sent.count(_.subject.startsWith("ERROR")) == errBefore)
   }
@@ -192,7 +256,7 @@ class StreamIngestSpec extends AnyFunSuite with SparkSpec {
         rawHeaders.mkString("\t") +: Seq(validRow(s"Z$i").mkString("\t")))
     }
 
-    val stats = StreamIngest.runOnce(spark, cfg, notifier)
+    val stats = runOnce(cfg, notifier)
     assert(stats.filesSeen == 66)
     assert(stats.filesSucceeded == 65)
     val errs = spark.read.parquet(cfg.errorsDir).collect().map(_.getString(0))
@@ -203,24 +267,20 @@ class StreamIngestSpec extends AnyFunSuite with SparkSpec {
     // exactly-once across runs: the handled marker survives wherever the
     // file ended up, so a second drain does not re-fail it
     val errBefore = notifier.sent.count(_.subject.startsWith("ERROR"))
-    val stats2 = StreamIngest.runOnce(spark, cfg, notifier)
+    val stats2 = runOnce(cfg, notifier)
     assert(stats2.filesSeen == 0)
     assert(notifier.sent.count(_.subject.startsWith("ERROR")) == errBefore)
   }
 
   test("a 50-file trigger commits every file with accounting intact") {
-    // exercises the bounded-pool commit path: per-file C3 accounting and
-    // notifications must be exactly per file even with concurrent commits
+    // per-file C3 accounting and notifications must be exactly per file
+    // when one keyed append commits every file of the trigger
     val cfg = mkCfg()
     val notifier = new LogNotifier()
     Sink.init(spark, cfg.sinkDir, graft.schema.CtbSchema.sparkSchema)
-    (1 to 50).foreach { i =>
-      writeFile(cfg, f"CTB_f$i%02d.tsv",
-        rawHeaders.mkString("\t") +:
-          (1 to (1 + i % 3)).map(j => validRow(s"F$i-$j").mkString("\t")))
-    }
+    writeFiftyFiles(cfg)
     val t0 = System.nanoTime()
-    val stats = StreamIngest.runOnce(spark, cfg, notifier)
+    val stats = runOnce(cfg, notifier)
     info(f"50-file drain took ${(System.nanoTime() - t0) / 1e9}%.1f s")
     assert(stats.filesSeen == 50)
     assert(stats.filesSucceeded == 50)
@@ -236,6 +296,25 @@ class StreamIngestSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("a micro-batch's non-write jobs do not grow with its file count") {
+    // the 3-file and the 50-file trigger each drain as one micro-batch;
+    // only the parquet appends (one per sink slice, one for errors) may
+    // scale with the files
+    def drainJobs(write: GraftConfig => Unit): (Int, Int) = {
+      val cfg = mkCfg()
+      Sink.init(spark, cfg.sinkDir, graft.schema.CtbSchema.sparkSchema)
+      write(cfg)
+      countJobs(runOnce(cfg, new LogNotifier()): Unit)
+    }
+    val (three, threeWrites) = drainJobs(writeThreeFiles)
+    val (fifty, fiftyWrites) = drainJobs(writeFiftyFiles)
+    info(s"non-write jobs: $three (3 files), $fifty (50 files); " +
+      s"writes: $threeWrites, $fiftyWrites")
+    assert(threeWrites == 4)  // 1 + 1 + 1 sink slices of <= 2 rows, 1 errors append
+    assert(fiftyWrites == 67) // sum over files of ceil((1 + i % 3) / 2), no errors
+    assert(three == fifty)
+  }
+
   test("C2: missing destination table fails the file without auto-creating it") {
     val cfg = mkCfg()
     val notifier = new LogNotifier()
@@ -243,7 +322,7 @@ class StreamIngestSpec extends AnyFunSuite with SparkSpec {
     writeFile(cfg, "CTB_x.tsv",
       rawHeaders.mkString("\t") +: Seq(validRow("A")).map(_.mkString("\t")))
 
-    val stats = StreamIngest.runOnce(spark, cfg, notifier)
+    val stats = runOnce(cfg, notifier)
     assert(stats.filesSucceeded == 0)
     assert(!Sink.tableExists(spark, cfg.sinkDir)) // still not created
     val subjects = notifier.sent.map(_.subject)
