@@ -270,7 +270,10 @@ object GraftFunctions {
       (cs: Seq[Expression]) => JsonOrderExtract(cs(0))),
     (FunctionIdentifier("graft_xml_order"),
       info("graft_xml_order", "graft_xml_order(xml) - one-pass struct<id,st,t> extraction with XML entity decoding"),
-      (cs: Seq[Expression]) => XmlOrderExtract(cs(0))))
+      (cs: Seq[Expression]) => XmlOrderExtract(cs(0))),
+    (FunctionIdentifier("graft_ctb_tag"),
+      info("graft_ctb_tag", "graft_ctb_tag(line, lineno, layout) - the CTB row rules in one pass: split the TSV line on tabs, trim, empty -> NULL, parse the layout's (constant, comma-separated canonical columns) INTEGER and DATE fields; struct of the typed columns plus _errs, the row's error strings"),
+      (cs: Seq[Expression]) => CtbTag(cs(0), cs(1), cs(2))))
 
   def register(spark: SparkSession): Unit = all.foreach { case (id, inf, builder) =>
     spark.sessionState.functionRegistry.registerFunction(id, inf, builder)

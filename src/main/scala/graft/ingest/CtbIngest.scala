@@ -2,7 +2,7 @@ package graft.ingest
 
 import graft.schema.CtbSchema
 import graft.schema.CtbSchema._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -26,7 +26,9 @@ case class IngestResult(
 /** Distributed re-expression of the reference's TSV ingest loop
   * (reference main.py:287-414). The reference materializes the whole file in
   * driver memory and loops row-at-a-time; here the file is a line-delimited
-  * text scan and every per-row rule is a Catalyst expression, so the same
+  * text scan, line numbering and the file-level rules are Catalyst
+  * expressions, and the per-row rules (B6-B13) are one native expression
+  * ([[graft.expressions.CtbTag]]) called once per row, so the same
   * semantics run partition-parallel over arbitrarily large files.
   *
   * Semantics matched 1:1 (SURVEY §2-A B1-B13):
@@ -35,7 +37,7 @@ case class IngestResult(
   *   B4  header -> canonical rename
   *   B5  unknown header                  -> whole file Failed
   *   B6  row width != header width       -> row skipped + error recorded
-  *   B7  every field trimmed
+  *   B7  every field trimmed (Java's ASCII whitespace, see [[tagRows]])
   *   B8  empty string -> NULL (before casting)
   *   B9  INTEGER: strip "," then cast; failure -> error + row flagged
   *   B10 DATE: strict yyyy-MM-dd; failure -> error + row flagged
@@ -45,8 +47,8 @@ case class IngestResult(
   */
 object CtbIngest {
 
-  private val LINE = "_line"
-  private val LINENO = "_lineno"
+  private[ingest] val LINE = "_line"
+  private[ingest] val LINENO = "_lineno"
 
   /** Ingest a TSV file from `path` (local or any Hadoop FS). */
   def ingestFile(spark: SparkSession, path: String): IngestResult =
@@ -56,11 +58,13 @@ object CtbIngest {
     * separately so tests and the streaming path can reuse it.
     */
   def ingestLines(spark: SparkSession, raw: DataFrame): IngestResult = {
-    // "blank" must match the reference's str.strip(): ALL whitespace (tabs
-    // included), not Spark trim's spaces-only — a trailing "\t \t " line
-    // must vanish in the file-level strip, and a leading one must not be
-    // mistaken for the header. rlike("\\S") is exactly "has any
-    // non-whitespace char".
+    // "blank" is all-whitespace (tabs included), not Spark trim's
+    // spaces-only — a trailing "\t \t " line must vanish in the file-level
+    // strip, and a leading one must not be mistaken for the header.
+    // rlike("\\S") is "has a char outside Java's ASCII whitespace" (space,
+    // tab, LF, VT, FF, CR), the field trim's set: narrower than the
+    // reference's str.strip(), so a line of only U+00A0 or U+001C is not
+    // blank here.
     val nonblank = col("value").rlike("\\S")
     val ids = raw.select(col("value"),
       spark_partition_id().as("_pid"), monotonically_increasing_id().as("_mid"),
@@ -145,68 +149,45 @@ object CtbIngest {
   }
 
   /** Column of a tagged frame holding the row's error strings. */
-  private val ERRS = "_errs"
+  private val ERRS = graft.expressions.CtbTag.ERRS
 
   /** B6-B13 row rules over numbered lines, as ONE tagged frame: `keyCols`
     * (e.g. the source-file column in the multi-file path), the typed
     * canonical columns, and `_errs` — the row's error strings, empty iff
     * the row survives. Clean rows and error rows are two filters over this
     * one plan ([[cleanRows]], [[errorRows]]), so a caller that persists it
-    * parses the lines once for both.
+    * parses the lines once for both. Unpersisted, each filter is pushed
+    * below the kernel's projection and the kernel runs twice per row.
+    *
+    * The rules are one native expression, [[graft.expressions.CtbTag]]
+    * (`graft_ctb_tag`), called once per row; a second projection unpacks
+    * its struct. It holds the per-field rules:
+    *   - B6: wrong width -> the row's only error, with line number +
+    *     content; its fields stay null, so no cast error can join it.
+    *   - B7+B8: trim each field, empty -> NULL. The trim strips Java's
+    *     ASCII whitespace (space, tab, LF, VT, FF, CR; the
+    *     `regexp_replace(f, "^\\s+|\\s+$", "")` rule), not Spark trim's
+    *     spaces-only: a CRLF file leaves "\r" on every row's last field,
+    *     which space-trim would feed into the date/int casts and silently
+    *     drop every row (B12). It is narrower than Python's str.strip(),
+    *     which also strips U+001C-U+001F, U+0085, U+00A0 and the other
+    *     Unicode spaces; those are kept here.
+    *   - B9/B10: INTEGER strips "," then parses as the TRY cast does;
+    *     DATE is strict yyyy-MM-dd as `try_to_date` parses it.
+    *   - B13: one error per failing field; B12: a row with any error is
+    *     dropped from the clean rows (not inserted null-padded).
     */
-  private def tagRows(
+  private[ingest] def tagRows(
       numbered: DataFrame,
       canonical: Seq[String],
       keyCols: Seq[String]): DataFrame = {
-    val ncols = canonical.length
-    val parts = split(col(LINE), "\t", -1)
-    val widthOk = size(parts) === ncols
+    graft.expressions.GraftFunctions.register(numbered.sparkSession)
     val keys = keyCols.map(col)
-    val widthErr = "_width_err"
-
-    // B6: wrong width -> the row's only error, with line number + content;
-    // its fields stay null, so no cast error can join it.
-    // B7+B8: trim each field, empty -> NULL. Trim is WHITESPACE-exact
-    // (python str.strip()), not Spark trim's spaces-only: a CRLF file
-    // leaves "\r" on every row's last field, which space-trim would feed
-    // into the date/int casts and silently drop every row (B12).
-    def wsTrim(c: Column): Column = regexp_replace(c, "^\\s+|\\s+$", "")
-    val fields = numbered.select(keys ++ Seq(col(LINENO),
-      when(!widthOk, concat(
-        lit("Row "), col(LINENO),
-        lit(s" has incorrect number of columns. Expected $ncols, got "), size(parts),
-        lit(". Row content: "), col(LINE))).as(widthErr)) ++
-      canonical.zipWithIndex.map { case (name, i) =>
-        when(widthOk, nullif(wsTrim(parts.getItem(i)), lit(""))).as(name)
-      }: _*)
-
-    // B9/B10: typed casts. For each typed column build (value, ok) pairs.
-    // try_* keeps this ANSI-safe (Spark 4 defaults to ANSI mode).
-    def castCol(name: String): (Column, Column, Column) = columnTypes(name) match {
-      case CtbString =>
-        (col(name), lit(true), lit(null).cast(StringType))
-      case CtbInt =>
-        val v = regexp_replace(col(name), ",", "").try_cast("long")
-        val ok = col(name).isNull || v.isNotNull
-        val err = concat(lit(s"Row "), col(LINENO),
-          lit(s": Could not convert '"), col(name), lit(s"' to INTEGER for column '$name'."))
-        (v, ok, err)
-      case CtbDate =>
-        // Strict %Y-%m-%d: try_to_date with explicit pattern (Spark's
-        // CORRECTED parser policy rejects out-of-range components).
-        val v = try_to_date(col(name), "yyyy-MM-dd")
-        val ok = col(name).isNull || v.isNotNull
-        val err = concat(lit(s"Row "), col(LINENO),
-          lit(s": Could not parse date '"), col(name), lit(s"' for column '$name' (expected yyyy-MM-dd)."))
-        (v, ok, err)
-    }
-    val casts = canonical.map(castCol)
-
-    // B13: one error per failing field; B12: a row with any error is
-    // dropped from the clean rows (not inserted null-padded).
-    val castErrs = array_compact(array(casts.map { case (_, ok, err) => when(!ok, err) }: _*))
-    fields.select(keys ++ canonical.zip(casts).map { case (n, (v, _, _)) => v.as(n) } :+
-      when(col(widthErr).isNotNull, array(col(widthErr))).otherwise(castErrs).as(ERRS): _*)
+    val tag = "_tag"
+    numbered
+      .select(keys :+ call_function("graft_ctb_tag",
+        col(LINE), col(LINENO), lit(canonical.mkString(","))).as(tag): _*)
+      .select(keys ++ (canonical :+ ERRS).map(c => col(tag).getField(c).as(c)): _*)
   }
 
   /** The rows of a tagged frame that survived every rule, without `_errs`. */
@@ -318,11 +299,13 @@ object CtbIngest {
     * directly).
     */
   def ingestManyLines(spark: SparkSession, raw: DataFrame): MultiIngestResult = {
-    // "blank" must match the reference's str.strip(): ALL whitespace (tabs
-    // included), not Spark trim's spaces-only — a trailing "\t \t " line
-    // must vanish in the file-level strip, and a leading one must not be
-    // mistaken for the header. rlike("\\S") is exactly "has any
-    // non-whitespace char".
+    // "blank" is all-whitespace (tabs included), not Spark trim's
+    // spaces-only — a trailing "\t \t " line must vanish in the file-level
+    // strip, and a leading one must not be mistaken for the header.
+    // rlike("\\S") is "has a char outside Java's ASCII whitespace" (space,
+    // tab, LF, VT, FF, CR), the field trim's set: narrower than the
+    // reference's str.strip(), so a line of only U+00A0 or U+001C is not
+    // blank here.
     val nonblank = col("value").rlike("\\S")
     val ids = raw.select(col("value"),
       spark_partition_id().as("_pid"), monotonically_increasing_id().as("_mid"),

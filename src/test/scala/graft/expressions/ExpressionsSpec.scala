@@ -137,4 +137,30 @@ class ExpressionsSpec extends AnyFunSuite with SparkSpec {
     val n = ArrayAgreeI64(mk(Seq(2L, 3L, 4L)), mk(Seq(2L, 9L, 4L))).eval(InternalRow.empty)
     assert(n == 2L)
   }
+
+  test("graft_ctb_tag resolves through the registry and tags one row") {
+    val r = spark.range(1).selectExpr(
+      "graft_ctb_tag(' ORG1 \t1,234\t2024-01-02\r', 2L, 'ORG_CODE,DEMAND_QTY,DEMAND_DUE_DATE') AS t")
+      .selectExpr("t.ORG_CODE", "t.DEMAND_QTY", "CAST(t.DEMAND_DUE_DATE AS STRING)", "t._errs")
+      .collect().head
+    assert(r.getString(0) == "ORG1" && r.getLong(1) == 1234L && r.getString(2) == "2024-01-02")
+    assert(r.getSeq[String](3).isEmpty)
+    val bad = spark.sql(
+      "SELECT graft_ctb_tag('x\t12.5', 7L, 'ORG_CODE,DEMAND_QTY')._errs").collect().head
+    assert(bad.getSeq[String](0) ==
+      Seq("Row 7: Could not convert '12.5' to INTEGER for column 'DEMAND_QTY'."))
+  }
+
+  test("graft_ctb_tag rejects a non-constant or malformed layout at analysis") {
+    for ((layout, msg) <- Seq(
+        ("concat('ORG_', 'CODE', CAST(id AS STRING))", "constant layout"),
+        ("'ORG_CODE,NOPE'", "unknown columns: NOPE"),
+        ("'ORG_CODE,ORG_CODE'", "repeats a column: ORG_CODE"),
+        ("''", "at least one column"))) {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        spark.range(1).selectExpr(s"graft_ctb_tag('a', 2L, $layout)")
+      }
+      assert(e.getMessage.contains(msg), e.getMessage)
+    }
+  }
 }

@@ -47,7 +47,10 @@ object CtbIngestProps extends Properties("CtbIngest") {
   private def commify(n: Long): String =
     n.toString.reverse.grouped(3).mkString(",").reverse
 
-  private val genPad = Gen.oneOf("", " ", "  ")
+  // "\u000B" and "\f" are whitespace to both the engine's trim (Java's
+  // ASCII \s) and the model's String.trim, and are neither a tab nor a
+  // line delimiter, so they exercise the whitespace-exact field trim
+  private val genPad = Gen.oneOf("", " ", "  ", "\u000B", "\f")
   private val genOrg = Gen.alphaNumStr.map(_.take(8))
   private val genQty = Gen.oneOf(
     Gen.const(""),
