@@ -106,7 +106,7 @@ object MultimodalOps {
     */
   def envelopesFromDocuments(spark: SparkSession, sfDir: String): Dataset[MediaEnvelope] = {
     import spark.implicits._
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    Tables.t(spark, sfDir, "documents")
       .select(col("doc_id").as("media_id"),
         when(col("doc_id") % 3 === 0, "image")
           .when(col("doc_id") % 3 === 1, "audio").otherwise("video").as("kind"),

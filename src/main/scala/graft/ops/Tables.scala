@@ -1,14 +1,30 @@
 package graft.ops
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 
 /** Table access for the engine's query surface.
   *
   * Each query receives `(SparkSession, sfDir)` and must read only from that
-  * directory (driver contract, SparkEntry). Scans are plain parquet reads so
-  * Catalyst's pushdown/pruning applies; at cluster scale the same call sites
-  * would point at partitioned table roots instead of single files.
+  * directory (driver contract, SparkEntry). A table is ONE parquet file,
+  * `<sfDir>/<name>.parquet`; a directory at that path is an error naming
+  * the path. Scans are plain parquet reads so Catalyst's pushdown/pruning
+  * applies.
+  *
+  * The schema comes from the file's footer, read on the driver and
+  * converted by Spark's own `ParquetFileFormat.readSchemaFromFooter` with a
+  * converter built from the session's SQL conf (so `nanosAsLong`,
+  * `inferTimestampNTZ`, `binaryAsString` and `int96AsTimestamp` apply
+  * exactly as in Spark's inference), then handed to the reader. Spark's
+  * own inference runs that same routine inside a one-task job; reading the
+  * footer here takes that job off every table read. Nothing is kept
+  * between calls: a local footer read costs about a millisecond, and a
+  * cache would have to track file changes for no measurable gain.
   */
 object Tables {
   /** A query function as declared in SparkEntry.queries. */
@@ -30,21 +46,33 @@ object Tables {
       // precision — `/` would route through double and corrupt epoch-nanos,
       // ~1.7e18 > 2^53); when already a timestamp, pass through untouched.
       // All entry points still set nanosAsLong=true at session build so the
-      // nanos variant can't throw at scan time; setting it here as a side
-      // effect would leak session-global state and make query construction
-      // order load-bearing.
-      val raw = spark.read.parquet(s"$sfDir/events.parquet")
+      // nanos variant can't throw at construction; setting it here as a
+      // side effect would leak session-global state and make query
+      // construction order load-bearing.
+      val raw = read(spark, s"$sfDir/events.parquet")
       raw.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
+        case LongType =>
           raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        case org.apache.spark.sql.types.TimestampNTZType =>
+        case TimestampNTZType =>
           // normalize to TimestampType (LTZ): every session here pins UTC,
           // so the cast is value-identical to DuckDB's naive reading, and
           // downstream query code sees ONE timestamp type either way
           raw.withColumn("ts", col("ts").cast("timestamp"))
         case _ => raw // already TimestampType
       }
-    } else spark.read.parquet(s"$sfDir/$name.parquet")
+    } else read(spark, s"$sfDir/$name.parquet")
+  }
+
+  /** One parquet file read with its footer schema, resolved on the driver. */
+  private def read(spark: SparkSession, path: String): DataFrame = {
+    val file = new Path(path)
+    val conf = spark.sessionState.newHadoopConf()
+    val status = file.getFileSystem(conf).getFileStatus(file)
+    require(status.isFile, s"table $path is a directory; a table is one parquet file")
+    val footer = ParquetFileReader.readFooter(conf, status, SKIP_ROW_GROUPS)
+    val schema = ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file, footer), new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    spark.read.schema(schema).parquet(path)
   }
 
   /** A pack couples each Spark query with its DuckDB oracle SQL so the two

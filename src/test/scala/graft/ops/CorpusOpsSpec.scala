@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.ops.TableFiles.TableWriter
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -115,7 +116,7 @@ class CorpusOpsSpec extends AnyFunSuite with SparkSpec {
     val doc2 = (0 until 66000).map(i => s"b$i").mkString(" ") + " " + shared
     val dir = java.nio.file.Files.createTempDirectory("winnow-clamp").toString
     Seq((1L, doc1), (2L, doc2)).toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      .writeTable(dir, "documents")
     val out = CorpusOps.queries("dedup_winnowing")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(out.exists { case (a, b, n) => a == 1L && b == 2L && n >= 3L },

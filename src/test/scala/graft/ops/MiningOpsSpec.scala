@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.ops.TableFiles.TableWriter
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantics pins for the mining pack on crafted fixtures (the DuckDB oracle
@@ -15,7 +16,7 @@ class MiningOpsSpec extends AnyFunSuite with SparkSpec {
   private def writeDocs(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("mining").toString
-    rows.toDF("doc_id", "text").write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    rows.toDF("doc_id", "text").writeTable(dir, "documents")
     dir
   }
 
@@ -23,7 +24,7 @@ class MiningOpsSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("mining").toString
     rows.toDF("o_orderkey", "o_orderpriority", "o_totalprice", "o_orderdate")
-      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+      .writeTable(dir, "orders")
     dir
   }
 
@@ -82,7 +83,7 @@ class MiningOpsSpec extends AnyFunSuite with SparkSpec {
         (4L, 40L * 1000000000L, 1L, "error", 1.0), // rn=4 -> excluded
         (5L, 10L * 1000000000L, 2L, "view", 1.0))  // user 2: only 1 event -> excluded
       .toDF("event_id", "ts", "user_id", "event_type", "value")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      .writeTable(dir, "events")
     val got = MiningOps.queries("events_paths")(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1)))
     assert(got.toSeq == Seq(("view>click>purchase", 1L)))
@@ -125,7 +126,7 @@ class MiningOpsSpec extends AnyFunSuite with SparkSpec {
         (5L, 4000L * G, 2L, "click", 0.0),  // other user -> excluded
         (11L, 9000L * G, 2L, "purchase", 5.0)) // zero-touch purchase -> absent
       .toDF("event_id", "ts", "user_id", "event_type", "value")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      .writeTable(dir, "events")
     val got = MiningOps.queries("events_attribution")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3), r.getLong(4)))
     // 2 touches share 100 cents -> 50 each

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.ops.TableFiles.TableWriter
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Brute-force ground-truth checks for the round-7 sequence/corpus ops on
@@ -17,7 +18,7 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("pipeops").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      .writeTable(dir, "events")
     dir
   }
 
@@ -104,7 +105,7 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpec {
       (i.toLong, s"$common unique$i tail$i words$i here$i", "en", "src", 40L)) :+
       (6L, "totally different content entirely here now", "en", "src", 40L)
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      .writeTable(dir, "documents")
     val got = PipelineOps.queries("text_gram_df")(spark, dir)
       .collect().map(r => r.getLong(0) -> (r.getLong(2), r.getLong(3))).toMap
     (0 until 6).foreach { i =>

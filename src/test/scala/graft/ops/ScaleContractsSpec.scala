@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.ops.TableFiles.TableWriter
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -426,7 +427,7 @@ class ScaleContractsSpec extends AnyFunSuite with SparkSpec {
       (id.toLong, text, "en", "s" + (id % 3), text.length.toLong)
     }
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
-      .coalesce(1).write.parquet(s"$dir/documents.parquet")
+      .writeTable(dir, "documents")
     dir
   }
 
@@ -732,7 +733,7 @@ class ScaleContractsSpec extends AnyFunSuite with SparkSpec {
         lit(hotText.length).as("n_chars"))
     val aligned = hot.select(src.schema.fields.toSeq
       .map(f => col(f.name).cast(f.dataType)): _*)
-    src.union(aligned).coalesce(1).write.parquet(s"$dir/documents.parquet")
+    src.union(aligned).writeTable(dir, "documents")
     dir
   }
 
@@ -747,7 +748,7 @@ class ScaleContractsSpec extends AnyFunSuite with SparkSpec {
     (0 until 5).map(k => src.withColumn("doc_id",
         col("doc_id") + lit(k.toLong * 100000L)))
       .reduce(_.union(_))
-      .coalesce(1).write.parquet(s"$dir/documents.parquet")
+      .writeTable(dir, "documents")
     dir
   }
 
@@ -763,7 +764,7 @@ class ScaleContractsSpec extends AnyFunSuite with SparkSpec {
       .select((col("id") + HotBase).as("vec_id"), col("embedding"), col("label"))
     val aligned = hot.select(src.schema.fields.toSeq
       .map(f => col(f.name).cast(f.dataType)): _*)
-    src.union(aligned).coalesce(1).write.parquet(s"$dir/embeddings.parquet")
+    src.union(aligned).writeTable(dir, "embeddings")
     dir
   }
 
@@ -781,7 +782,7 @@ class ScaleContractsSpec extends AnyFunSuite with SparkSpec {
       ((f * 1000 + i).toLong, text, "en", "s0", text.length.toLong)
     }
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
-      .coalesce(1).write.parquet(s"$dir/documents.parquet")
+      .writeTable(dir, "documents")
     dir
   }
 
@@ -801,7 +802,7 @@ class ScaleContractsSpec extends AnyFunSuite with SparkSpec {
     val hot = rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     val aligned = hot.select(src.schema.fields.toSeq
       .map(f => col(f.name).cast(f.dataType)): _*)
-    src.union(aligned).coalesce(1).write.parquet(s"$dir/events.parquet")
+    src.union(aligned).writeTable(dir, "events")
     dir
   }
 }

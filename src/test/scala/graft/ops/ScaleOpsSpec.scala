@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.ops.TableFiles.TableWriter
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -108,21 +109,28 @@ class ScaleOpsSpec extends AnyFunSuite with SparkSpec {
     val rows = (0L until 500L).flatMap { u =>
       (0 to (u % 13).toInt).map(k => (u * 100 + k, (u * 86400L + k) * 1000000000L, u, "click", 1.0))
     }
-    def runAt(parts: Int): (Long, Long, Long, Seq[Long]) = {
-      val dir = java.nio.file.Files.createTempDirectory("ams").toString
-      spark.sparkContext.parallelize(rows, parts)
-        .toDF("event_id", "ts", "user_id", "event_type", "value")
-        .write.mode("overwrite").parquet(s"$dir/events.parquet")
-      val r = ScaleOps.queries("agg_ams_f2")(spark, dir).collect()(0)
-      (r.getLong(0), r.getLong(1), r.getLong(2), (3 until 19).map(r.getLong))
+    // one table file of small row groups: the scan's split size then sets
+    // how many input partitions the sketch is merged over
+    val dir = java.nio.file.Files.createTempDirectory("ams").toString
+    rows.toDF("event_id", "ts", "user_id", "event_type", "value")
+      .writeTable(dir, "events", Map("parquet.block.size" -> "4096"))
+    def runAt(splitBytes: Long): (Int, Long, Long, Long, Seq[Long]) = {
+      // sibling session: the split size must not leak into the shared one
+      val ns = spark.newSession()
+      ns.conf.set("spark.sql.files.maxPartitionBytes", splitBytes)
+      val parts = Tables.t(ns, dir, "events").rdd.getNumPartitions
+      val r = ScaleOps.queries("agg_ams_f2")(ns, dir).collect()(0)
+      (parts, r.getLong(0), r.getLong(1), r.getLong(2), (3 until 19).map(r.getLong))
     }
-    val (n, exact, est, cs) = runAt(3)
+    val (parts, n, exact, est, cs) = runAt(128L << 20)
+    assert(parts == 1, s"$parts scan partitions")
     val wantExact = (0L until 500L).map(u => { val c = u % 13 + 1; c * c }).sum
     assert(n == rows.size.toLong && exact == wantExact)
     // unbiased mean-of-squares: generous 2.5x band (stderr ~ 0.35 F2)
     assert(est > exact / 3 && est < exact * 3, s"est $est vs exact $exact")
     // LINEAR sketch: identical counters under any partitioning
-    val (_, _, est7, cs7) = runAt(7)
-    assert(cs == cs7 && est == est7, "merge order must not move a linear sketch")
+    val (partsN, _, _, estN, csN) = runAt(4096)
+    assert(partsN >= 3, s"$partsN scan partitions")
+    assert(cs == csN && est == estN, "merge order must not move a linear sketch")
   }
 }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.ops.TableFiles.TableWriter
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantics pins for the temporal/CDC pack on crafted fixtures (the DuckDB
@@ -16,7 +17,7 @@ class TemporalOpsSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("temporal").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      .writeTable(dir, "events")
     dir
   }
 
@@ -85,7 +86,7 @@ class TemporalOpsSpec extends AnyFunSuite with SparkSpec {
     (1L to 20L).map(k => (k, k, "O", 100.37 * k, ts, "1-URGENT"))
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority")
-      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+      .writeTable(dir, "orders")
     val got = TemporalOps.queries("merge_upsert")(spark, dir)
       .collect().map(r => r.getLong(0) -> (r.getString(1), r.getLong(2), r.getLong(3), r.getString(4))).toMap
     assert(got.size == 21) // 20 base keys + one insert (13 % 13 == 0)
@@ -116,7 +117,7 @@ class TemporalOpsSpec extends AnyFunSuite with SparkSpec {
     rows.map { case (k, c, p) => (k, c, "O", p, ts, "1-URGENT") }
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority")
-      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+      .writeTable(dir, "orders")
     val got = TemporalOps.queries("merge_ivm")(spark, dir)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(!got.contains(1L), "fully-retracted customer must drop from the view")
@@ -141,7 +142,7 @@ class TemporalOpsSpec extends AnyFunSuite with SparkSpec {
       (1 to c).map { _ => id += 1; (id, day * 86400L * G + (id % 100) * G, id % 5, "click", 1.0) }
     }
     rows.toDF("event_id", "ts", "user_id", "event_type", "value")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      .writeTable(dir, "events")
     val r = TemporalOps.queries("events_cusum")(spark, dir).collect()
     assert(r.length == 1)
     val (nDays, nAlarms, maxS, firstDay) =

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.ops.TableFiles.TableWriter
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Float similarity-search paths (not oracle-compared): brute-force cosine
@@ -150,7 +151,7 @@ class VectorOpsSpec extends AnyFunSuite with SparkSpec {
     }
     val dir = java.nio.file.Files.createTempDirectory("knn-sf").toString
     rows.toDF("vec_id", "embedding", "label")
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+      .writeTable(dir, "embeddings")
     val got = VectorOps.queries("sim_knn_join")(spark, dir).collect()
       .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("rnk"),
         r.getAs[Long]("nbr_id"), r.getAs[Long]("dot_q")))
