@@ -50,114 +50,41 @@ object CtbIngest {
   private[ingest] val LINE = "_line"
   private[ingest] val LINENO = "_lineno"
 
-  /** Ingest a TSV file from `path` (local or any Hadoop FS). */
-  def ingestFile(spark: SparkSession, path: String): IngestResult =
-    ingestLines(spark, spark.read.text(path))
-
-  /** Core ingest given the raw line DataFrame of ONE file. Exposed
-    * separately so tests and the streaming path can reuse it.
+  /** Ingest ONE TSV file from `path` (local or any Hadoop FS): the
+    * one-file case of [[ingestMany]], narrowed to that file's canonical
+    * columns in header order and one `error` column. A path that scans as
+    * more than one file (a directory or glob) fails instead of mixing
+    * files; 0-byte files scan as nothing, so a directory holding one file
+    * plus 0-byte files ingests that file.
     */
-  def ingestLines(spark: SparkSession, raw: DataFrame): IngestResult = {
-    // "blank" is all-whitespace (tabs included), not Spark trim's
-    // spaces-only — a trailing "\t \t " line must vanish in the file-level
-    // strip, and a leading one must not be mistaken for the header.
-    // rlike("\\S") is "has a char outside Java's ASCII whitespace" (space,
-    // tab, LF, VT, FF, CR), the field trim's set: narrower than the
-    // reference's str.strip(), so a line of only U+00A0 or U+001C is not
-    // blank here.
-    val nonblank = col("value").rlike("\\S")
-    val ids = raw.select(col("value"),
-      spark_partition_id().as("_pid"), monotonically_increasing_id().as("_mid"),
-      input_file_name().as("_file"))
-
-    // Line numbering without a global sort (a round-1 scale bug: a
-    // no-partition Window forced the whole file through one task). Pass 1
-    // collects per-partition (count, min id, min/max non-blank id) — one
-    // tiny row per partition — and the driver turns them into per-partition
-    // offsets; lineno = _mid + adjust(_pid). Text-file splits are created in
-    // file-offset order for a single file, so partition-id order is line
-    // order (the same assumption the reference's enumerate() makes of its
-    // in-memory list).
-    val statRows = ids.groupBy(col("_pid")).agg(
-        count(lit(1)).as("n"), min(col("_mid")).as("m0"),
-        min(when(nonblank, col("_mid"))).as("nbMin"),
-        max(when(nonblank, col("_mid"))).as("nbMax"),
-        countDistinct(col("_file")).as("nf"),
-        min(col("_file")).as("f0"))
-      .collect()
-
-    // The offset-order numbering below assumes exactly ONE underlying file:
-    // with a glob/directory input, partition-id order interleaves files and
-    // the "header" would be an arbitrary file's first line. Detect it from
-    // the same stats pass and fail the file with a clear error instead of
-    // silently producing wrong line numbers. (Non-file inputs — tests build
-    // DataFrames in memory — report a single empty file name and pass.)
-    val fileNames = statRows.map(_.getString(6)).toSet
-    if (statRows.exists(_.getLong(5) > 1) || fileNames.size > 1)
-      return failed(spark,
-        s"Expected exactly one input file, got multiple: ${fileNames.filter(_.nonEmpty).take(3).mkString(", ")} ...")
-
-    val stats = statRows
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
-        if (r.isNullAt(3)) None else Some(r.getLong(3)),
-        if (r.isNullAt(4)) None else Some(r.getLong(4))))
-      .sortBy(_._1)
-
-    // B1: no non-blank line at all -> whole file Failed.
-    if (stats.isEmpty || stats.forall(_._4.isEmpty))
-      return failed(spark, "File is empty")
-
-    var off = 0L
-    val adjust = stats.map { case (pid, n, m0, _, _) =>
-      val a = off - m0 + 1; off += n; (pid, a)
-    }.toMap
-
-    // The reference strips the WHOLE file before splitting (main.py:287-288):
-    // leading/trailing blank lines vanish, interior blank lines survive and
-    // hit the width check. Header = first non-blank line; numbering is
-    // relative to it (stripped-file coordinates, enumerate start=2).
-    val hdrLineno = stats.collect { case (pid, _, _, Some(nb), _) => nb + adjust(pid) }.min
-    val lastLineno = stats.collect { case (pid, _, _, _, Some(nb)) => nb + adjust(pid) }.max
-    // B1: header-only file -> whole file Failed.
-    if (lastLineno == hdrLineno)
-      return failed(spark, "File contains no data rows")
-
-    val (hdrPid, hdrMid) = stats.collect { case (pid, _, _, Some(nb), _) => (pid, nb) }
-      .minBy { case (pid, nb) => nb + adjust(pid) }
-    val headerLine = ids.filter(col("_pid") === hdrPid && col("_mid") === hdrMid)
-      .collect()(0).getString(0)
-
-    val rawHeaders = headerLine.split("\t", -1).toSeq
-    // B3+B4: clean + canonicalize headers (metadata -> driver-side Scala).
-    val canonical = rawHeaders.map(CtbSchema.canonicalName)
-    // B5: unknown header fails the whole file.
-    val unknown = canonical.filterNot(columnTypes.contains)
-    if (unknown.nonEmpty)
-      return failed(spark, s"Schema mismatch. Unknown columns: ${unknown.mkString(", ")}")
-
-    val relAdjust = adjust.map { case (pid, a) => (pid, a - hdrLineno + 1) }
-    val numbered = ids
-      .withColumn(LINENO, col("_mid") + element_at(typedlit(relAdjust), col("_pid")))
-      .filter(col(LINENO) > 1)                          // data rows start after the header
-      .filter(col(LINENO) <= lastLineno - hdrLineno + 1) // file-level strip of trailing blanks
-      .withColumnRenamed("value", LINE)
-      .drop("_pid", "_mid", "_file")
-
-    val tagged = tagRows(numbered, canonical, keyCols = Nil)
-    IngestResult(cleanRows(tagged), errorRows(tagged, keyCols = Nil),
-      fileFailed = false, failureReason = None)
+  def ingestFile(spark: SparkSession, path: String): IngestResult = {
+    val res = ingestMany(spark, path)
+    res.files match {
+      case Seq(file) => res.fileFailed.get(file) match {
+        case Some(reason) => failed(spark, reason)
+        case None => IngestResult(
+          res.clean.select(res.layouts(file).map(col): _*),
+          res.errors.select(col("error")),
+          fileFailed = false, failureReason = None)
+      }
+      // nothing scanned: 0-byte file(s) or an empty directory (B1)
+      case Seq() => failed(spark, "File is empty")
+      case files => failed(spark,
+        s"Expected exactly one input file, got multiple: ${files.take(3).mkString(", ")} ...")
+    }
   }
 
   /** Column of a tagged frame holding the row's error strings. */
   private val ERRS = graft.expressions.CtbTag.ERRS
 
   /** B6-B13 row rules over numbered lines, as ONE tagged frame: `keyCols`
-    * (e.g. the source-file column in the multi-file path), the typed
-    * canonical columns, and `_errs` — the row's error strings, empty iff
-    * the row survives. Clean rows and error rows are two filters over this
-    * one plan ([[cleanRows]], [[errorRows]]), so a caller that persists it
-    * parses the lines once for both. Unpersisted, each filter is pushed
-    * below the kernel's projection and the kernel runs twice per row.
+    * (e.g. the source-file column), the typed canonical columns, and
+    * `_errs` — the row's error strings, empty iff the row survives. Clean
+    * rows and error rows are two filters over this one plan
+    * ([[MultiIngestResult.clean]], [[MultiIngestResult.errors]]), so a
+    * caller that persists it parses the lines once for both. Unpersisted,
+    * each filter is pushed below the kernel's projection and the kernel
+    * runs twice per row.
     *
     * The rules are one native expression, [[graft.expressions.CtbTag]]
     * (`graft_ctb_tag`), called once per row; a second projection unpacks
@@ -190,14 +117,6 @@ object CtbIngest {
       .select(keys ++ (canonical :+ ERRS).map(c => col(tag).getField(c).as(c)): _*)
   }
 
-  /** The rows of a tagged frame that survived every rule, without `_errs`. */
-  private def cleanRows(tagged: DataFrame): DataFrame =
-    tagged.filter(size(col(ERRS)) === 0).drop(ERRS)
-
-  /** One row per error string of a tagged frame, with its `keyCols`. */
-  private def errorRows(tagged: DataFrame, keyCols: Seq[String]): DataFrame =
-    tagged.select(keyCols.map(col) :+ explode(col(ERRS)).as("error"): _*)
-
   /** Result of ingesting a whole set of files as one distributed plan.
     *
     * @param tagged      every data row of the files that did not fail whole:
@@ -211,17 +130,20 @@ object CtbIngest {
     *                    (a 0-byte file yields no rows and is not listed)
     * @param fileFailed  whole-file failures (B1 empty / header-only, B5
     *                    unknown header): file path -> reason
+    * @param layouts     each file that did not fail whole -> its canonical
+    *                    columns in header order
     */
   final case class MultiIngestResult(
       tagged: DataFrame,
       files: Seq[String],
-      fileFailed: Map[String, String]) {
+      fileFailed: Map[String, String],
+      layouts: Map[String, Seq[String]]) {
 
     /** Surviving rows: `_src_file` plus the full canonical schema. */
-    def clean: DataFrame = cleanRows(tagged)
+    def clean: DataFrame = tagged.filter(size(col(ERRS)) === 0).drop(ERRS)
 
     /** Per-row error strings with their `_src_file`. */
-    def errors: DataFrame = errorRows(tagged, keyCols = Seq(SRC_FILE))
+    def errors: DataFrame = tagged.select(col(SRC_FILE), explode(col(ERRS)).as("error"))
   }
 
   val SRC_FILE = "_src_file"
@@ -261,19 +183,20 @@ object CtbIngest {
       Option(u.getAuthority).getOrElse(""), u.getPath, null, null).toString
   }
 
-  /** Multi-file core: the single-file semantics (B1-B13), applied per
-    * source file, driven by ONE stats pass.
+  /** Ingest core: the file-level rules (strip, header, B1, B3-B5, line
+    * numbers) and the row rules (B6-B13), applied per source file, driven
+    * by ONE stats pass. [[ingestFile]] and [[ingestMany]] both run it.
     *
     * How it scales past the sequential per-file driver loop:
     *   1. per-(file, partition) stats — counts, min id, min/max non-blank
     *      id — come from one aggregation (a few rows per partition);
-    *      per-file line numbers are then `_mid + adjust(file, partition)`
-    *      exactly as in the single-file path. Within one file, equal-size
-    *      text splits keep offset order under Spark's stable
-    *      size-descending packing (same assumption ingestLines documents);
-    *      rows of different files never share a (file, partition) key
-    *      ordering problem because a partition reads its files
-    *      sequentially.
+    *      per-file line numbers are then `_mid + adjust(file, partition)`,
+    *      with no global sort. Within one file, equal-size text splits
+    *      keep offset order under Spark's stable size-descending packing,
+    *      so partition-id order is line order (the assumption the
+    *      reference's enumerate() makes of its in-memory list); rows of
+    *      different files never share a (file, partition) key ordering
+    *      problem because a partition reads its files sequentially.
     *   2. the same pass carries each chunk's first non-blank line, so every
     *      file's header reaches the driver with its stats — no second pass.
     *   3. files are grouped by canonical header layout; each group tags its
@@ -295,8 +218,7 @@ object CtbIngest {
     * Caveat: a 0-BYTE file contributes no scan rows, so it is invisible to
     * THIS DataFrame-entry point (no `fileFailed` entry) — the caller owns
     * the file listing and must diff it against the results ([[ingestMany]]
-    * and the streaming drain both do; [[ingestFile]] sees the empty scan
-    * directly).
+    * and the streaming drain both do).
     */
   def ingestManyLines(spark: SparkSession, raw: DataFrame): MultiIngestResult = {
     // "blank" is all-whitespace (tabs included), not Spark trim's
@@ -311,8 +233,12 @@ object CtbIngest {
       spark_partition_id().as("_pid"), monotonically_increasing_id().as("_mid"),
       input_file_name().as("_file"))
 
-    // (1) one stats pass, keyed by (file, partition); it also carries each
-    // chunk's first non-blank line, so the header needs no second pass
+    // (1) one stats pass, keyed by (file, partition): a few tiny rows per
+    // partition, turned into per-chunk line offsets on the driver. Line
+    // numbers never come from a Window (a round-1 scale bug: a
+    // no-partition Window forced the whole file through one task). The
+    // pass also carries each chunk's first non-blank line, so the header
+    // needs no second pass.
     val statRows = ids.groupBy(col("_file"), col("_pid")).agg(
         count(lit(1)).as("n"), min(col("_mid")).as("m0"),
         min(when(nonblank, col("_mid"))).as("nbMin"),
@@ -339,7 +265,11 @@ object CtbIngest {
           val adjust = chunks.map { case (pid, n, m0, _, _) =>
             val a = off - m0 + 1; off += n; (pid, a)
           }.toMap
-          // (2) the header: the first non-blank line of the earliest chunk
+          // (2) the header: the first non-blank line of the earliest chunk.
+          // The reference strips the WHOLE file before splitting
+          // (main.py:287-288): leading/trailing blank lines vanish, interior
+          // ones survive and hit the width check; numbering is relative to
+          // the header (stripped-file coordinates, enumerate start=2).
           val (hdrLineno, header) = chunks
             .collect { case (pid, _, _, Some((nb, line)), _) => (nb + adjust(pid), line) }
             .minBy(_._1)
@@ -396,7 +326,8 @@ object CtbIngest {
     MultiIngestResult(
       tagged = groups.reduceOption(_ unionByName _).getOrElse(emptyTagged),
       files = statRows.map(_.getString(0)).distinct.sorted.toSeq,
-      fileFailed = failures.toMap)
+      fileFailed = failures.toMap,
+      layouts = canonicalByFile)
   }
 
   /** Type-safe view of a full-width clean result: a Dataset[CtbRecord] for

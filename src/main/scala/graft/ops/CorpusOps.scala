@@ -18,12 +18,6 @@ import Tables._
   */
 object CorpusOps extends Pack {
 
-  /** 60-bit deterministic hash shared with the DuckDB oracle (TextOps
-    * convention — 15 hex chars of md5 so the value fits a signed long).
-    */
-  private def h60(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    call_function("graft_h60", c) // native one-pass kernel (r20); registered by Tables.t
-
   /** URL canonicalization chain (all codegen'd string ops, no UDF):
     * lowercase -> strip fragment -> strip utm_* query -> strip :443
     * default port -> strip trailing slash. Idempotent: canonical URLs are
@@ -260,7 +254,6 @@ object CorpusOps extends Pack {
       // aggregate — agg_bitmap's first (type, chunk) exchange disappears,
       // and partial bitmaps merge map-side by bit_or. Same oracle:
       // count(DISTINCT) in DuckDB, a third algorithm agreeing.
-      graft.expressions.GraftFunctions.register(s)
       t(s, d, "events")
         .groupBy(col("event_type"))
         .agg(call_function("graft_bitmap_distinct", col("user_id")).as("n_users"))
@@ -422,7 +415,7 @@ object CorpusOps extends Pack {
           "transform(sequence(1, size(ws) - 1), i -> struct(" +
             "element_at(ws, int(i)) AS a, " +
             "concat(element_at(ws, int(i)), ' ', element_at(ws, int(i) + 1)) AS ab))")).as("p"))
-        .select(col("doc_id"), h60(col("p.a")).as("ha"), h60(col("p.ab")).as("hab"))
+        .select(col("doc_id"), Hash60(col("p.a")).as("ha"), Hash60(col("p.ab")).as("hab"))
         .persist() // train counts AND per-doc scoring both read it
       val cbg = bg.groupBy(col("ha"), col("hab")).agg(count(lit(1)).as("cbg"))
       val cug = cbg.groupBy(col("ha")).agg(sum(col("cbg")).as("cug"))
@@ -442,7 +435,7 @@ object CorpusOps extends Pack {
     "dedup_cdc_chunks" -> ((s, d) => {
       // Content-defined chunking (the FastCDC/rsync discipline on word
       // streams): a chunk boundary opens at position i whenever the
-      // rolling 2-word window hash satisfies h60(w[i-1]+' '+w[i]) % 8 == 0
+      // rolling 2-word window hash satisfies Hash60(w[i-1]+' '+w[i]) % 8 == 0
       // — boundaries depend only on LOCAL content, so an insertion early
       // in a document shifts every fixed-size block but leaves all
       // downstream CDC chunks (and their hashes) intact. That is the
@@ -467,7 +460,7 @@ object CorpusOps extends Pack {
             |    transform(zip_with(concat(array(1), b), concat(b, array(size(w) + 1)), (cs, ce) -> struct(cs AS cs, ce AS ce)),
             |      p -> concat_ws(' ', slice(w, p.cs, p.ce - p.cs))))[0])[0]""".stripMargin))
         .select(col("doc_id"), explode(col("chs")).as("c"))
-        .select(col("doc_id"), h60(col("c")).as("ch"))
+        .select(col("doc_id"), Hash60(col("c")).as("ch"))
         .persist() // chunk-df aggregate AND per-doc rollup both read it
       val cdf = chunks.groupBy(col("ch"))
         .agg(countDistinct(col("doc_id")).as("ndocs"))
@@ -907,12 +900,12 @@ object CorpusOps extends Pack {
       // "rows replayed"). Row rendering is pinned cross-engine: integers
       // raw, money in cents, timestamps as floor-epoch seconds, '|'
       // separators. One aggregate pass per table, map-side combinable.
-      val orders = t(s, d, "orders").select(h60(concat_ws("|",
+      val orders = t(s, d, "orders").select(Hash60(concat_ws("|",
           col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           round(col("o_totalprice") * 100).cast("long"),
           unix_timestamp(col("o_orderdate")), col("o_orderpriority"))).as("h"),
         col("o_orderkey").as("k"))
-      val customer = t(s, d, "customer").select(h60(concat_ws("|",
+      val customer = t(s, d, "customer").select(Hash60(concat_ws("|",
           col("c_custkey"), col("c_name"), col("c_nationkey"),
           round(col("c_acctbal") * 100).cast("long"), col("c_mktsegment"))).as("h"),
         col("c_custkey").as("k"))
@@ -930,13 +923,13 @@ object CorpusOps extends Pack {
       // into 16 hash buckets — the fixed-width, vocabulary-free input a
       // downstream classifier/regressor trains on (no dictionary to
       // build, ship, or version). ONE hash aggregate: 16 conditional sums
-      // keyed by pmod(h60(word), 16) — no per-bucket Expand, no pivot
+      // keyed by pmod(Hash60(word), 16) — no per-bucket Expand, no pivot
       // pre-pass, map-side combinable; the feature row never exceeds 16
       // longs regardless of vocabulary.
       val base = t(s, d, "documents")
         .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
         .filter(col("w") =!= "")
-        .withColumn("b", pmod(h60(col("w")), lit(16)))
+        .withColumn("b", pmod(Hash60(col("w")), lit(16)))
       base.groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_tokens"),
           (0 until 16).map(b =>
@@ -953,7 +946,6 @@ object CorpusOps extends Pack {
       // threshold would re-shuffle the corpus once per point). Same
       // kernel, same codegen'd agreement, no verify filter — the
       // histogram is one tiny aggregate on top.
-      graft.expressions.GraftFunctions.register(s)
       val bands = TextOps.minhashBands(
         t(s, d, "documents").select(col("doc_id"), col("text"))).persist()
       // both-band duplicates are suppressed IN the join condition (emit the
@@ -1047,7 +1039,7 @@ object CorpusOps extends Pack {
       val grams = docs
         .select(col("doc_id"), explode(expr(
           "transform(sequence(1, size(ws)-3), i -> array_join(slice(ws, i, 4), ' '))")).as("gram"))
-        .select(col("doc_id"), h60(col("gram")).as("g"))
+        .select(col("doc_id"), Hash60(col("gram")).as("g"))
         .distinct()
         .persist() // consumed by the benchmark side and the corpus side
       val bench = grams.filter(col("doc_id") < 5).select(col("g")).distinct()
@@ -1068,14 +1060,14 @@ object CorpusOps extends Pack {
       // (its inverse): natural prose runs high (~half its types are
       // hapax), templated/boilerplate text runs low, keyword-stuffed spam
       // lower still. Exact integers: permille by integer division.
-      // Scale shape: ONE (doc_id, h60(word)) map-side-combinable count —
+      // Scale shape: ONE (doc_id, Hash60(word)) map-side-combinable count —
       // words shuffle as 8-byte hashes, never strings (the lm_score
       // discipline; the oracle keeps raw strings, so a 60-bit collision
       // would surface there) — then a per-doc rollup of the SAME counts.
       t(s, d, "documents")
         .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
         .filter(col("w") =!= "")
-        .groupBy(col("doc_id"), h60(col("w")).as("hw"))
+        .groupBy(col("doc_id"), Hash60(col("w")).as("hw"))
         .agg(count(lit(1)).as("c"))
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_types"),

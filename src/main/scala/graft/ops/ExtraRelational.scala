@@ -300,7 +300,6 @@ object ExtraRelational extends Pack {
       // [[graft.expressions.XmlOrderExtract]] kernel extracts the same
       // attribute + elements with full entity decoding in one pass over the
       // string, inside whole-stage codegen.
-      graft.expressions.GraftFunctions.register(s)
       val title = concat(col("o_orderpriority"), lit(" & <x>"))
       // literal single-char patterns: StringReplace, not the regex engine
       val escaped = replace(replace(replace(
@@ -331,7 +330,6 @@ object ExtraRelational extends Pack {
       // scans the JSON text once and extracts all four paths (honest
       // parser: field order free, escapes decoded, missing path -> null),
       // inside whole-stage codegen.
-      graft.expressions.GraftFunctions.register(s)
       val json = concat(lit("{\"k\":"), col("o_orderkey"),
         lit(",\"m\":{\"s\":\""), col("o_orderstatus"),
         lit("\",\"c\":"), round(col("o_totalprice") * 100).cast("long"),

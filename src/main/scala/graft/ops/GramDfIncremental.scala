@@ -31,9 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object GramDfIncremental {
 
-  private def h60(c: org.apache.spark.sql.Column) =
-    call_function("graft_h60", c) // native one-pass kernel (r20); registered by Tables.t
-
   /** Distinct (doc_id, g) gram-hash pairs of a (doc_id, text) batch. */
   def gramPairs(docs: DataFrame): DataFrame = {
     // incremental callers may never touch Tables.t — register here too
@@ -43,7 +40,7 @@ object GramDfIncremental {
       .select(col("doc_id"), explode(expr(
         "transform(sequence(1, size(ws)-2), i -> concat_ws(' ', element_at(ws,i), element_at(ws,i+1), element_at(ws,i+2)))"
       )).as("gs"))
-      .select(col("doc_id"), h60(col("gs")).as("g"))
+      .select(col("doc_id"), Hash60(col("gs")).as("g"))
       .distinct()
   }
 

@@ -20,10 +20,6 @@ import Tables._
   */
 object MiningOps extends Pack {
 
-  /** 60-bit deterministic hash shared with the DuckDB oracle (TextOps twin). */
-  private def h60(c: Column): Column =
-    call_function("graft_h60", c) // native one-pass kernel (r20); registered by Tables.t
-
   private def toks(c: Column): Column = split(c, " ")
 
   private val tokSql = "string_split(text, ' ')"
@@ -113,7 +109,7 @@ object MiningOps extends Pack {
         .select(col("doc_id"), posexplode(expr(
           "transform(sequence(1, size(ws) div 8), i -> array_join(slice(ws, (i-1)*8 + 1, 8), ' '))"
         )).as(Seq("i", "blk")))
-        .select(col("doc_id"), col("i"), col("blk"), h60(col("blk")).as("b"))
+        .select(col("doc_id"), col("i"), col("blk"), Hash60(col("blk")).as("b"))
         .persist()
       val docFreq = blocks.select(col("doc_id"), col("b")).distinct()
         .groupBy(col("b")).agg(count(lit(1)).as("n_docs_with"))
@@ -159,7 +155,7 @@ object MiningOps extends Pack {
         .select(col("doc_id"), explode(expr(
           "transform(sequence(1, size(ws) div 8), i -> array_join(slice(ws, (i-1)*8 + 1, 8), ' '))"
         )).as("blk"))
-        .select(col("doc_id"), h60(col("blk")).as("b"))
+        .select(col("doc_id"), Hash60(col("blk")).as("b"))
         .persist() // feeds the block-frequency agg AND the per-doc rollup
       val docFreq = blocks.distinct()
         .groupBy(col("b")).agg(count(lit(1)).as("n_docs_with"))
@@ -203,7 +199,7 @@ object MiningOps extends Pack {
           "transform(sequence(1, size(ws) div 8), i -> array_join(slice(ws, (i-1)*8 + 1, 8), ' '))"
         )).as("blk"))
       val reps = blocks
-        .select(col("doc_id"), h60(col("blk")).as("bh"),
+        .select(col("doc_id"), Hash60(col("blk")).as("bh"),
           expr("array_sort(array_distinct(transform(split(blk, ' '), " +
             "w -> graft_h60(w))))").as("th"))
         .groupBy(col("bh"), col("th"))
@@ -274,7 +270,7 @@ object MiningOps extends Pack {
         .select(col("doc_id"), explode(expr(
           "transform(sequence(1, size(ws) - 7), i -> array_join(slice(ws, i, 8), ' '))"
         )).as("win"))
-        .select(col("doc_id"), h60(col("win")).as("b"))
+        .select(col("doc_id"), Hash60(col("win")).as("b"))
         .persist() // feeds the window-frequency agg AND the per-doc rollup
       val docFreq = wins.distinct()
         .groupBy(col("b")).agg(count(lit(1)).as("n_docs_with"))

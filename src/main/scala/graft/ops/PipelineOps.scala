@@ -24,9 +24,6 @@ object PipelineOps extends Pack {
 
   private def toks(c: org.apache.spark.sql.Column) = split(c, " ")
   private val tokSql = "string_split(text, ' ')"
-  private def h60(c: org.apache.spark.sql.Column) =
-    call_function("graft_h60", c) // native one-pass kernel (r20); registered by Tables.t
-  private val h60Sql = "('0x'||substr(md5(%s),1,15))::BIGINT"
 
   val queries: Map[String, Q] = Map(
 
@@ -234,7 +231,7 @@ object PipelineOps extends Pack {
         .select(col("doc_id"), explode(expr(
           "transform(sequence(1, size(ws)-2), i -> concat_ws(' ', element_at(ws,i), element_at(ws,i+1), element_at(ws,i+2)))"
         )).as("gs"))
-        .select(col("doc_id"), h60(col("gs")).as("g"))
+        .select(col("doc_id"), Hash60(col("gs")).as("g"))
         .distinct()
       val df = ng.groupBy(col("g")).agg(count(lit(1)).as("df"))
       ng.join(df, "g")
@@ -492,7 +489,7 @@ object PipelineOps extends Pack {
         .filter(size(col("ws")) >= 4)
         .select(col("doc_id"), explode(expr(
           "transform(sequence(1, size(ws)-3), i -> array_join(slice(ws, i, 4), ' '))")).as("gram"))
-        .select(col("doc_id"), h60(col("gram")).as("g"))
+        .select(col("doc_id"), Hash60(col("gram")).as("g"))
         .distinct()
         .persist() // consumed by both the benchmark side and the corpus side
       val bench = grams.filter(col("doc_id") < 5).select(col("g")).distinct()
@@ -501,7 +498,7 @@ object PipelineOps extends Pack {
       deduped
         .filter(col("doc_id") >= 5)
         .join(contaminated, Seq("doc_id"), "left_anti")
-        .filter(h60(concat(col("lang"), lit("#"), col("doc_id").cast("string"))) % 100 < 50)
+        .filter(Hash60(concat(col("lang"), lit("#"), col("doc_id").cast("string"))) % 100 < 50)
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
           min(col("doc_id")).as("min_doc"))
@@ -679,7 +676,7 @@ object PipelineOps extends Pack {
       (s"""WITH base AS (
          |  SELECT doc_id, $tokSql AS ws FROM documents WHERE len($tokSql) >= 3),
          |ng AS (
-         |  SELECT DISTINCT doc_id, (""" + h60Sql.format("gs") + s""") AS g FROM (
+         |  SELECT DISTINCT doc_id, (""" + Hash60.sql("gs") + s""") AS g FROM (
          |    SELECT doc_id, unnest(list_transform(generate_series(1, len(ws)-2),
          |      i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS gs FROM base)),
          |df AS (SELECT g, count(*) AS df FROM ng GROUP BY g)
@@ -800,7 +797,7 @@ object PipelineOps extends Pack {
          |docs4 AS (
          |  SELECT doc_id, $tokSql AS ws FROM documents WHERE len($tokSql) >= 4),
          |grams AS (
-         |  SELECT DISTINCT doc_id, (""" + h60Sql.format("gram") + s""") AS g FROM (
+         |  SELECT DISTINCT doc_id, (""" + Hash60.sql("gram") + s""") AS g FROM (
          |    SELECT doc_id, unnest(list_transform(generate_series(1, len(ws)-3),
          |      i -> array_to_string(ws[i:i+3], ' '))) AS gram FROM docs4)),
          |bench AS (SELECT DISTINCT g FROM grams WHERE doc_id < 5),
@@ -809,7 +806,7 @@ object PipelineOps extends Pack {
          |sampled AS (
          |  SELECT * FROM kept
          |  WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)
-         |    AND (""" + h60Sql.format("lang || '#' || doc_id::VARCHAR") + """) % 100 < 50)
+         |    AND (""" + Hash60.sql("lang || '#' || doc_id::VARCHAR") + """) % 100 < 50)
          |SELECT lang, count(*)::BIGINT AS n_docs, sum(n_chars)::BIGINT AS sum_chars,
          |       min(doc_id) AS min_doc
          |FROM sampled GROUP BY lang ORDER BY lang""").stripMargin,

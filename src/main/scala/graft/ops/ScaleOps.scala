@@ -39,11 +39,6 @@ private[graft] object CountMin {
 
 object ScaleOps extends Pack {
 
-  /** 60-bit deterministic hash shared with the DuckDB oracle (TextOps twin). */
-  private def h60(c: Column): Column =
-    call_function("graft_h60", c) // native one-pass kernel (r20); registered by Tables.t
-  private val h60Sql = "('0x'||substr(md5(%s),1,15))::BIGINT"
-
   /** Poisson(λ=1) inverse-CDF thresholds scaled to the 60-bit hash
     * domain (draw count k = first threshold the hash-uniform falls
     * under; tail capped at 5 — P(k>5) ≈ 6e-4). Computed ONCE here and
@@ -173,7 +168,7 @@ object ScaleOps extends Pack {
       // audit (per-lang target vs achieved permille) is the mixture
       // datasheet; the plan is one narrow map + ONE hash aggregate —
       // no shuffle of document content, no sampling retry loop.
-      val pm = h60(concat(col("lang"), lit("#"), col("doc_id").cast("string"))) % 1000
+      val pm = Hash60(concat(col("lang"), lit("#"), col("doc_id").cast("string"))) % 1000
       val tgt = when(col("lang") === "en", lit(250L))
         .when(col("lang") === "zh", lit(800L)).otherwise(lit(1000L))
       t(s, d, "documents")
@@ -292,7 +287,7 @@ object ScaleOps extends Pack {
       // combined aggregate to 16 rows; h60 over the decimal key string
       // is the engine-shared hash.
       t(s, d, "events")
-        .withColumn("h", h60(col("user_id").cast("string").cast("binary")))
+        .withColumn("h", Hash60(col("user_id").cast("string").cast("binary")))
         .select((col("h") % 16).as("bucket"), expr("h div 16").as("v"))
         .withColumn("term", when(col("v") === 0L, lit(1L << 44))
           .otherwise(col("v").bitwiseAND(-col("v"))))
@@ -344,7 +339,6 @@ object ScaleOps extends Pack {
       // constrained regime (m < distinct: overestimates bounded by N/m,
       // heavy hitters guaranteed present) is property-tested in
       // HeavyHittersSpec.
-      graft.expressions.GraftFunctions.register(s)
       t(s, d, "documents")
         .select(explode(split(col("text"), " ")).as("w"))
         .filter(col("w") =!= "")
@@ -371,7 +365,6 @@ object ScaleOps extends Pack {
       // bound is ~1.6 % of n. The exact regime (n < k → no compression →
       // exact order statistics) and merge-split invariance are pinned in
       // QDigestSpec.
-      graft.expressions.GraftFunctions.register(s)
       val base = t(s, d, "lineitem")
         .select(col("l_returnflag"), col("l_quantity").cast("long").as("v"))
       val sk = base.groupBy(col("l_returnflag"))
@@ -427,7 +420,7 @@ object ScaleOps extends Pack {
       // constants, not correctness, depend on it).
       val freq = t(s, d, "events").groupBy(col("user_id"))
         .agg(count(lit(1)).as("cnt"))
-        .withColumn("h", h60(concat(lit("ams#"), col("user_id").cast("string"))))
+        .withColumn("h", Hash60(concat(lit("ams#"), col("user_id").cast("string"))))
       val sums = (0 until 16).map { r =>
         sum(expr(s"CASE WHEN (h >> $r) & 1 = 1 THEN cnt ELSE -cnt END")
           .cast("long")).as(s"c$r")
@@ -465,7 +458,7 @@ object ScaleOps extends Pack {
       val parts = fa.withColumn("tag", lit("a"))
         .unionByName(fb.withColumn("tag", lit("b")))
         .unionByName(joined.withColumn("tag", lit("j")))
-        .withColumn("h", h60(concat(lit("ams#"), col("k").cast("string"))))
+        .withColumn("h", Hash60(concat(lit("ams#"), col("k").cast("string"))))
       val sums =
         Seq(sum(when(col("tag") === "a", col("f"))).as("n_a"),
           sum(when(col("tag") === "b", col("f"))).as("n_b"),
@@ -484,7 +477,7 @@ object ScaleOps extends Pack {
     }),
 
     "sample_weighted" -> ((s, d) => {
-      // size-weighted sample of 25 documents: priority = h60(salted id)
+      // size-weighted sample of 25 documents: priority = Hash60(salted id)
       // div weight, keep the k smallest. One narrow map + one
       // TakeOrderedAndProject — no global shuffle, no rand() seed to
       // coordinate across executors, reproducible across runs/retries/
@@ -496,7 +489,7 @@ object ScaleOps extends Pack {
       // near-tied priorities between engines).
       t(s, d, "documents")
         .select(col("doc_id"), col("n_chars"),
-          h60(concat(lit("wsamp#"), col("doc_id").cast("string"))).as("h"))
+          Hash60(concat(lit("wsamp#"), col("doc_id").cast("string"))).as("h"))
         // integer div, not `/`: the 60-bit hash exceeds 2^53, so double
         // division would corrupt low bits before truncation
         .withColumn("priority", expr("h div greatest(n_chars, 1L)"))
@@ -517,7 +510,7 @@ object ScaleOps extends Pack {
       // resample accounting. One narrow map + one map-side-combinable
       // agg — no shuffle of the corpus.
       val th = bootThresholds
-      val u = h60(concat(lit("boot#"), col("doc_id").cast("string")))
+      val u = Hash60(concat(lit("boot#"), col("doc_id").cast("string")))
       val k = when(u < th(0), 0L).when(u < th(1), 1L).when(u < th(2), 2L)
         .when(u < th(3), 3L).when(u < th(4), 4L).otherwise(5L)
       t(s, d, "documents").select(col("source"), k.as("k"))
@@ -555,7 +548,7 @@ object ScaleOps extends Pack {
         .when(u < th(3), 3L).when(u < th(4), 4L).otherwise(5L)
       val reps = t(s, d, "orders")
         .select(round(col("o_totalprice") * 100).cast("long").as("c"),
-          (h60(concat(lit("ci#"), col("o_orderkey").cast("string")))
+          (Hash60(concat(lit("ci#"), col("o_orderkey").cast("string")))
             % 2147483647L).as("hseed"))
         .repartition()
         .select(col("c"), col("hseed"), explode(expr("sequence(0, 99)")).as("b"))
@@ -578,8 +571,8 @@ object ScaleOps extends Pack {
       // Algorithm + scale shape: [[gridRadiusPairs]].
       val pts = t(s, d, "customer")
         .select(col("c_custkey").as("id"),
-          (h60(concat(lit("gx#"), col("c_custkey").cast("string"))) % 1000000L).as("x"),
-          (h60(concat(lit("gy#"), col("c_custkey").cast("string"))) % 1000000L).as("y"))
+          (Hash60(concat(lit("gx#"), col("c_custkey").cast("string"))) % 1000000L).as("x"),
+          (Hash60(concat(lit("gy#"), col("c_custkey").cast("string"))) % 1000000L).as("y"))
       gridRadiusPairs(pts, 5000L)
         .orderBy(col("d2").asc, col("a").asc, col("b").asc)
         .limit(20)
@@ -598,7 +591,7 @@ object ScaleOps extends Pack {
       val df = t(s, d, "part")
         .select(col("p_partkey"),
           (col("p_partkey") % 65536L).as("gx"),
-          (h60(concat(lit("mz#"), col("p_partkey").cast("string"))) % 65536L).as("gy"))
+          (Hash60(concat(lit("mz#"), col("p_partkey").cast("string"))) % 65536L).as("gy"))
       df.withColumn("zval",
           expr(s"${spreadSql("gx")} | (${spreadSql("gy")} << 1)"))
         .withColumn("rx", expr(unspreadSql("zval")))
@@ -649,7 +642,7 @@ object ScaleOps extends Pack {
         .select(col("doc_id"), explode(expr(
           "array_distinct(transform(sequence(1, size(ws) - 1), i -> " +
             "concat(element_at(ws, int(i)), ' ', element_at(ws, int(i) + 1))))")).as("b"))
-        .select(col("doc_id"), h60(col("b")).as("g"))
+        .select(col("doc_id"), Hash60(col("b")).as("g"))
         .persist() // feeds the df aggregate AND the per-doc rollup
       val dft = bg.groupBy(col("g")).agg(count(lit(1)).as("df"))
       bg.join(dft, "g")
@@ -823,7 +816,7 @@ object ScaleOps extends Pack {
       // bounded window, allowlisted) and broadcast back.
       val docs = t(s, d, "documents").select(col("doc_id"), col("lang"))
         .withColumn("hk",
-          h60(concat(col("lang"), lit("#"), col("doc_id").cast("string"))))
+          Hash60(concat(col("lang"), lit("#"), col("doc_id").cast("string"))))
       val rk = DistributedRank.withGlobalRank(docs,
         Seq(col("lang"), col("hk"), col("doc_id")), "rn")
       val wl = Window.partitionBy(lit(1)).orderBy(col("lang"))
@@ -900,7 +893,7 @@ object ScaleOps extends Pack {
     "prep_balanced_sample" ->
       s"""WITH docs AS (
          |  SELECT doc_id, lang,
-         |         ${h60Sql.format("lang || '#' || doc_id::VARCHAR")} AS hk
+         |         ${Hash60.sql("lang || '#' || doc_id::VARCHAR")} AS hk
          |  FROM documents),
          |c AS (SELECT lang, count(*)::BIGINT AS n_orig FROM docs GROUP BY lang),
          |kk AS (SELECT min(n_orig)::BIGINT AS k FROM c),
@@ -931,7 +924,7 @@ object ScaleOps extends Pack {
         |  SELECT lang,
         |    CASE WHEN lang = 'en' THEN 250 WHEN lang = 'zh' THEN 800
         |         ELSE 1000 END AS tgt,
-        |    ${h60Sql.format("lang||'#'||doc_id::VARCHAR")} % 1000 AS pm
+        |    ${Hash60.sql("lang||'#'||doc_id::VARCHAR")} % 1000 AS pm
         |  FROM documents)
         |SELECT lang, max(tgt)::BIGINT AS target_permille,
         |  count(*)::BIGINT AS n_total,
@@ -1034,7 +1027,7 @@ object ScaleOps extends Pack {
       }.mkString(",\n        |       ")
       s"""WITH freq AS (
         |  SELECT user_id, count(*)::BIGINT AS cnt,
-        |         ${h60Sql.format("'ams#'||user_id::VARCHAR")} AS h
+        |         ${Hash60.sql("'ams#'||user_id::VARCHAR")} AS h
         |  FROM events GROUP BY user_id),
         |sk AS (
         |  SELECT sum(cnt)::BIGINT AS n, sum(cnt * cnt)::BIGINT AS exact_f2,
@@ -1054,11 +1047,11 @@ object ScaleOps extends Pack {
       }.mkString(",\n        |       ")
       s"""WITH fa AS (
         |  SELECT l_orderkey AS k, count(*)::BIGINT AS f,
-        |         ${h60Sql.format("'ams#'||l_orderkey::VARCHAR")} AS h
+        |         ${Hash60.sql("'ams#'||l_orderkey::VARCHAR")} AS h
         |  FROM lineitem GROUP BY l_orderkey),
         |fb AS (
         |  SELECT o_orderkey AS k, count(*)::BIGINT AS f,
-        |         ${h60Sql.format("'ams#'||o_orderkey::VARCHAR")} AS h
+        |         ${Hash60.sql("'ams#'||o_orderkey::VARCHAR")} AS h
         |  FROM orders GROUP BY o_orderkey),
         |sa AS (SELECT sum(f)::BIGINT AS n_a, ${cs('a')} FROM fa),
         |sb AS (SELECT sum(f)::BIGINT AS n_b, ${cs('b')} FROM fb),
@@ -1087,7 +1080,7 @@ object ScaleOps extends Pack {
          |         WHEN u < ${bootThresholds(3)} THEN 3
          |         WHEN u < ${bootThresholds(4)} THEN 4
          |         ELSE 5 END AS k
-         |  FROM (SELECT source, ${h60Sql.format("'boot#'||doc_id::VARCHAR")} AS u
+         |  FROM (SELECT source, ${Hash60.sql("'boot#'||doc_id::VARCHAR")} AS u
          |        FROM documents))
          |SELECT source, count(*)::BIGINT AS n_docs, sum(k)::BIGINT AS n_resampled,
          |  (count(*) FILTER (WHERE k = 0))::BIGINT AS n_dropped,
@@ -1097,7 +1090,7 @@ object ScaleOps extends Pack {
     "agg_bootstrap_ci" ->
       (s"""WITH f AS (
          |  SELECT b, round(o_totalprice * 100)::BIGINT AS c,
-         |    (${h60Sql.format("'ci#'||o_orderkey::VARCHAR")} % 2147483647)
+         |    (${Hash60.sql("'ci#'||o_orderkey::VARCHAR")} % 2147483647)
          |      * (131 + 2 * b) + 17 * b AS uu
          |  FROM orders, (SELECT unnest(generate_series(0, 99)) AS b)),
          |kd AS (
@@ -1123,15 +1116,15 @@ object ScaleOps extends Pack {
 
     "sample_weighted" ->
       (s"""SELECT doc_id, n_chars,
-        |  ${h60Sql.format("'wsamp#'||doc_id::VARCHAR")} // greatest(n_chars, 1) AS priority
+        |  ${Hash60.sql("'wsamp#'||doc_id::VARCHAR")} // greatest(n_chars, 1) AS priority
         |FROM documents
         |ORDER BY priority, doc_id LIMIT 25""").stripMargin,
 
     "join_spatial_grid" ->
       (s"""WITH pts AS (
         |  SELECT c_custkey AS id,
-        |    ${h60Sql.format("'gx#'||c_custkey::VARCHAR")} % 1000000 AS x,
-        |    ${h60Sql.format("'gy#'||c_custkey::VARCHAR")} % 1000000 AS y
+        |    ${Hash60.sql("'gx#'||c_custkey::VARCHAR")} % 1000000 AS x,
+        |    ${Hash60.sql("'gy#'||c_custkey::VARCHAR")} % 1000000 AS y
         |  FROM customer),
         |cells AS (SELECT *, x // 5000 AS cx, y // 5000 AS cy FROM pts)
         |SELECT l.id AS a, r.id AS b,
@@ -1146,7 +1139,7 @@ object ScaleOps extends Pack {
       val sy = spreadSql("gy")
       s"""WITH g AS (
         |  SELECT p_partkey, p_partkey % 65536 AS gx,
-        |    ${h60Sql.format("'mz#'||p_partkey::VARCHAR")} % 65536 AS gy
+        |    ${Hash60.sql("'mz#'||p_partkey::VARCHAR")} % 65536 AS gy
         |  FROM part),
         |z AS (SELECT p_partkey, gx, gy, ($sx | ($sy << 1)) AS zval FROM g)
         |SELECT p_partkey, gx, gy, zval,
@@ -1174,7 +1167,7 @@ object ScaleOps extends Pack {
         |  SELECT doc_id, unnest(list_transform(generate_series(1, len(ws) - 1),
         |    i -> ws[i] || ' ' || ws[i + 1])) AS b
         |  FROM tk),
-        |bg AS (SELECT DISTINCT doc_id, ${h60Sql.format("b")} AS g FROM bg0),
+        |bg AS (SELECT DISTINCT doc_id, ${Hash60.sql("b")} AS g FROM bg0),
         |dft AS (SELECT g, count(*) AS df FROM bg GROUP BY g)
         |SELECT doc_id, count(*)::BIGINT AS n_bigrams,
         |  sum(CASE WHEN df = 1 THEN 1 ELSE 0 END)::BIGINT AS n_unique,

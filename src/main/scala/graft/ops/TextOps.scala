@@ -21,11 +21,6 @@ import Tables._
   */
 object TextOps extends Pack {
 
-  /** 60-bit deterministic hash shared with the DuckDB oracle. */
-  private def h60(c: Column): Column =
-    call_function("graft_h60", c) // native one-pass kernel (r20); registered by Tables.t
-  private val h60Sql = "('0x'||substr(md5(%s),1,15))::BIGINT"
-
   /** DEFLATE-ratio quality gate (the CCNet/Gopher-style compressibility
     * signal): per document, UTF-8 byte count, deflated byte count, and
     * ratio in permille. Highly compressible text (low ratio) is
@@ -186,7 +181,6 @@ object TextOps extends Pack {
   private[ops] val ExpandBlock = 64
 
   private def minhashAllPairs(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     val sigs = sigsOf(t(s, d, "documents").select(col("doc_id"), col("text")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("sig")).orderBy(col("doc_id"))
@@ -260,7 +254,6 @@ object TextOps extends Pack {
   }
 
   private def minhashComponents(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     val sigs = sigsOf(t(s, d, "documents").select(col("doc_id"), col("text")))
       .persist()
     val groups = sigs.groupBy(col("sig")).agg(min(col("doc_id")).as("rep"))
@@ -291,7 +284,6 @@ object TextOps extends Pack {
     * null fingerprint and are filtered, mirroring the no-group form.
     */
   private[ops] def simhashOf(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     t(s, d, "documents")
       .select(col("doc_id"),
         call_function("graft_simhash32", col("text")).as("simhash"))
@@ -671,7 +663,7 @@ object TextOps extends Pack {
     "text_fingerprint" -> ((s, d) => {
       val norm = regexp_replace(lower(trim(col("text"))), "\\s+", " ")
       t(s, d, "documents")
-        .select(col("doc_id"), md5(norm).as("fp_md5"), h60(norm).as("fp60"))
+        .select(col("doc_id"), md5(norm).as("fp_md5"), Hash60(norm).as("fp60"))
         .orderBy("doc_id")
     }),
 
@@ -692,7 +684,6 @@ object TextOps extends Pack {
       // fold(nfc(messy)) == original — true on every row by
       // construction, a self-auditing column. Narrow per-row map; the
       // only shuffle is the final ORDER BY.
-      graft.expressions.GraftFunctions.register(s)
       val messy = when(pmod(col("doc_id"), lit(3)) === 0,
           // PRECOMPOSED accents U+00E1/E9/ED/F3/FA, escape-explicit: a 1:1
           // codepoint map is what translate() requires
@@ -859,7 +850,7 @@ object TextOps extends Pack {
       // 100 TB, sampling must be reproducible across runs, retries and
       // engines — rand() is none of those; a keyed hash mod is all three.
       t(s, d, "documents")
-        .filter(h60(concat(col("lang"), lit("#"), col("doc_id").cast("string"))) % 100 < 10)
+        .filter(Hash60(concat(col("lang"), lit("#"), col("doc_id").cast("string"))) % 100 < 10)
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_sampled"), min(col("doc_id")).as("first_doc"))
         .orderBy("lang")
@@ -879,7 +870,7 @@ object TextOps extends Pack {
       val grams = docs
         .select(col("doc_id"), explode(expr(
           "transform(sequence(1, size(ws)-3), i -> array_join(slice(ws, i, 4), ' '))")).as("gram"))
-        .select(col("doc_id"), h60(col("gram")).as("g"))
+        .select(col("doc_id"), Hash60(col("gram")).as("g"))
         .distinct()
         .persist() // consumed by both the benchmark side and the corpus side
       val bench = grams.filter(col("doc_id") < 5).select(col("g")).distinct()
@@ -2141,7 +2132,7 @@ object TextOps extends Pack {
         |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     "text_fingerprint" ->
-      ("""SELECT doc_id, md5(nt) AS fp_md5, """ + h60Sql.format("nt") + """ AS fp60
+      ("""SELECT doc_id, md5(nt) AS fp_md5, """ + Hash60.sql("nt") + """ AS fp60
         |FROM (SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS nt FROM documents)
         |ORDER BY doc_id""").stripMargin,
 
@@ -2170,7 +2161,7 @@ object TextOps extends Pack {
 
     "dedup_simhash" ->
       (s"""WITH tok AS (
-         |  SELECT doc_id, w, count(*) AS wt, """ + h60Sql.format("w") + s""" AS h
+         |  SELECT doc_id, w, count(*) AS wt, """ + Hash60.sql("w") + s""" AS h
          |  FROM (SELECT doc_id, unnest($tokSql) AS w FROM documents)
          |  WHERE w <> '' GROUP BY doc_id, w),
          |bal AS (
@@ -2185,7 +2176,7 @@ object TextOps extends Pack {
 
     "dedup_simhash_near" ->
       (s"""WITH tok AS (
-         |  SELECT doc_id, w, count(*) AS wt, """ + h60Sql.format("w") + s""" AS h
+         |  SELECT doc_id, w, count(*) AS wt, """ + Hash60.sql("w") + s""" AS h
          |  FROM (SELECT doc_id, unnest($tokSql) AS w FROM documents)
          |  WHERE w <> '' GROUP BY doc_id, w),
          |bal AS (
@@ -2209,7 +2200,7 @@ object TextOps extends Pack {
 
     "dedup_simhash_clusters" ->
       (s"""WITH tok AS (
-         |  SELECT doc_id, w, count(*) AS wt, """ + h60Sql.format("w") + s""" AS h
+         |  SELECT doc_id, w, count(*) AS wt, """ + Hash60.sql("w") + s""" AS h
          |  FROM (SELECT doc_id, unnest($tokSql) AS w FROM documents)
          |  WHERE w <> '' GROUP BY doc_id, w),
          |bal AS (
@@ -2242,7 +2233,7 @@ object TextOps extends Pack {
 
     "dedup_minhash" ->
       (s"""WITH tok AS (
-         |  SELECT DISTINCT doc_id, (""" + h60Sql.format("w") + s""") % 2147483647 AS hp
+         |  SELECT DISTINCT doc_id, (""" + Hash60.sql("w") + s""") % 2147483647 AS hp
          |  FROM (SELECT doc_id, unnest($tokSql) AS w FROM documents) WHERE w <> ''),
          |sig AS (
          |  SELECT doc_id, j, min(((97 + 13*j) * hp + (31 + 7*j)) % 2147483647) AS mh
@@ -2269,7 +2260,7 @@ object TextOps extends Pack {
     // clusters over the exact same candidate/verify arithmetic
     "dedup_minhash_clusters" ->
       (s"""WITH tok AS (
-         |  SELECT DISTINCT doc_id, (""" + h60Sql.format("w") + s""") % 2147483647 AS hp
+         |  SELECT DISTINCT doc_id, (""" + Hash60.sql("w") + s""") % 2147483647 AS hp
          |  FROM (SELECT doc_id, unnest($tokSql) AS w FROM documents) WHERE w <> ''),
          |sig AS (
          |  SELECT doc_id, j, min(((97 + 13*j) * hp + (31 + 7*j)) % 2147483647) AS mh
@@ -2305,7 +2296,7 @@ object TextOps extends Pack {
     // the closure above, folded into the per-language keep/drop datasheet
     "dedup_minhash_drop" ->
       (s"""WITH tok AS (
-         |  SELECT DISTINCT doc_id, (""" + h60Sql.format("w") + s""") % 2147483647 AS hp
+         |  SELECT DISTINCT doc_id, (""" + Hash60.sql("w") + s""") % 2147483647 AS hp
          |  FROM (SELECT doc_id, unnest($tokSql) AS w FROM documents) WHERE w <> ''),
          |sig AS (
          |  SELECT doc_id, j, min(((97 + 13*j) * hp + (31 + 7*j)) % 2147483647) AS mh
@@ -2388,14 +2379,14 @@ object TextOps extends Pack {
     "sample_stratified" ->
       ("""SELECT lang, count(*) AS n_sampled, min(doc_id) AS first_doc
         |FROM documents
-        |WHERE (""" + h60Sql.format("lang || '#' || doc_id::VARCHAR") + """) % 100 < 10
+        |WHERE (""" + Hash60.sql("lang || '#' || doc_id::VARCHAR") + """) % 100 < 10
         |GROUP BY lang ORDER BY lang""").stripMargin,
 
     "text_decontaminate" ->
       (s"""WITH docs AS (
          |  SELECT doc_id, $tokSql AS ws FROM documents WHERE len($tokSql) >= 4),
          |grams AS (
-         |  SELECT DISTINCT doc_id, (""" + h60Sql.format("gram") + s""") AS g FROM (
+         |  SELECT DISTINCT doc_id, (""" + Hash60.sql("gram") + s""") AS g FROM (
          |    SELECT doc_id, unnest(list_transform(generate_series(1, len(ws)-3),
          |      i -> array_to_string(ws[i:i+3], ' '))) AS gram FROM docs)),
          |bench AS (SELECT DISTINCT g FROM grams WHERE doc_id < 5)

@@ -28,9 +28,6 @@ object TrainingDataPrep {
       input: Long, afterQuality: Long, afterExactDedup: Long,
       afterNearDedup: Long, afterDecontam: Long, sampled: Long)
 
-  private def h60(c: Column): Column =
-    call_function("graft_h60", c) // native one-pass kernel (r20); registered by Tables.t
-
   /** The text_quality operating point (same predicate as the oracle-checked
     * query): plausible length, enough tokens, bounded punctuation density.
     */
@@ -67,7 +64,7 @@ object TrainingDataPrep {
       .filter(size(col("ws")) >= 4)
       .select(col("doc_id"), explode(expr(
         "transform(sequence(1, size(ws)-3), i -> array_join(slice(ws, i, 4), ' '))")).as("gram"))
-      .select(col("doc_id"), h60(col("gram")).as("g"))
+      .select(col("doc_id"), Hash60(col("gram")).as("g"))
       .distinct()
     grams(docs).join(grams(bench).select("g").distinct(), Seq("g"), "left_semi")
       .select("doc_id").distinct()
@@ -98,7 +95,7 @@ object TrainingDataPrep {
     val sampled =
       if (samplePct == 100) clean
       else clean.filter(
-        h60(concat(col("lang"), lit("#"), col("doc_id").cast("string"))) % 100 < samplePct)
+        Hash60(concat(col("lang"), lit("#"), col("doc_id").cast("string"))) % 100 < samplePct)
     val stats =
       if (!withStats) None
       else Some(PrepStats(docs.count(), quality.count(), exact.count(),

@@ -103,7 +103,6 @@ object VectorOps extends Pack {
     * true near-dups, by design not exhaustive at the loose 0.3 threshold).
     */
   private[ops] def embcosNearPairs(s: SparkSession, d: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(s)
     // band rows carry ALL FOUR sigs (32 extra bytes/row) so the join can
     // emit a multi-band-agreeing pair ONLY at its first agreeing band — an
     // in-row check replacing the old post-join distinct(), which was an
@@ -159,7 +158,6 @@ object VectorOps extends Pack {
       // equi-join their label's centroid (broadcast: one row per
       // label) and fold per-row dots in codegen'd graft_dot_i64; one
       // final map-side-combinable per-label rollup.
-      graft.expressions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
         .select(col("vec_id"), col("label").cast("long").as("label"),
           qvec(col("embedding")).as("q"))
@@ -203,10 +201,7 @@ object VectorOps extends Pack {
       // expression (graft.expressions.DotProductI64) instead of interpreted
       // aggregate(zip_with(...)) lambdas — same rows, same oracle; the bench
       // delta between the two IS the higher-order-function interpretation
-      // overhead. Registered on the session at query-build time (idempotent)
-      // so driver-built sessions work; GraftExtensions covers
-      // builder-configured deployments.
-      graft.expressions.GraftFunctions.register(s)
+      // overhead.
       val emb = t(s, d, "embeddings").select(col("vec_id"), qvec(col("embedding")).as("q"))
       val probe = emb.filter(col("vec_id") === 0).select(col("q").as("pq"))
       emb.filter(col("vec_id") =!= 0)
@@ -244,7 +239,6 @@ object VectorOps extends Pack {
       // round; fit(maxRounds=1) + summarize is bit-equal to the inline
       // seed -> assign -> update -> re-assign chain (parity pinned in
       // KMeansSpec).
-      graft.expressions.GraftFunctions.register(s)
       val vecs = t(s, d, "embeddings")
         .select(col("vec_id"),
           expr("transform(embedding, x -> bigint(round(double(x) * 1000)) + 1000L)").as("v"))
@@ -266,7 +260,6 @@ object VectorOps extends Pack {
       // ml_kmeans (k literal centroids fold in-row); then one
       // (cell, label) count and a k-row argmax rollup, both map-side
       // combinable; the label join is vec_id-keyed on the same scan.
-      graft.expressions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
       val vecs = emb
         .select(col("vec_id"),
@@ -300,7 +293,6 @@ object VectorOps extends Pack {
       // representable small ints, floored) so both engines build
       // bit-identical codes. At 100 TB stage 1 reads 65 B/vector instead
       // of 512 B — the scan, not the math, is what SQ8 buys down.
-      graft.expressions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
         .select(col("vec_id"), qvec(col("embedding")).as("q"))
         .withColumn("m", greatest(array_max(transform(col("q"), abs(_))), lit(1L)))
@@ -332,7 +324,6 @@ object VectorOps extends Pack {
       // would be a separate (16-dim) column family so stage 1 reads
       // 1/4 of the bytes; integers end to end, both stages
       // engine-identical.
-      graft.expressions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
         .select(col("vec_id"), qvec(col("embedding")).as("q"))
         .withColumn("head", expr("slice(q, 1, 16)"))
@@ -358,7 +349,6 @@ object VectorOps extends Pack {
       // arithmetic on both engines. The 4-row probe side broadcasts (the
       // allowlisted tiny-broadcast BNLJ of the sim_* family); dots run in
       // the codegen'd graft_dot_i64 kernel.
-      graft.expressions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
         .select(col("vec_id"), qvec(col("embedding")).as("q"))
         .withColumn("n2", call_function("graft_dot_i64", col("q"), col("q")))
@@ -415,7 +405,6 @@ object VectorOps extends Pack {
       // cell scoring is a 10-row broadcast; the candidate scan is a
       // semi-join on label — partition the corpus BY cell at rest and it
       // prunes to 2 file groups before the scan.
-      graft.expressions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
         .select(col("vec_id"), col("label"), qvec(col("embedding")).as("q"))
         .persist()
@@ -469,7 +458,6 @@ object VectorOps extends Pack {
       // IVF dial: within-(sub)cell by construction, raise it by probing
       // adjacent subcells. The two counts are one control-plane job at
       // construction (the fuzzy-cap/keyset-cursor precedent).
-      graft.expressions.GraftFunctions.register(s)
       val stats = t(s, d, "embeddings")
         .agg(count(lit(1)), countDistinct(col("label"))).head()
       val m = (stats.getLong(0) - 1) / (stats.getLong(1) * 256L)
@@ -507,7 +495,6 @@ object VectorOps extends Pack {
       // similarity — on this synthetic corpus (random unit vectors, best
       // cos ~0.37) it keeps ~1 of the brute-force top-20, by design. Tune
       // bands/bits (and multi-probe) to the corpus at deployment.
-      graft.expressions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
         .select(col("vec_id"), qvec(col("embedding")).as("q"))
         .persist()
@@ -545,7 +532,6 @@ object VectorOps extends Pack {
       // only its local top-10 per nprobe — bounded rows reach the
       // shuffle); the cell-rank window rides the |cells| centroid frame
       // (allowlisted, domain-bounded).
-      graft.expressions.GraftFunctions.register(s)
       val emb = t(s, d, "embeddings")
         .select(col("vec_id"), col("label"), qvec(col("embedding")).as("q"))
         .persist()

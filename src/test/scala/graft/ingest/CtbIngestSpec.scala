@@ -339,4 +339,69 @@ class CtbIngestSpec extends AnyFunSuite with SparkSpec {
     assert(res.errors.count() == 2)
     assert(res.clean.count() == 0)
   }
+
+  /** Spark jobs started on this thread while `body` runs, counted by a
+    * listener filtered on a job group; the bus is drained before reading.
+    */
+  private def jobsOf(tag: String)(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == tag))
+          n.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(tag, tag, interruptOnCancel = false)
+    try body
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.GraftTestHooks.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    n.get
+  }
+
+  test("building ingestFile launches no more jobs than ingestMany on the same file") {
+    val rows = (1 to 2000).map(i => validRow(Map(0 -> f"J$i%04d")).mkString("\t"))
+    val f = writeTsv(headerLine +: rows).toString
+    val prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try Seq(prev, "4096").foreach { mpb =>
+      spark.conf.set("spark.sql.files.maxPartitionBytes", mpb)
+      if (mpb == "4096") assert(spark.read.text(f).rdd.getNumPartitions > 4)
+      val single = jobsOf(s"ingestFile-$mpb")(CtbIngest.ingestFile(spark, f))
+      val multi = jobsOf(s"ingestMany-$mpb")(CtbIngest.ingestMany(spark, f))
+      assert(multi >= 1, s"maxPartitionBytes=$mpb: the listener saw no ingestMany job")
+      assert(single <= multi, s"maxPartitionBytes=$mpb: ingestFile $single jobs, ingestMany $multi")
+    } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+  }
+
+  test("ingestFile on a directory of one CTB file and a 0-byte file ingests the CTB file") {
+    val dir = Files.createTempDirectory("ctbonezero")
+    Files.write(dir.resolve("zero.tsv"), Array.empty[Byte])
+    Files.write(dir.resolve("ok.tsv"), Seq(
+      Seq("Org Code", "Demand Qty", "Demand Due Date").mkString("\t"),
+      "AAA\t1,234\t2025-01-02", "BBB\tx\t2025-01-03").mkString("\n")
+      .getBytes(StandardCharsets.UTF_8))
+    val res = CtbIngest.ingestFile(spark, dir.toString)
+    assert(!res.fileFailed && res.failureReason.isEmpty)
+    assert(res.clean.columns.toSeq == Seq("ORG_CODE", "DEMAND_QTY", "DEMAND_DUE_DATE"))
+    val row = res.clean.collect().toSeq match { case Seq(r) => r }
+    assert(row.getString(0) == "AAA" && row.getLong(1) == 1234L &&
+      row.getDate(2).toString == "2025-01-02")
+    assert(res.errors.columns.toSeq == Seq("error"))
+    assert(res.errors.collect().map(_.getString(0)).toSeq ==
+      Seq("Row 3: Could not convert 'x' to INTEGER for column 'DEMAND_QTY'."))
+  }
+
+  test("ingestFile on an empty directory fails as an empty file") {
+    val res = CtbIngest.ingestFile(spark, Files.createTempDirectory("ctbnone").toString)
+    assert(res.fileFailed)
+    assert(res.failureReason.contains("File is empty"))
+    assert(res.clean.columns.toSeq == graft.schema.CtbSchema.canonicalColumns)
+    assert(res.clean.isEmpty)
+    assert(res.errors.columns.toSeq == Seq("error"))
+    assert(res.errors.isEmpty)
+  }
 }
