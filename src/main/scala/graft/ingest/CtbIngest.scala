@@ -189,7 +189,8 @@ object CtbIngest {
     *
     * How it scales past the sequential per-file driver loop:
     *   1. per-(file, partition) stats — counts, min id, min/max non-blank
-    *      id — come from one aggregation (a few rows per partition);
+    *      id — come from one job that folds each partition's rows in its
+    *      own task (a few rows per partition, no shuffle);
     *      per-file line numbers are then `_mid + adjust(file, partition)`,
     *      with no global sort. Within one file, equal-size text splits
     *      keep offset order under Spark's stable size-descending packing,
@@ -208,8 +209,8 @@ object CtbIngest {
     * The file list comes from (1) too, so a caller needs no separate
     * `input_file_name` pass to learn which files the batch held.
     *
-    * Whole-file failures (empty, header-only, unknown columns) affect only
-    * their file and are reported in `fileFailed`.
+    * Whole-file failures (empty, header-only, unknown or repeated
+    * columns) affect only their file and are reported in `fileFailed`.
     *
     * The literal lookup maps grow with #files × #partitions-per-file —
     * bounded in streaming use by `maxFilesPerTrigger`; a millions-of-files
@@ -238,24 +239,34 @@ object CtbIngest {
     // numbers never come from a Window (a round-1 scale bug: a
     // no-partition Window forced the whole file through one task). The
     // pass also carries each chunk's first non-blank line, so the header
-    // needs no second pass.
-    val statRows = ids.groupBy(col("_file"), col("_pid")).agg(
-        count(lit(1)).as("n"), min(col("_mid")).as("m0"),
-        min(when(nonblank, col("_mid"))).as("nbMin"),
-        max(when(nonblank, col("_mid"))).as("nbMax"),
-        min_by(col("value"), when(nonblank, col("_mid"))).as("nbFirst"))
-      .collect()
+    // needs no second pass. A (file, partition) key never spans two
+    // partitions, so each task folds its own rows — in `_mid` order — and
+    // the pass is one job with no shuffle. Per key: (partition, rows,
+    // first `_mid`, first non-blank (`_mid`, line), last non-blank `_mid`).
+    type Chunk = (Int, Long, Long, Option[(Long, String)], Option[Long])
+    val statRows: Array[(String, Chunk)] = ids
+      .select(col("_file"), col("_pid"), col("_mid"), nonblank, col("value"))
+      .rdd.mapPartitions { rows =>
+        val chunks = scala.collection.mutable.LinkedHashMap.empty[String, Chunk]
+        rows.foreach { r =>
+          val mid = r.getLong(2)
+          val (pid, n, m0, first, last) =
+            chunks.getOrElse(r.getString(0), (r.getInt(1), 0L, mid, None, None))
+          chunks(r.getString(0)) =
+            if (r.getBoolean(3)) (pid, n + 1, m0, first.orElse(Some((mid, r.getString(4)))), Some(mid))
+            else (pid, n + 1, m0, first, last)
+        }
+        chunks.iterator
+      }.collect()
 
     val failures = scala.collection.mutable.Map[String, String]()
 
     // per-file chunk bookkeeping -> adjust / header / last line numbers
     final case class FileMeta(
         adjust: Map[Int, Long], hdrLineno: Long, lastLineno: Long, header: String)
-    val metas: Map[String, FileMeta] = statRows.groupBy(_.getString(0)).flatMap {
+    val metas: Map[String, FileMeta] = statRows.groupBy(_._1).flatMap {
       case (file, rows) =>
-        val chunks = rows.map(r => (r.getInt(1), r.getLong(2), r.getLong(3),
-            if (r.isNullAt(4)) None else Some((r.getLong(4), r.getString(6))),
-            if (r.isNullAt(5)) None else Some(r.getLong(5))))
+        val chunks = rows.map(_._2)
           .sortBy(_._1) // pid order = offset order within one file (see above)
         if (chunks.forall(_._4.isEmpty)) {
           failures(file) = "File is empty" // B1
@@ -282,13 +293,20 @@ object CtbIngest {
         }
     }
 
-    // B3+B4+B5 per file; group survivors by canonical layout
+    // B3+B4+B5 per file; group survivors by canonical layout. A header that
+    // names one canonical column twice fails its file by name (FIXTURES.md
+    // §1): the reference's row dict would keep the last field and still
+    // validate both, which one value per column cannot express.
     val canonicalByFile: Map[String, Seq[String]] = metas.flatMap {
       case (file, meta) =>
         val canonical = meta.header.split("\t", -1).toSeq.map(CtbSchema.canonicalName)
         val unknown = canonical.filterNot(columnTypes.contains)
+        val repeated = canonical.diff(canonical.distinct).distinct
         if (unknown.nonEmpty) {
           failures(file) = s"Schema mismatch. Unknown columns: ${unknown.mkString(", ")}" // B5
+          None
+        } else if (repeated.nonEmpty) {
+          failures(file) = s"Schema mismatch. Repeated columns: ${repeated.mkString(", ")}"
           None
         } else Some(file -> canonical)
     }
@@ -325,7 +343,7 @@ object CtbIngest {
 
     MultiIngestResult(
       tagged = groups.reduceOption(_ unionByName _).getOrElse(emptyTagged),
-      files = statRows.map(_.getString(0)).distinct.sorted.toSeq,
+      files = statRows.map(_._1).distinct.sorted.toSeq,
       fileFailed = failures.toMap,
       layouts = canonicalByFile)
   }

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -18,11 +18,14 @@ import org.apache.spark.sql.types.StructType
   * accounting — a failing batch records its error and the loop continues;
   * the file counts as successfully processed iff at least one row landed.
   * Slices are cut on the driver from row-id runs read back in one job (no
-  * global sort, no per-slice count); the per-batch commit loop itself is a
-  * faithful reproduction of the reference's RPC batching — at production
-  * scale a connector's own batched writer replaces it (Spark's file
-  * committer is all-or-nothing per job, which cannot express the
-  * reference's partial success).
+  * global sort, no per-slice count). The parquet default then writes every
+  * slice in ONE staged job, partitioned by slice number into a staging
+  * directory inside the sink, and publishes each slice on its own by
+  * renaming its staged files into the sink: a slice whose publish fails
+  * records that batch's error and the others still land, which is the
+  * reference's per-batch partial success at one job per commit instead of
+  * one per batch. A caller's own batch writer (a JDBC connection's
+  * transactions in [[SinkJdbc]]) still gets one write per slice.
   */
 object Sink {
 
@@ -158,7 +161,7 @@ object Sink {
     *
     * @param writeBatch pluggable batch writer (tests inject failures to
     *                   exercise the partial-success accounting); default
-    *                   appends parquet.
+    *                   is the staged parquet write of [[appendBatchedByKey]].
     */
   def appendBatched(
       clean: DataFrame,
@@ -181,12 +184,17 @@ object Sink {
     * one partition carry consecutive ids whatever the partition layout.
     * One job reads back each partition's (key, first id, row count) runs;
     * the driver cuts every key's runs into exact slices —
-    * `ceil(rows / batchSize)` per key, sizes known — and the only other
-    * jobs are the writes, one per slice.
+    * `ceil(rows / batchSize)` per key, sizes known. The parquet default
+    * then launches one more job, the staged write of every slice (see
+    * [[stage]]), and publishes each slice by rename; a failed publish
+    * fails that slice alone, a failed staged write fails every slice with
+    * its cause and lands nothing. A caller's `writeBatch` gets one job per
+    * slice instead.
     *
     * @param keyCol        non-null string column naming each row's key
     * @param writeBatchOpt `writeBatch(slice, i)` gets the slice's 0-based
-    *                      index within its key; default appends parquet
+    *                      index within its key; default: the staged
+    *                      parquet write into `path`
     * @return the accounting of every key that has at least one row
     */
   def appendBatchedByKey(
@@ -194,10 +202,20 @@ object Sink {
       keyCol: String,
       path: String,
       batchSize: Int,
-      writeBatchOpt: Option[(DataFrame, Long) => Unit] = None): Map[String, BatchedWriteResult] = {
+      writeBatchOpt: Option[(DataFrame, Long) => Unit] = None): Map[String, BatchedWriteResult] =
+    appendByKey(rows, keyCol, path, batchSize, writeBatchOpt, publish)
+
+  /** [[appendBatchedByKey]] with the publish step of the staged write as a
+    * parameter, so a test can fail one slice's publish.
+    */
+  private[ingest] def appendByKey(
+      rows: DataFrame,
+      keyCol: String,
+      path: String,
+      batchSize: Int,
+      writeBatchOpt: Option[(DataFrame, Long) => Unit],
+      publishSlice: (FileSystem, Path, Path) => Unit): Map[String, BatchedWriteResult] = {
     require(batchSize >= 1, s"appendBatched: batchSize must be >= 1, got $batchSize")
-    val writeBatch = writeBatchOpt.getOrElse(
-      (df: DataFrame, _: Long) => df.write.mode("append").parquet(path))
     val withIds = rows
       .withColumn(RowId, monotonically_increasing_id())
       .sortWithinPartitions(col(keyCol), col(RowId))
@@ -215,25 +233,92 @@ object Sink {
         }
         out.iterator
       }.collect()
-      runs.groupBy(_._1).toSeq.sortBy(_._1).map { case (key, keyRuns) =>
-        val slices = cut(keyRuns.map(r => (r._2, r._3)).sortBy(_._1).toSeq, batchSize)
-        var inserted = 0L
-        val errors = Seq.newBuilder[String]
-        slices.zipWithIndex.foreach { case (ranges, i) =>
-          val slice = withIds
-            .filter(ranges.map { case (a, b) => col(RowId).between(a, b) }.reduce(_ || _))
-            .drop(RowId, keyCol)
-          try {
-            writeBatch(slice, i.toLong)
-            inserted += ranges.map { case (a, b) => b - a + 1 }.sum
-          } catch {
-            case e: Exception =>
-              errors += s"Batch ${i + 1} insertion failed: ${e.getMessage}"
+      val slicesByKey = runs.groupBy(_._1).toSeq.sortBy(_._1).map { case (key, keyRuns) =>
+        key -> cut(keyRuns.map(r => (r._2, r._3)).sortBy(_._1).toSeq, batchSize)
+      }
+      // the per-batch loop: `land(g, i, ranges)` lands one slice, given its
+      // global number, its index within its key and its id ranges
+      def account(land: (Int, Long, Seq[(Long, Long)]) => Unit): Map[String, BatchedWriteResult] = {
+        val firstSlice = slicesByKey.map(_._2.length).scanLeft(0)(_ + _)
+        slicesByKey.zip(firstSlice).map { case ((key, slices), g0) =>
+          var inserted = 0L
+          val errors = Seq.newBuilder[String]
+          slices.zipWithIndex.foreach { case (ranges, i) =>
+            try {
+              land(g0 + i, i.toLong, ranges)
+              inserted += ranges.map { case (a, b) => b - a + 1 }.sum
+            } catch {
+              case e: Exception =>
+                errors += s"Batch ${i + 1} insertion failed: ${e.getMessage}"
+            }
           }
+          key -> BatchedWriteResult(inserted, slices.length, errors.result())
+        }.toMap
+      }
+      writeBatchOpt match {
+        case Some(writeBatch) => account { (_, i, ranges) =>
+          writeBatch(withIds
+            .filter(ranges.map { case (a, b) => col(RowId).between(a, b) }.reduce(_ || _))
+            .drop(RowId, keyCol), i)
         }
-        key -> BatchedWriteResult(inserted, slices.length, errors.result())
-      }.toMap
+        case None =>
+          val sink = new Path(path)
+          val fs = sink.getFileSystem(rows.sparkSession.sparkContext.hadoopConfiguration)
+          val staging = new Path(sink, s"_staging-${java.util.UUID.randomUUID}")
+          try {
+            val staged = scala.util.Try(if (slicesByKey.nonEmpty)
+              stage(withIds.drop(keyCol), slicesByKey.flatMap(_._2), staging))
+            account { (g, _, _) =>
+              staged.get // a failed staged write fails every slice with its cause
+              publishSlice(fs, new Path(staging, s"$Slice=$g"), sink)
+            }
+          } finally fs.delete(staging, true): Unit
+      }
     } finally withIds.unpersist(false)
+  }
+
+  private val Slice = "_sink_slice"
+
+  /** The staged write: ONE job tags each row with its slice's global
+    * number — the slice of the range holding its id, found by binary
+    * search over every range's start (the ranges tile the ids) — and
+    * writes the rows partitioned by it under `staging`, one
+    * `_sink_slice=g` directory per slice. `staging` is a `_`-prefixed
+    * child of the sink with no `=` in its name, so Spark's file index and
+    * pyarrow skip it while it exists, and every publish rename stays on
+    * the sink's filesystem.
+    */
+  private def stage(withIds: DataFrame, slices: Seq[Seq[(Long, Long)]], staging: Path): Unit = {
+    val byStart = slices.zipWithIndex
+      .flatMap { case (ranges, g) => ranges.map { case (a, _) => (a, g) } }
+      .sortBy(_._1)
+    val starts = byStart.map(_._1).toArray
+    val sliceOf = byStart.map(_._2).toArray
+    val tag = udf { (rid: Long) =>
+      val i = java.util.Arrays.binarySearch(starts, rid)
+      sliceOf(if (i >= 0) i else -i - 2)
+    }
+    withIds.withColumn(Slice, tag(col(RowId))).drop(RowId)
+      .write.partitionBy(Slice).parquet(staging.toString)
+  }
+
+  /** Publishes one staged slice directory: renames each of its files into
+    * `sink`. A staged file name (`part-<task>-<job uuid>…`) repeats across
+    * the slice directories of one job, so the slice number is added to
+    * make it unique in the sink. If a rename fails, the files this slice
+    * already moved are deleted, so a slice lands whole or not at all.
+    */
+  private[ingest] def publish(fs: FileSystem, slice: Path, sink: Path): Unit = {
+    val g = slice.getName.stripPrefix(s"$Slice=")
+    val moved = scala.collection.mutable.ArrayBuffer.empty[Path]
+    try fs.listStatus(slice).map(_.getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+      .foreach { p =>
+        val to = new Path(sink, s"part-s$g-${p.getName.stripPrefix("part-")}")
+        if (!fs.rename(p, to)) throw new java.io.IOException(s"could not rename $p to $to")
+        moved += to
+      }
+    catch { case e: Exception => moved.foreach(fs.delete(_, false)); throw e }
   }
 
   /** Cuts one key's id runs — (first id, row count), in id order — into

@@ -17,11 +17,13 @@ import org.apache.spark.sql.functions._
   *   - [[tableExists]] / [[init]]: the C2 precondition — the reference
   *     refuses to auto-create the destination (`main.py:416-430`), so
   *     existence is a metadata probe and creation is an explicit step.
-  *   - [[appendBatched]]: the C3 partial-success loop — batch isolation
-  *     and accounting are [[Sink.appendBatched]]'s (shared code, not a
-  *     copy); only the per-batch writer changes to Spark's JDBC path.
-  *     A batch that violates a table constraint records its error and the
-  *     loop continues; the file is a success iff ≥1 row landed.
+  *   - [[appendBatched]]: the C3 partial-success loop — slicing, batch
+  *     isolation and accounting are [[Sink.appendBatched]]'s (shared code,
+  *     not a copy), through its caller-supplied writer: one JDBC append
+  *     per slice, since a slice's transaction cannot be staged and renamed
+  *     the way the parquet default publishes its slices. A batch that
+  *     violates a table constraint records its error and the loop
+  *     continues; the file is a success iff ≥1 row landed.
   *   - [[writeBatchIdempotent]]: the exactly-once upsert for REPLAYED
   *     micro-batches. A transactional sink admits a stronger recipe than
   *     the parquet twin's directory overwrite: DELETE the batch's prior

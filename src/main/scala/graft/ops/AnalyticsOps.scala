@@ -27,7 +27,7 @@ object AnalyticsOps extends Pack {
     */
   private val bandCte: String =
     s"""WITH tok AS (
-       |  SELECT doc_id, w, count(*) AS wt, ('0x'||substr(md5(w),1,15))::BIGINT AS h
+       |  SELECT doc_id, w, count(*) AS wt, ${Hash60.sql("w")} AS h
        |  FROM (SELECT doc_id, unnest($tokSql) AS w FROM documents)
        |  WHERE w <> '' GROUP BY doc_id, w),
        |bal AS (

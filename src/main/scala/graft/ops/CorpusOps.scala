@@ -1137,12 +1137,12 @@ object CorpusOps extends Pack {
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
 
     "dedup_winnowing" ->
-      """WITH base AS (
+      s"""WITH base AS (
         |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
         |  WHERE len(string_split(text, ' ')) >= 12),
         |g AS (
         |  SELECT doc_id, list_transform(generate_series(0, len(toks) - 4), i ->
-        |    ('0x' || substr(md5(array_to_string(list_slice(toks, i + 1, i + 4), ' ')), 1, 11))::BIGINT
+        |    ${Hash60.sql44("array_to_string(list_slice(toks, i + 1, i + 4), ' ')")}
         |      * 65536 + greatest(65535 - i, 0)) AS encs
         |  FROM base),
         |f AS (
@@ -1226,13 +1226,13 @@ object CorpusOps extends Pack {
         |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin,
 
     "dedup_cdc_chunks" ->
-      """WITH w AS (
+      s"""WITH w AS (
         |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents
         |  WHERE len(string_split(text, ' ')) >= 2),
         |b AS (
         |  SELECT doc_id, ws,
         |    list_filter(generate_series(2, len(ws)), i ->
-        |      ('0x'||substr(md5(ws[i-1] || ' ' || ws[i]),1,15))::BIGINT % 8 = 0) AS bs
+        |      ${Hash60.sql("ws[i-1] || ' ' || ws[i]")} % 8 = 0) AS bs
         |  FROM w),
         |ch AS (
         |  SELECT doc_id,
@@ -1240,7 +1240,7 @@ object CorpusOps extends Pack {
         |      list_zip(list_prepend(1, bs), list_append(bs, len(ws) + 1)),
         |      p -> array_to_string(ws[p[1] : p[2] - 1], ' '))) AS c
         |  FROM b),
-        |inst AS (SELECT doc_id, ('0x'||substr(md5(c),1,15))::BIGINT AS ch FROM ch),
+        |inst AS (SELECT doc_id, ${Hash60.sql("c")} AS ch FROM ch),
         |cdf AS (SELECT ch, count(DISTINCT doc_id)::BIGINT AS ndocs FROM inst GROUP BY ch)
         |SELECT doc_id, count(*)::BIGINT AS n_chunks,
         |  sum(CASE WHEN ndocs >= 2 THEN 1 ELSE 0 END)::BIGINT AS dup_chunks,
@@ -1531,17 +1531,17 @@ object CorpusOps extends Pack {
         |FROM walk GROUP BY p_partkey ORDER BY p_partkey""".stripMargin,
 
     "audit_checksum" ->
-      """WITH o AS (
-        |  SELECT ('0x'||substr(md5(
+      s"""WITH o AS (
+        |  SELECT ${Hash60.sql("""
         |    o_orderkey::VARCHAR || '|' || o_custkey::VARCHAR || '|' || o_orderstatus || '|' ||
         |    round(o_totalprice * 100)::BIGINT::VARCHAR || '|' ||
         |    floor(epoch(o_orderdate))::BIGINT::VARCHAR || '|' || o_orderpriority
-        |  ),1,15))::BIGINT AS h, o_orderkey AS k FROM orders),
+        |  """)} AS h, o_orderkey AS k FROM orders),
         |c AS (
-        |  SELECT ('0x'||substr(md5(
+        |  SELECT ${Hash60.sql("""
         |    c_custkey::VARCHAR || '|' || c_name || '|' || c_nationkey::VARCHAR || '|' ||
         |    round(c_acctbal * 100)::BIGINT::VARCHAR || '|' || c_mktsegment
-        |  ),1,15))::BIGINT AS h, c_custkey AS k FROM customer)
+        |  """)} AS h, c_custkey AS k FROM customer)
         |SELECT 'customer' AS tbl, count(*)::BIGINT AS n_rows, bit_xor(h) AS xor_sig,
         |       sum(h & 1099511627775)::BIGINT AS sum_sig, sum(k)::BIGINT AS key_sum FROM c
         |UNION ALL
@@ -1550,10 +1550,10 @@ object CorpusOps extends Pack {
         |ORDER BY tbl""".stripMargin,
 
     "text_feature_hash" ->
-      ("""WITH w AS (
+      (s"""WITH w AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
         |b AS (
-        |  SELECT doc_id, ('0x'||substr(md5(w),1,15))::BIGINT % 16 AS b
+        |  SELECT doc_id, ${Hash60.sql("w")} % 16 AS b
         |  FROM w WHERE w <> '')
         |SELECT doc_id, count(*)::BIGINT AS n_tokens,
         |""".stripMargin
@@ -1563,8 +1563,8 @@ object CorpusOps extends Pack {
         + "\nFROM b GROUP BY doc_id ORDER BY doc_id"),
 
     "dedup_minhash_curve" ->
-      """WITH tok AS (
-        |  SELECT DISTINCT doc_id, ('0x'||substr(md5(w),1,15))::BIGINT % 2147483647 AS hp
+      s"""WITH tok AS (
+        |  SELECT DISTINCT doc_id, ${Hash60.sql("w")} % 2147483647 AS hp
         |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)
         |  WHERE w <> ''),
         |sig AS (

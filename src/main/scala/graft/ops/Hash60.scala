@@ -13,4 +13,7 @@ object Hash60 {
 
   /** DuckDB twin of [[apply]] over the SQL expression `e`. */
   def sql(e: String): String = s"('0x'||substr(md5($e),1,15))::BIGINT"
+
+  /** DuckDB twin of `shiftright(apply(c), 16)`: the hash's top 44 bits. */
+  def sql44(e: String): String = s"('0x' || substr(md5($e), 1, 11))::BIGINT"
 }

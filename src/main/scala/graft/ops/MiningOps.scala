@@ -684,9 +684,9 @@ object MiningOps extends Pack {
          |    i -> array_to_string(ws[(i-1)*8 + 1 : (i-1)*8 + 8], ' '))) AS blk
          |  FROM base),
          |reps AS (
-         |  SELECT ('0x'||substr(md5(blk),1,15))::BIGINT AS bh,
+         |  SELECT ${Hash60.sql("blk")} AS bh,
          |         list_sort(list_distinct(list_transform(string_split(blk, ' '),
-         |           w -> ('0x'||substr(md5(w),1,15))::BIGINT))) AS th,
+         |           w -> ${Hash60.sql("w")}))) AS th,
          |         count(DISTINCT doc_id)::BIGINT AS n_docs
          |  FROM blk GROUP BY blk),
          |tok AS (SELECT bh, unnest(th) AS h FROM reps),
@@ -819,7 +819,7 @@ object MiningOps extends Pack {
 
     "graph_bfs_hops" ->
       (s"""WITH tok AS (
-         |  SELECT doc_id, w, count(*) AS wt, ('0x'||substr(md5(w),1,15))::BIGINT AS h
+         |  SELECT doc_id, w, count(*) AS wt, ${Hash60.sql("w")} AS h
          |  FROM (SELECT doc_id, unnest($tokSql) AS w FROM documents)
          |  WHERE w <> '' GROUP BY doc_id, w),
          |bal AS (

@@ -936,8 +936,8 @@ object ScaleOps extends Pack {
     // symbolic twin: same h60 over the decimal key, same (v & -v)
     // trailing-zero indicator, BIT_OR per bucket, first-zero register
     "agg_fm_sketch" ->
-      """WITH hx AS (
-        |  SELECT ('0x'||substr(md5(user_id::VARCHAR),1,15))::BIGINT AS h FROM events),
+      s"""WITH hx AS (
+        |  SELECT ${Hash60.sql("user_id::VARCHAR")} AS h FROM events),
         |terms AS (
         |  SELECT h % 16 AS bucket,
         |    CASE WHEN h // 16 = 0 THEN (1::BIGINT << 44)

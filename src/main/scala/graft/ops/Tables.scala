@@ -1,12 +1,13 @@
 package graft.ops
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.format.converter.ParquetMetadataConverter.{NO_FILTER, SKIP_ROW_GROUPS}
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType}
+import scala.jdk.CollectionConverters._
 
 /** Table access for the engine's query surface.
   *
@@ -61,6 +62,16 @@ object Tables {
         case _ => raw // already TimestampType
       }
     } else read(spark, s"$sfDir/$name.parquet")
+  }
+
+  /** Row count of table `name`, summed over its footer's row groups: a
+    * driver-side read that launches no job.
+    */
+  def rowCount(spark: SparkSession, sfDir: String, name: String): Long = {
+    val file = new Path(s"$sfDir/$name.parquet")
+    val conf = spark.sessionState.newHadoopConf()
+    ParquetFileReader.readFooter(conf, file.getFileSystem(conf).getFileStatus(file), NO_FILTER)
+      .getBlocks.asScala.map(_.getRowCount).sum
   }
 
   /** One parquet file read with its footer schema, resolved on the driver. */

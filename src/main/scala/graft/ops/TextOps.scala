@@ -1816,7 +1816,7 @@ object TextOps extends Pack {
       // The full media-corpus prep pipeline at sf scale — content dedup +
       // real-codec resize/trim/frame-sample over a generated corpus of
       // PPM/PNG/GIF/JPEG/TIFF/QOI/ICO/WAV/PPM-stream payloads
-      // ([[graft.sources.MediaGenSource]], ~200k payloads per unit sf),
+      // ([[graft.sources.MediaGenSource]], 4 payloads per document),
       // reduced to a per-kind datasheet of the DECODED-INPUT plane:
       // envelopes in, unique contents, contents that decode, kernel rows
       // emitted from decoded inputs, and the image branch's source/output
@@ -1844,8 +1844,7 @@ object TextOps extends Pack {
       // exchange (the content-dedup digest window); kernels are narrow
       // per-row maps; everything after is a 3-row frame.
       import s.implicits._
-      val sf = "sf([0-9.]+)".r.findFirstMatchIn(d).map(_.group(1).toDouble).getOrElse(0.01)
-      val rows = math.max(60L, (200000 * sf).toLong)
+      val rows = 4 * Tables.rowCount(s, d, "documents") // the corpus size the oracle uses
       val parts = s.conf.get("spark.sql.shuffle.partitions", "32")
       val env = s.read.format(classOf[graft.sources.MediaGenSource].getName)
         .option("rows", rows.toString).option("partitions", parts).load()
@@ -1922,8 +1921,7 @@ object TextOps extends Pack {
       // window, media_prep's documented shape); the decode pass is
       // per-row in-task; everything after is a ≤3-row frame.
       import s.implicits._
-      val sf = "sf([0-9.]+)".r.findFirstMatchIn(d).map(_.group(1).toDouble).getOrElse(0.01)
-      val rows = math.max(60L, (200000 * sf).toLong)
+      val rows = 4 * Tables.rowCount(s, d, "documents") // the corpus size the oracle uses
       val parts = s.conf.get("spark.sql.shuffle.partitions", "32")
       val env = s.read.format(classOf[graft.sources.MediaGenSource].getName)
         .option("rows", rows.toString).option("partitions", parts).load()
@@ -2422,9 +2420,8 @@ object TextOps extends Pack {
         |GROUP BY d.doc_id, d.n ORDER BY d.doc_id""".stripMargin,
 
     // media_datasheet: the whole MediaGen id-domain replayed symbolically.
-    // rows = 200000·sf = 4 × documents-count at the gate scales (documents
-    // is 50000·sf, floored at 500 — exact at sf0.01/sf0.1, where every
-    // oracle run happens). splitmix64 is re-implemented in HUGEINT
+    // rows = 4 × documents-count, which the Spark side reads from the
+    // documents footer, so the two agree at every scale. splitmix64 is re-implemented in HUGEINT
     // mod-2⁶⁴ arithmetic (xor + floor-div shifts + 32/32-split multiply);
     // poison uses Java's sign-of-dividend % on the SIGNED view, frames use
     // the unsigned low bits — both validated bit-equal against the JVM.

@@ -34,16 +34,16 @@ import java.util.concurrent.atomic.AtomicLong
   * try/except, main.py:662-677).
   *
   * Scale notes — the jobs one micro-batch launches, whatever its file count:
-  *   - parse (CtbIngest.ingestManyLines): one (file, partition) stats
-  *     aggregation, which also names the batch's files and carries their
-  *     headers (two jobs: the shuffle map stage and the result). The rows of
+  *   - parse (CtbIngest.ingestManyLines): one job of (file, partition)
+  *     stats, folded in each scan task with no shuffle, which also names
+  *     the batch's files and carries their headers. The rows of
   *     every file become ONE tagged frame (typed columns plus each row's
   *     errors), persisted once; clean rows and row errors are two filters
   *     over it. With one header layout this is one plan;
   *   - commit (Sink.appendBatchedByKey): one job reads back every file's
-  *     row-id runs, then one write per slice of at most `batchSize` rows —
-  *     the only jobs that grow with the data, as in the reference's batch
-  *     loop;
+  *     row-id runs, and ONE staged write job writes every slice of at most
+  *     `batchSize` rows; the driver then publishes each slice by rename,
+  *     so a slice still fails alone, as in the reference's batch loop;
   *   - accounting: one job for every file's row-error count and bounded
   *     notification sample, and ONE append into the error sink carrying the
   *     row errors and every whole-file failure of the batch.
@@ -55,11 +55,12 @@ object StreamIngest {
 
   final case class RunStats(filesSeen: Long, filesSucceeded: Long)
 
-  /** Serializes physical appends into the shared sink/error directories:
-    * concurrent append jobs into ONE directory race on the output
-    * committer's shared `_temporary` dir. JVM-wide on purpose: two
-    * concurrent drains against the same directories must not interleave
-    * committer state.
+  /** Serializes appends into the error directory: concurrent append jobs
+    * into ONE directory race on the output committer's shared
+    * `_temporary` dir. JVM-wide on purpose: two concurrent drains against
+    * the same directories must not interleave committer state. The sink
+    * needs no lock: each commit stages into its own directory and
+    * publishes by renames to names unique in the sink.
     */
   private val sinkLock = new Object
 
@@ -228,10 +229,7 @@ object StreamIngest {
       else try {
         val errStats = errorStats(multi.errors)
         Right((errStats, Sink.appendBatchedByKey(multi.clean, CtbIngest.SRC_FILE,
-          cfg.sinkDir, cfg.batchSize,
-          writeBatchOpt = Some((df, _) => sinkLock.synchronized {
-            df.write.mode("append").parquet(cfg.sinkDir)
-          }))))
+          cfg.sinkDir, cfg.batchSize)))
       } catch {
         // poison data surfacing at commit must not kill the run (E1)
         case e: Exception => Left(e.toString)

@@ -238,6 +238,15 @@ class CtbIngestSpec extends AnyFunSuite with SparkSpec {
     assert(res.clean.isEmpty)
   }
 
+  test("a header naming one canonical column twice fails the whole file by name") {
+    // raw spellings that differ but clean to the same canonical column
+    val res = ingest(Seq(
+      (rawHeaders.take(2) :+ "ORG_CODE").mkString("\t"),
+      (validRow().take(2) :+ "ORG2").mkString("\t")))
+    assert(res.fileFailed)
+    assert(res.failureReason.contains("Schema mismatch. Repeated columns: ORG_CODE"))
+  }
+
   test("B5 asymmetry: missing columns do NOT fail the file") {
     val partial = rawHeaders.take(8) // subset of known columns
     val row = validRow().take(8)

@@ -190,4 +190,117 @@ class SinkSpec extends AnyFunSuite with SparkSpec {
     assert(spark.read.parquet(path).as[Long].collect().sorted.toSeq ==
       Seq(1L, 2L, 3L, 4L, 5L, 6L, 7L, 9L, 11L, 13L))
   }
+
+  /** SQL executions `body` runs that plan a file insert. */
+  private def insertExecutions(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart
+            if s.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") =>
+          n.incrementAndGet(): Unit
+        case _ =>
+      }
+    }
+    org.apache.spark.GraftTestHooks.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try body
+    finally {
+      org.apache.spark.GraftTestHooks.drainListenerBus(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    n.get
+  }
+
+  /** Entries of the sink directory whose name starts with `_staging`. */
+  private def stagingLeft(path: String): Seq[String] =
+    Option(new java.io.File(path).listFiles()).toSeq.flatten.map(_.getName)
+      .filter(_.startsWith("_staging"))
+
+  /** Two keys over three partitions that keep input order: "a" holds the
+    * odd values of 1..23 (12 rows), "b" the even ones (11 rows).
+    */
+  private def twoKeys = {
+    import spark.implicits._
+    spark.sparkContext.parallelize((1 to 23).map(v => (v.toLong, if (v % 2 == 1) "a" else "b")), 3)
+      .toDF("v", "k")
+  }
+
+  test("staged write: every slice of two keys in one insert, each row landed once") {
+    import spark.implicits._
+    val path = tmp("sinkstaged")
+    Sink.init(spark, path, Seq.empty[Long].toDF("v").schema)
+    var res = Map.empty[String, Sink.BatchedWriteResult]
+    val inserts = insertExecutions {
+      res = Sink.appendBatchedByKey(twoKeys, "k", path, batchSize = 5)
+    }
+    assert(inserts == 1)
+    assert(res("a") == Sink.BatchedWriteResult(12, 3, Nil))
+    assert(res("b") == Sink.BatchedWriteResult(11, 3, Nil))
+    assert(spark.read.parquet(path).as[Long].collect().sorted.toSeq == (1L to 23L))
+    val names = new java.io.File(path).listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+    assert(names.distinct.length == names.length)
+    // 6 slices published next to the file of the empty init
+    assert(names.count(_.startsWith("part-s")) >= 6, names.toSeq)
+    assert(stagingLeft(path).isEmpty)
+    // a second append lands beside the first, under names of its own
+    Sink.appendBatchedByKey(twoKeys, "k", path, batchSize = 5)
+    assert(spark.read.parquet(path).count() == 46)
+    val names2 = new java.io.File(path).listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+    assert(names2.distinct.length == names2.length && names2.length > names.length)
+  }
+
+  test("staged write: a failed publish fails its slice alone; no staging dir is left") {
+    import spark.implicits._
+    val path = tmp("sinkpub")
+    Sink.init(spark, path, Seq.empty[Long].toDF("v").schema)
+    // global slice 1 is key "a"'s second slice (keys in order, then index)
+    val res = Sink.appendByKey(twoKeys, "k", path, 5, None,
+      (fs, slice, sink) =>
+        if (slice.getName.endsWith("=1")) throw new java.io.IOException("injected publish failure")
+        else Sink.publish(fs, slice, sink))
+    assert(res("a").attemptedBatches == 3 && res("a").insertedRows == 7)
+    assert(res("a").batchErrors == Seq("Batch 2 insertion failed: injected publish failure"))
+    assert(res("b") == Sink.BatchedWriteResult(11, 3, Nil))
+    // key "a"'s second slice is its 6th-10th rows in input order
+    val landed = spark.read.parquet(path).as[Long].collect().sorted.toSeq
+    assert(landed == (1L to 23L).filterNot(v => v % 2 == 1 && v >= 11 && v <= 19))
+    assert(stagingLeft(path).isEmpty)
+  }
+
+  test("staged write: a failing staged job fails every slice, lands nothing, leaves no staging") {
+    import spark.implicits._
+    val path = tmp("sinkjob")
+    Sink.init(spark, path, Seq.empty[Long].toDF("v").schema)
+    // no LZO codec on the classpath: each write task fails opening its file
+    val key = "spark.sql.parquet.compression.codec"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "lzo")
+    val res = try Sink.appendBatchedByKey(twoKeys, "k", path, batchSize = 5)
+      finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    Seq("a", "b").foreach { k =>
+      assert(res(k).insertedRows == 0 && res(k).attemptedBatches == 3)
+      assert(res(k).batchErrors.length == 3)
+      assert(res(k).batchErrors.zipWithIndex.forall { case (e, i) =>
+        e.startsWith(s"Batch ${i + 1} insertion failed: ") })
+    }
+    assert(res("a").batchErrors.map(_.dropWhile(_ != ':')).distinct.length == 1,
+      "every slice fails with the one cause")
+    assert(spark.read.parquet(path).count() == 0)
+    assert(stagingLeft(path).isEmpty)
+  }
+
+  test("a leftover staging directory is invisible to tableExists and readers") {
+    import spark.implicits._
+    val path = tmp("sinkleft")
+    val leftover = s"$path/_staging-crashed"
+    Seq((1L, 0), (2L, 1)).toDF("v", "_sink_slice").write.partitionBy("_sink_slice").parquet(leftover)
+    assert(!Sink.tableExists(spark, path), "a staging dir alone is not a table")
+    Sink.init(spark, path, Seq.empty[Long].toDF("v").schema)
+    Seq(3L).toDF("v").write.mode("append").parquet(path)
+    assert(Sink.tableExists(spark, path))
+    assert(spark.read.parquet(path).as[Long].collect().toSeq == Seq(3L))
+  }
 }

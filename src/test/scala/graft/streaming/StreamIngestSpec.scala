@@ -207,6 +207,28 @@ class StreamIngestSpec extends AnyFunSuite with SparkSpec {
     assert(errs.exists(e => e.contains("CTB_bad2.tsv") && e.contains("File is empty")))
   }
 
+  test("a header repeating a column fails only its file; the batch's good file loads") {
+    val cfg = mkCfg()
+    val notifier = new LogNotifier()
+    Sink.init(spark, cfg.sinkDir, graft.schema.CtbSchema.sparkSchema)
+    writeFile(cfg, "CTB_good.tsv",
+      rawHeaders.mkString("\t") +: Seq(validRow("A"), validRow("B")).map(_.mkString("\t")))
+    writeFile(cfg, "CTB_twice.tsv",
+      Seq("Org Code\tOrg Code", "X1\tX2"))
+
+    val stats = runOnce(cfg, notifier)
+    assert(stats.filesSeen == 2)
+    assert(stats.filesSucceeded == 1)
+    assert(spark.read.parquet(cfg.sinkDir).count() == 2)
+    assert(notifier.sent.exists(n =>
+      n.subject.startsWith("SUCCESS") && n.subject.contains("CTB_good.tsv") && n.body.contains("2 rows")))
+    assert(notifier.sent.exists(n =>
+      n.subject.startsWith("ERROR") && n.subject.contains("CTB_twice.tsv") &&
+        n.body.contains("Repeated columns: ORG_CODE")))
+    val errs = spark.read.parquet(cfg.errorsDir).collect().map(_.getString(0))
+    assert(errs.toSeq == Seq("CTB_twice.tsv: Schema mismatch. Repeated columns: ORG_CODE"))
+  }
+
   test("a 0-byte file is failed as B1 'File is empty' despite yielding no scan rows") {
     // a 0-byte file produces no rows, so it is invisible to the batch's
     // row-derived file list and the stats pass — the FS-listing diff must
@@ -298,8 +320,7 @@ class StreamIngestSpec extends AnyFunSuite with SparkSpec {
 
   test("a micro-batch's non-write jobs do not grow with its file count") {
     // the 3-file and the 50-file trigger each drain as one micro-batch;
-    // only the parquet appends (one per sink slice, one for errors) may
-    // scale with the files
+    // the sink's slices (3 and 67) are written by one staged job either way
     def drainJobs(write: GraftConfig => Unit): (Int, Int) = {
       val cfg = mkCfg()
       Sink.init(spark, cfg.sinkDir, graft.schema.CtbSchema.sparkSchema)
@@ -310,9 +331,11 @@ class StreamIngestSpec extends AnyFunSuite with SparkSpec {
     val (fifty, fiftyWrites) = drainJobs(writeFiftyFiles)
     info(s"non-write jobs: $three (3 files), $fifty (50 files); " +
       s"writes: $threeWrites, $fiftyWrites")
-    assert(threeWrites == 4)  // 1 + 1 + 1 sink slices of <= 2 rows, 1 errors append
-    assert(fiftyWrites == 67) // sum over files of ceil((1 + i % 3) / 2), no errors
+    assert(threeWrites == 2)  // 1 staged write of the 3 sink slices, 1 errors append
+    assert(fiftyWrites == 1)  // 1 staged write of the 67 sink slices, no errors
     assert(three == fifty)
+    // so every job but the 3-file batch's errors append is common to both
+    assert(three + threeWrites == fifty + fiftyWrites + 1)
   }
 
   test("C2: missing destination table fails the file without auto-creating it") {
