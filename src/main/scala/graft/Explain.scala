@@ -10,9 +10,10 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
+    val spark = GraftSession.configure(SparkSession.builder()
+        .master("local[4]")
+        .config("spark.sql.shuffle.partitions", "4"),
+        4, sfDir)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // read parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) directly as

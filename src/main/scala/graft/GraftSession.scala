@@ -54,16 +54,20 @@ object GraftSession {
     go(new java.io.File(dir))
   }
 
-  /** Apply the derived pair to a session builder. `SPARK_GRAFT_INIT_PARTITIONS`
-    * remains the dev override for the initial count (the constrained-heap
-    * and skew sweeps pin it); the advisory derives unconditionally.
+  /** Apply the derived pair to a session builder and install
+    * [[graft.expressions.GraftExtensions]]: the native functions, the
+    * optimizer rewrites and the AQE stage rule that drops shuffles whose
+    * input is already one partition. `SPARK_GRAFT_INIT_PARTITIONS` remains
+    * the dev override for the initial count (the constrained-heap and skew
+    * sweeps pin it); the advisory derives unconditionally.
     */
   def configure(b: SparkSession.Builder, cpus: Int,
       sfDir: String): SparkSession.Builder = {
     val advisory = advisoryBytes(cpus)
     val init = sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS",
       initialPartitions(cpus, inputBytes(sfDir)).toString)
-    b.config("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory.toString)
+    b.withExtensions(new graft.expressions.GraftExtensions)
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory.toString)
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", init)
   }
 

@@ -280,19 +280,24 @@ object GraftFunctions {
   }
 }
 
-/** `spark.sql.extensions` entry point: the native functions plus the
+/** `spark.sql.extensions` entry point: the native functions, the
   * [[DotProductRewrite]] optimizer rule (declarative HOF dot products
-  * compile down to the codegen'd kernel) and the conf-gated
+  * compile down to the codegen'd kernel), the conf-gated
   * [[BitmapDistinctRewrite]] (COUNT(DISTINCT bigint) -> mergeable-bitmap
-  * aggregate, spark.graft.rewriteDistinctCount=true to opt in). Note the
-  * Bench/Verify mains do NOT install the extension — their sim_topk vs
-  * sim_topk_native and agg_bitmap vs agg_bitmap_native pairs deliberately
-  * measure the built-in/native contrast, which these rules would erase.
+  * aggregate, spark.graft.rewriteDistinctCount=true to opt in) and the
+  * [[DropOnePartitionExchange]] AQE stage rule. `GraftSession.configure`
+  * installs it, so Bench, Verify, Explain and every session built through
+  * `configure` run these rules. Of the declared queries only `fn_hof`'s
+  * plan changes under DotProductRewrite: sim_topk's arrays hold nullable
+  * elements, so its built-in vs native contrast with sim_topk_native
+  * stays, and BitmapDistinctRewrite is off unless opted in, so agg_bitmap
+  * vs agg_bitmap_native does too.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => DotProductRewrite)
     ext.injectOptimizerRule(_ => BitmapDistinctRewrite)
+    ext.injectQueryStagePrepRule(DropOnePartitionExchange)
   }
 }

@@ -40,12 +40,14 @@ object CorpusOps extends Pack {
     * ScaleContractsSpec derives its exchange-row bounds from, so the
     * contract uses the query's OWN selection, never a re-implementation).
     *
-    * The gram-hash array is bound as a LAMBDA VARIABLE (`e`, via the
-    * transform(array(...), e -> ...)[0] let-idiom), NOT a projected
-    * column: CollapseProject inlines derived columns into every
-    * downstream reference, and an inlined `encs` would re-run all
-    * ~57 md5+conv gram hashes once PER WINDOW j (~53×/row — measured
-    * 100 s at sf0.1 vs sub-second with the binding).
+    * The token array and the gram-hash array are bound as LAMBDA
+    * VARIABLES (`t` and `e`, via the transform(array(...), v -> ...)[0]
+    * let-idiom), NOT projected columns: CollapseProject inlines derived
+    * columns into every downstream reference. An inlined `encs` would
+    * re-run all ~57 md5+conv gram hashes once PER WINDOW j (~53×/row —
+    * measured 100 s at sf0.1 vs sub-second with the binding), and an
+    * inlined `toks` re-splits the whole text once per gram position,
+    * quadratic in a document's token count.
     *
     * No persist (r19): dedup_winnowing now consumes the frame exactly
     * once (the posting-list form replaced the df-cap join + self-join,
@@ -57,11 +59,12 @@ object CorpusOps extends Pack {
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .filter(size(col("toks")) >= 12) // need >= 1 full window of 4-grams
       .withColumn("fps", expr(
-        """transform(array(transform(sequence(0, size(toks) - 4), i ->
-          |    shiftright(graft_h60(concat_ws(' ', slice(toks, i + 1, 4))), 16)
-          |      * 65536L + greatest(65535L - i, 0L))), e ->
-          |  array_distinct(transform(sequence(0, size(e) - 5), j ->
-          |    array_min(slice(e, j + 1, 5)))))[0]""".stripMargin))
+        """transform(array(toks), t ->
+          |  transform(array(transform(sequence(0, size(t) - 4), i ->
+          |      shiftright(graft_h60(concat_ws(' ', slice(t, i + 1, 4))), 16)
+          |        * 65536L + greatest(65535L - i, 0L))), e ->
+          |    array_distinct(transform(sequence(0, size(e) - 5), j ->
+          |      array_min(slice(e, j + 1, 5)))))[0])[0]""".stripMargin))
       .select(col("doc_id"), explode(col("fps")).as("enc"))
       .select(col("doc_id"), expr("enc div 65536L").as("fph"))
       .distinct()

@@ -30,6 +30,17 @@ object SparkSpec {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  /** Spark jobs started on this thread while `body` runs, read by job group
+    * after the listener bus drains, so a late job-start event is not missed.
+    */
+  def jobsOf(tag: String)(body: => Unit): Int = {
+    val sc = session.sparkContext
+    sc.setJobGroup(tag, tag, interruptOnCancel = false)
+    try body finally sc.clearJobGroup()
+    org.apache.spark.GraftTestHooks.drainListenerBus(sc)
+    sc.statusTracker.getJobIdsForGroup(tag).length
+  }
+
   {
     // reliable-checkpoint scratch: iterative ops (DedupClusters) hand their
     // results off through checkpoint files so no RDD blocks outlive a call

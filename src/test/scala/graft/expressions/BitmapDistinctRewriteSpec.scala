@@ -18,6 +18,20 @@ class BitmapDistinctRewriteSpec extends AnyFunSuite with SparkSpec {
   private val FLAG = "spark.graft.rewriteDistinctCount"
   private val SF = "/root/testdata/sf0.001"
 
+  /** A sibling of the shared session whose inputs and shuffles look like
+    * real volumes: 1 KB scan splits, and shuffle reads that AQE coalesces
+    * by size but never into one partition. At sf0.001 every table is one
+    * split and every shuffle one partition, and DropOnePartitionExchange
+    * then removes every exchange of both plans the exchange count
+    * compares.
+    */
+  override lazy val spark: org.apache.spark.sql.SparkSession = {
+    val s = SparkSpec.session.newSession()
+    s.conf.set("spark.sql.files.maxPartitionBytes", "1024")
+    s.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1")
+    s
+  }
+
   private def withFlag[A](on: Boolean)(body: => A): A = {
     spark.conf.set(FLAG, on.toString)
     try body finally spark.conf.unset(FLAG)

@@ -349,29 +349,6 @@ class CtbIngestSpec extends AnyFunSuite with SparkSpec {
     assert(res.clean.count() == 0)
   }
 
-  /** Spark jobs started on this thread while `body` runs, counted by a
-    * listener filtered on a job group; the bus is drained before reading.
-    */
-  private def jobsOf(tag: String)(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == tag))
-          n.incrementAndGet(): Unit
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(tag, tag, interruptOnCancel = false)
-    try body
-    finally {
-      sc.clearJobGroup()
-      org.apache.spark.GraftTestHooks.drainListenerBus(sc)
-      sc.removeSparkListener(listener)
-    }
-    n.get
-  }
-
   test("building ingestFile launches no more jobs than ingestMany on the same file") {
     val rows = (1 to 2000).map(i => validRow(Map(0 -> f"J$i%04d")).mkString("\t"))
     val f = writeTsv(headerLine +: rows).toString
@@ -379,8 +356,8 @@ class CtbIngestSpec extends AnyFunSuite with SparkSpec {
     try Seq(prev, "4096").foreach { mpb =>
       spark.conf.set("spark.sql.files.maxPartitionBytes", mpb)
       if (mpb == "4096") assert(spark.read.text(f).rdd.getNumPartitions > 4)
-      val single = jobsOf(s"ingestFile-$mpb")(CtbIngest.ingestFile(spark, f))
-      val multi = jobsOf(s"ingestMany-$mpb")(CtbIngest.ingestMany(spark, f))
+      val single = SparkSpec.jobsOf(s"ingestFile-$mpb")(CtbIngest.ingestFile(spark, f))
+      val multi = SparkSpec.jobsOf(s"ingestMany-$mpb")(CtbIngest.ingestMany(spark, f))
       assert(multi >= 1, s"maxPartitionBytes=$mpb: the listener saw no ingestMany job")
       assert(single <= multi, s"maxPartitionBytes=$mpb: ingestFile $single jobs, ingestMany $multi")
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)

@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.SparkSpec
 import graft.ops.TableFiles.TableWriter
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -27,6 +27,17 @@ import org.scalatest.funsuite.AnyFunSuite
 class ScaleContractsSpec extends AnyFunSuite with SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
+
+  /** A sibling of the shared session that cuts every input file into 1 KB
+    * scan splits. At sf0.001 every table is one split, and over one split
+    * DropOnePartitionExchange removes the very exchanges these contracts
+    * read; multi-split inputs keep them, as real volumes do.
+    */
+  override lazy val spark: SparkSession = {
+    val s = SparkSpec.session.newSession()
+    s.conf.set("spark.sql.files.maxPartitionBytes", "1024")
+    s
+  }
 
   // ---- executed-plan exchange harvesting ---------------------------------
 

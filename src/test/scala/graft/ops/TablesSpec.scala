@@ -6,7 +6,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.GraftTestHooks
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.types.TimestampType
 import org.scalatest.funsuite.AnyFunSuite
@@ -31,17 +30,6 @@ class TablesSpec extends AnyFunSuite with SparkSpec {
   private def tableNames(dir: String): Seq[String] =
     new java.io.File(dir).list().toSeq.filter(_.endsWith(".parquet"))
       .map(_.stripSuffix(".parquet")).sorted
-
-  /** Jobs started on this thread while `body` runs (job group + drained
-    * listener bus, so a late job-start event can't be missed).
-    */
-  private def jobsOf(tag: String)(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(tag, tag, interruptOnCancel = false)
-    try body finally sc.clearJobGroup()
-    GraftTestHooks.drainListenerBus(sc)
-    sc.statusTracker.getJobIdsForGroup(tag).length
-  }
 
   private def micros(df: DataFrame): Seq[Long] =
     df.selectExpr("unix_micros(ts)").collect().map(_.getLong(0)).toSeq.sorted
@@ -81,10 +69,10 @@ class TablesSpec extends AnyFunSuite with SparkSpec {
   test("building a table read starts no Spark job") {
     val probe = s"$sfDir/orders.parquet"
     // the counter sees Spark's own schema-inference job
-    assert(jobsOf("tables-probe")(spark.read.parquet(probe)) >= 1)
+    assert(SparkSpec.jobsOf("tables-probe")(spark.read.parquet(probe)) >= 1)
     for (dir <- sfDirs; name <- tableNames(dir)) {
       val tag = s"tables-${dir.split('/').last}-$name"
-      assert(jobsOf(tag)(Tables.t(spark, dir, name)) == 0, tag)
+      assert(SparkSpec.jobsOf(tag)(Tables.t(spark, dir, name)) == 0, tag)
     }
   }
 
@@ -135,7 +123,7 @@ class TablesSpec extends AnyFunSuite with SparkSpec {
     val dir = nanosEventsDir()
     val ns = session(ntz = false, nanosAsLong = false)
     // the footer converter rejects the type on the driver, before any job
-    val jobs = jobsOf("tables-nanos-reject") {
+    val jobs = SparkSpec.jobsOf("tables-nanos-reject") {
       val e = intercept[AnalysisException](Tables.t(ns, dir, "events"))
       assert(e.getMessage.contains("TIMESTAMP(NANOS"), e.getMessage)
     }
