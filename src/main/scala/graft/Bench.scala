@@ -31,26 +31,10 @@ object Bench {
     val spark = GraftSession.configure(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shufflePartitions),
-      cpus.toInt, sfDir)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // read parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) directly as
-      // the session's (UTC-pinned) TimestampType — skips the per-row NTZ->LTZ
-      // cast Tables.t would otherwise add on every events scan
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // checkpoint FILES of GC'd frames are only cleaner-reclaimed with this
-      // on (Spark default: false) — long benches would otherwise accrete one
-      // file set per iterative query until the dir is deleted at exit
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      cpus.toInt, sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.silenceBoundedWindowWarnings()
-    // reliable-checkpoint scratch for iterative queries (DedupClusters hands
-    // its result off through checkpoint files so no block-manager storage
-    // outlives a query); removed on exit
-    val ckptDir = Files.createTempDirectory("graft-bench-ckpt")
-    spark.sparkContext.setCheckpointDir(ckptDir.toString)
+    GraftSession.checkpointScratch(spark)
 
     // Per-query WALL-CLOCK watchdog (round-12 verdict #1a): one
     // pathological query must never zero out the whole round's artifact
@@ -366,14 +350,8 @@ object Bench {
         s""""cpus":$cpus,"n":${names.size},"runs":${passes.length},"sf":"$sfDir",""" +
         s""""failed":$failedJson,"queries_file":"$outFile","queries_file_cpus":"$cpuOutFile"}"""
     spark.stop()
-    deleteRecursively(ckptDir.toFile)
     System.out.flush()
     println(compact)
     System.out.flush()
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
   }
 }

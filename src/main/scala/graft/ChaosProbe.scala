@@ -67,21 +67,14 @@ object ChaosProbe {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Seq("graph_bfs_hops", "graph_kcore_peel",
         "graph_common_neighbors", "dedup_minhash", "dedup_winnowing"))
-    val spark = SparkSession.builder()
-      // master comes from spark-submit --master; no .master() here so the
-      // probe cannot silently run single-JVM (it would then test nothing)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // master comes from spark-submit --master; no .master() here so the
+    // probe cannot silently run single-JVM (it would then test nothing)
+    val spark = GraftSession.configure(SparkSession.builder()
+      .config("spark.sql.shuffle.partitions", "32"), 32, sfDir).getOrCreate()
     require(spark.sparkContext.master.startsWith("local-cluster"),
       s"chaos needs multi-process executors; got ${spark.sparkContext.master}")
     spark.sparkContext.setLogLevel("WARN")
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft-chaos-ckpt")
-    spark.sparkContext.setCheckpointDir(ckptDir.toString)
+    GraftSession.checkpointScratch(spark)
 
     def sweep(): Unit = {
       spark.catalog.clearCache()
@@ -165,10 +158,6 @@ object ChaosProbe {
       s""""sf":"$sfDir","kernels":$kj,"pass":$ok,"failures":${failures.map(f =>
         "\"" + f.replace("\"", "'") + "\"").mkString("[", ",", "]")}}""")
     spark.stop()
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-    }
-    rm(ckptDir.toFile)
     if (!ok) sys.exit(1)
   }
 }

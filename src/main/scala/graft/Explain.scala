@@ -13,15 +13,7 @@ object Explain {
     val spark = GraftSession.configure(SparkSession.builder()
         .master("local[4]")
         .config("spark.sql.shuffle.partitions", "4"),
-        4, sfDir)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // read parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) directly as
-      // the session's (UTC-pinned) TimestampType — skips the per-row NTZ->LTZ
-      // cast Tables.t would otherwise add on every events scan
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+        4, sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n===== $n =====")

@@ -54,12 +54,14 @@ object GraftSession {
     go(new java.io.File(dir))
   }
 
-  /** Apply the derived pair to a session builder and install
-    * [[graft.expressions.GraftExtensions]]: the native functions, the
-    * optimizer rewrites and the AQE stage rule that drops shuffles whose
-    * input is already one partition. `SPARK_GRAFT_INIT_PARTITIONS` remains
-    * the dev override for the initial count (the constrained-heap and skew
-    * sweeps pin it); the advisory derives unconditionally.
+  /** The one session recipe of every `main`: apply the derived pair to a
+    * session builder, install [[graft.expressions.GraftExtensions]] (the
+    * native functions, the optimizer rewrites and the AQE stage rule that
+    * drops shuffles whose input is already one partition) and set the
+    * engine's fixed settings. `SPARK_GRAFT_INIT_PARTITIONS` remains the dev
+    * override for the initial count (the constrained-heap and skew sweeps
+    * pin it); the advisory derives unconditionally. A caller with no input
+    * data passes a `sfDir` that holds none; the count then clamps to `cpus`.
     */
   def configure(b: SparkSession.Builder, cpus: Int,
       sfDir: String): SparkSession.Builder = {
@@ -69,6 +71,33 @@ object GraftSession {
     b.withExtensions(new graft.expressions.GraftExtensions)
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory.toString)
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", init)
+      .config("spark.sql.session.timeZone", "UTC")
+      // events.ts may ship as parquet TIMESTAMP(NANOS), which reads only as
+      // epoch-nano longs; Tables.t normalizes it to TimestampType
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // read parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) directly as
+      // the session's (UTC-pinned) TimestampType — skips the per-row NTZ->LTZ
+      // cast Tables.t would otherwise add on every events scan
+      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      // checkpoint FILES of GC'd frames are only cleaner-reclaimed with this
+      // on (Spark default: false) — long runs would otherwise accrete one
+      // file set per iterative query until the dir is deleted at exit
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+      .config("spark.ui.enabled", "false")
+  }
+
+  /** Reliable-checkpoint scratch for iterative queries (DedupClusters hands
+    * its result off through checkpoint files, so no block-manager storage
+    * outlives a query): a fresh temp dir, set as the context's checkpoint
+    * dir and deleted at JVM exit.
+    */
+  def checkpointScratch(spark: SparkSession): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
+    }
+    sys.addShutdownHook(rm(dir)): Unit
   }
 
   /** Raise the log level for Spark's window exec nodes to ERROR (round-27,

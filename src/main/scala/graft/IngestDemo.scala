@@ -33,12 +33,10 @@ object IngestDemo {
     "GC", "cpd", "2025-01-01").mkString("\t")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
+    // the mailbox is written after the session starts: no input to size
+    val spark = GraftSession.configure(SparkSession.builder()
       .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .config("spark.sql.shuffle.partitions", "4"), 4, "").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val root = Files.createTempDirectory("graft-demo").toString

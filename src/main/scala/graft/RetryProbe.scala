@@ -77,13 +77,10 @@ object RetryProbe {
     df.collect().map(_.toString).sorted.toSeq
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
+    // in-memory corpus: no input dir, so the partition count clamps to 8
+    val spark = GraftSession.configure(SparkSession.builder()
       .master("local[8, 3]") // 3 attempts per task — retries are live
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      .config("spark.sql.shuffle.partitions", "8"), 8, "").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -65,13 +65,11 @@ object SpecProbe {
     df.collect().map(_.toString).sorted.toSeq
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      // master/speculation confs come from spark-submit; nothing set here
-      // so the probe cannot silently run single-JVM or speculation-off
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // master/speculation confs come from spark-submit; nothing set here
+    // so the probe cannot silently run single-JVM or speculation-off.
+    // In-memory corpus: no input dir, so the partition count clamps to 8
+    val spark = GraftSession.configure(SparkSession.builder()
+      .config("spark.sql.shuffle.partitions", "8"), 8, "").getOrCreate()
     // NOT local-cluster: Spark refuses to launch a speculative attempt on
     // the host the original attempt runs on (dequeueSpeculativeTask skips
     // hosts with an attempt), and local-cluster's executors all share one
@@ -85,7 +83,6 @@ object SpecProbe {
     require(spark.conf.get("spark.speculation") == "true",
       "submit with speculation enabled — see scaladoc")
     spark.sparkContext.setLogLevel("WARN")
-    graft.expressions.GraftFunctions.register(spark)
     import spark.implicits._
 
     val specStarts = new AtomicLong

@@ -23,17 +23,7 @@ object Verify {
     val spark = GraftSession.configure(SparkSession.builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", cpus),
-      cpus.toInt, sfDir)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // read parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) directly as
-      // the session's (UTC-pinned) TimestampType — skips the per-row NTZ->LTZ
-      // cast Tables.t would otherwise add on every events scan
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // let the context cleaner reclaim checkpoint files of GC'd frames
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+      cpus.toInt, sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.silenceBoundedWindowWarnings()
     // dev-only speculative-attempt counter (driver never sets it): the
@@ -50,9 +40,7 @@ object Verify {
               e: org.apache.spark.scheduler.SparkListenerTaskStart): Unit =
             if (e.taskInfo.speculative) { specCount.incrementAndGet(); () }
         })
-    // reliable-checkpoint scratch for iterative queries (see Bench)
-    val ckptDir = Files.createTempDirectory("graft-verify-ckpt")
-    spark.sparkContext.setCheckpointDir(ckptDir.toString)
+    GraftSession.checkpointScratch(spark)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -87,9 +75,5 @@ object Verify {
     if (sys.env.get("SPARK_GRAFT_COUNT_SPECULATIVE").contains("1"))
       System.err.println(s"[verify] speculative_attempts=${specCount.get}")
     spark.stop()
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-    }
-    rm(ckptDir.toFile)
   }
 }

@@ -216,10 +216,20 @@ case class ArrayAgreeI64(left: Expression, right: Expression)
   * Two paths to the same registry entries:
   *   - [[GraftExtensions]] for `SparkSession.builder.withExtensions` /
   *     `spark.sql.extensions=graft.expressions.GraftExtensions` — the
-  *     idiomatic deployment;
-  *   - [[GraftFunctions.register]] for sessions the caller didn't build
-  *     (the driver contract hands queries an already-built session);
-  *     registration is idempotent.
+  *     idiomatic deployment, and what `graft.GraftSession.configure`
+  *     installs in every `main`;
+  *   - [[GraftFunctions.register]], the hook for a live session the caller
+  *     built elsewhere (the driver contract hands queries an already-built
+  *     session). It adds only the functions: optimizer and AQE stage rules
+  *     come with the extension. Registration is idempotent, and each
+  *     library entry object calls it once, at the step all of its public
+  *     entries reach before their first `graft_*` column: `Tables.t` (every
+  *     declared query), `TextOps.sigsOf`, `KMeans.assign`,
+  *     `IvfIncremental.quantized`, `PqIndex.train`, `IvfPq.build`,
+  *     `VectorOps.cosineTopK` / `knnJoinCells`,
+  *     `GramDfIncremental.gramPairs`, `StreamingAggs.windowedHeavyHitters`
+  *     / `windowedQuantiles`, `StreamingPrep.benchGramHashes` /
+  *     `gateAndSample` and `CtbIngest.tagRows`.
   */
 object GraftFunctions {
 
@@ -286,8 +296,10 @@ object GraftFunctions {
   * [[BitmapDistinctRewrite]] (COUNT(DISTINCT bigint) -> mergeable-bitmap
   * aggregate, spark.graft.rewriteDistinctCount=true to opt in) and the
   * [[DropOnePartitionExchange]] AQE stage rule. `GraftSession.configure`
-  * installs it, so Bench, Verify, Explain and every session built through
-  * `configure` run these rules. Of the declared queries only `fn_hof`'s
+  * installs it, and every `main` builds its session through `configure`,
+  * so Bench, Verify, Explain and the probes all run these rules. A live
+  * session cannot take an AQE stage rule afterwards; it gets only the
+  * functions, through [[GraftFunctions.register]]. Of the declared queries only `fn_hof`'s
   * plan changes under DotProductRewrite: sim_topk's arrays hold nullable
   * elements, so its built-in vs native contrast with sim_topk_native
   * stays, and BitmapDistinctRewrite is off unless opted in, so agg_bitmap

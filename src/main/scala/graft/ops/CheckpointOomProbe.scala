@@ -37,12 +37,10 @@ object CheckpointOomProbe {
     val rows = sys.env.getOrElse("PROBE_ROWS", "200000000").toLong // 200M (id, label) pairs
     val rounds = sys.env.getOrElse("PROBE_ROUNDS", "3").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
+    // spark.range input: no input dir, so the partition count clamps to cpus
+    val b = graft.GraftSession.configure(SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
+      .config("spark.sql.shuffle.partitions", cpus), cpus.toInt, "")
     mode match {
       case "blockmanager" => b.config("spark.graft.iter.localReliableBytes", "0")
       case "reliable" => b.config("spark.graft.iter.resilient", "true")
@@ -50,8 +48,7 @@ object CheckpointOomProbe {
     }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft-oom-probe-ckpt")
-    spark.sparkContext.setCheckpointDir(ckptDir.toString)
+    graft.GraftSession.checkpointScratch(spark)
 
     val t0 = System.nanoTime()
     val chain = new IterativeCompute.CheckpointChain(spark)
@@ -71,10 +68,6 @@ object CheckpointOomProbe {
     chain.release()
     val secs = (System.nanoTime() - t0) / 1e9
     spark.stop()
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-    }
-    rm(ckptDir.toFile)
     println(s"""{"probe":"checkpoint_oom","mode":"$mode","rows":$rows,""" +
       s""""rounds":$rounds,"heap_mb":${Runtime.getRuntime.maxMemory / (1 << 20)},""" +
       f""""completed":true,"secs":$secs%.1f}""")

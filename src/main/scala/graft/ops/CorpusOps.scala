@@ -65,7 +65,8 @@ object CorpusOps extends Pack {
           |        * 65536L + greatest(65535L - i, 0L))), e ->
           |    array_distinct(transform(sequence(0, size(e) - 5), j ->
           |      array_min(slice(e, j + 1, 5)))))[0])[0]""".stripMargin))
-      .select(col("doc_id"), explode(col("fps")).as("enc"))
+      // explode_outer: infers no Filter re-running fps (never null/empty past the 12-token filter)
+      .select(col("doc_id"), explode_outer(col("fps")).as("enc"))
       .select(col("doc_id"), expr("enc div 65536L").as("fph"))
       .distinct()
 

@@ -172,9 +172,14 @@ object IvfIncremental {
     spark.read.parquet(vecDir(indexPath))
   }
 
-  /** Quantize raw float embeddings to the engine's integer vector form. */
-  private def quantized(vecs: DataFrame): DataFrame =
+  /** Quantize raw float embeddings to the engine's integer vector form.
+    * Every public entry but [[recluster]] (which reaches [[KMeans.assign]])
+    * calls this before any graft_* column, so the registration lives here.
+    */
+  private def quantized(vecs: DataFrame): DataFrame = {
+    graft.expressions.GraftFunctions.register(vecs.sparkSession)
     vecs.select(col("vec_id"), VectorOps.qvec(col("embedding")).as("q"))
+  }
 
   /** Per-cell exact integer sums + counts for assigned vectors. */
   private def cellSums(assigned: DataFrame): DataFrame =
@@ -190,7 +195,6 @@ object IvfIncremental {
     * both state tables are written.
     */
   def bootstrap(spark: SparkSession, vecs: DataFrame, nCells: Int, indexPath: String): Unit = {
-    graft.expressions.GraftFunctions.register(spark)
     val q = quantized(vecs).persist()
     val seeds = q.orderBy("vec_id").limit(nCells)
       .select(col("vec_id"), col("q")).collect() // nCells rows — control plane
@@ -269,7 +273,6 @@ object IvfIncremental {
     * layer); dedupe on vec_id downstream if exactly-once matters.
     */
   def addBatch(spark: SparkSession, vecs: DataFrame, indexPath: String): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     // Pin the (bounded, #cells-row) centroid table on the driver: plans
     // built against it stay valid after the directory swap below, unlike a
     // parquet read of centDir, which would silently re-read the NEW
@@ -343,7 +346,6 @@ object IvfIncremental {
     */
   private[ops] def stageRecluster(spark: SparkSession, indexPath: String, nCells: Int,
       maxRounds: Int = 10, tolSq: Long = 0L): KMeans.Model = {
-    graft.expressions.GraftFunctions.register(spark)
     val stored = readVectors(spark, indexPath)
       .select(col("vec_id"), col("q").as("v")).persist()
     try {
@@ -450,7 +452,6 @@ object IvfIncremental {
   def probeBatch(spark: SparkSession, queries: DataFrame, indexPath: String,
       nprobe: Int = 2, k: Int = 10,
       maxBroadcastProbeRows: Long = MaxBroadcastProbeRows): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     val centRows = readCentroids(spark, indexPath).collect() // #cells — control plane
     val q = quantized(queries).select(col("vec_id").as("q_id"), col("q").as("pq"))
     if (centRows.isEmpty)
@@ -508,7 +509,6 @@ object IvfIncremental {
     */
   def probe(spark: SparkSession, indexPath: String, probeVec: Seq[Float],
       nprobe: Int = 2, k: Int = 10): DataFrame = {
-    graft.expressions.GraftFunctions.register(spark)
     import spark.implicits._
     val pq = quantized(Seq((-1L, probeVec)).toDF("vec_id", "embedding"))
       .select(col("q").as("pq"))

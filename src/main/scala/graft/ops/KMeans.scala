@@ -54,9 +54,6 @@ object KMeans {
     */
   def fit(vecs: DataFrame, k: Int, maxRounds: Int, tolSq: Long = 0L): Model = {
     require(k > 0 && maxRounds >= 1, s"bad k=$k / maxRounds=$maxRounds")
-    val spark = vecs.sparkSession
-    graft.expressions.GraftFunctions.register(spark)
-
     val seedRows = vecs.orderBy(col("vec_id")).limit(k)
       .select(col("v")).collect() // k rows — control plane
     require(seedRows.nonEmpty, "cannot seed k-means from an empty input")
@@ -130,6 +127,9 @@ object KMeans {
     */
   def assign(vecs: DataFrame, cents: Array[(Int, Array[Long])]): DataFrame = {
     require(cents.nonEmpty, "cannot assign against an empty centroid set")
+    // fit and summarize reach here before any graft_* column, so this is
+    // the object's one registration
+    graft.expressions.GraftFunctions.register(vecs.sparkSession)
     if (cents.length <= MaxLiteralFoldCells) assignFlat(vecs, cents)
     else assignFolded(vecs, cents)
   }
@@ -146,8 +146,6 @@ object KMeans {
     * tight long-loop dots per row, all inside whole-stage codegen.
     */
   private[ops] def assignFlat(vecs: DataFrame, cents: Array[(Int, Array[Long])]): DataFrame = {
-    val spark = vecs.sparkSession
-    graft.expressions.GraftFunctions.register(spark)
     val cands = cents.map { case (cell, cv) =>
       struct(
         (lit(selfDot(cv)) - lit(2L) * call_function("graft_dot_i64", col("v"), typedlit(cv.toSeq)))
@@ -166,8 +164,6 @@ object KMeans {
     * the dot itself still in the native kernel.
     */
   private[ops] def assignFolded(vecs: DataFrame, cents: Array[(Int, Array[Long])]): DataFrame = {
-    val spark = vecs.sparkSession
-    graft.expressions.GraftFunctions.register(spark)
     val centLit = typedlit(cents.map { case (cell, cv) => (cell, cv.toSeq, selfDot(cv)) }.toSeq)
     val best = aggregate(
       centLit,

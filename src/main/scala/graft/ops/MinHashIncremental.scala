@@ -42,14 +42,13 @@ object MinHashIncremental {
 
   /** Dedup a new batch against the existing state (and itself).
     *
-    * @param spark      session (native kernels are registered idempotently)
+    * @param spark      session that reads the state table
     * @param newDocs    (doc_id, text) of the incoming batch; doc_ids must
     *                   be globally unique across batches
     * @param statePath  parquet band table from prior batches; absent/empty
     *                   on the first batch
     */
   def dedupBatch(spark: SparkSession, newDocs: DataFrame, statePath: String): BatchDedup = {
-    graft.expressions.GraftFunctions.register(spark)
     val newBands = signatures(newDocs).persist()
     val corpus = existingBands(spark, statePath)
       .map(_.unionByName(newBands)).getOrElse(newBands)
@@ -107,7 +106,6 @@ object MinHashIncremental {
     */
   def dedupBatchBucketed(
       spark: SparkSession, newDocs: DataFrame, stateTable: String): BatchDedup = {
-    graft.expressions.GraftFunctions.register(spark)
     val newBands = signatures(newDocs).persist()
     def pairsOf(x: DataFrame, y: DataFrame): DataFrame =
       x.as("x").join(y.as("y"),

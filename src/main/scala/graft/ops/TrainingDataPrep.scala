@@ -47,7 +47,6 @@ object TrainingDataPrep {
     * keep-one-per-cluster semantics exact.
     */
   def nearDupIds(docs: DataFrame): DataFrame = {
-    graft.expressions.GraftFunctions.register(docs.sparkSession)
     // persisted: both sides of the banding self-join read it. Like the
     // query surface's persisted intermediates, it lives until the caller's
     // spark.catalog.clearCache() (Bench/Verify do this per query).

@@ -1,11 +1,17 @@
 package graft
 
+import graft.expressions.DropOnePartitionExchange
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{GraftSessionHooks, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Pins the derived-partitioning rule (r26 verdict task 5): both clamps of
   * both knobs, at the three regimes that matter — the sf0.1 protocol box
   * (lands on cpus), the sf100 decade (the 172-partition point the
-  * spill-merge finding required >128 for), and the saturation cap.
+  * spill-merge finding required >128 for), and the saturation cap. Then
+  * what `configure` sets on a session, and that every `main` builds its
+  * session through it.
   */
 class GraftSessionSpec extends AnyFunSuite {
 
@@ -26,11 +32,60 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(GraftSession.initialPartitions(32, 1L << 40, g8) == 4096L)
   }
 
-  test("the dev override pins the initial count but never the advisory") {
-    // configure() reads SPARK_GRAFT_INIT_PARTITIONS from the env — assert the
-    // derivation helpers it composes are deterministic in (cpus, heap, bytes)
+  test("the count's floor and the advisory both follow the slot count") {
     assert(GraftSession.initialPartitions(16, 17500000L, g8)
       == 16L) // clamp floor follows cpus
     assert(GraftSession.advisoryBytes(16, g8) == (64L << 20)) // 512MB/slot -> cap
+  }
+
+  test("configure sets the engine settings and installs GraftExtensions") {
+    // getOrCreate would hand back the shared session and write into it, so
+    // build a new session beside it (sharing its SparkContext, never
+    // stopped here) and make the shared one the default again afterwards
+    val shared = SparkSpec.session
+    val advisoryBefore =
+      shared.conf.getOption("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    val noInput = Files.createTempDirectory("graft-no-input").toString
+    val s = GraftSession.configure(SparkSession.builder(), 4, noInput).create()
+    try {
+      val opts = GraftSessionHooks.builderOptions(s)
+      assert(opts("spark.sql.session.timeZone") == "UTC")
+      assert(opts("spark.sql.legacy.parquet.nanosAsLong") == "true")
+      assert(opts("spark.sql.parquet.inferTimestampNTZ.enabled") == "false")
+      assert(opts("spark.cleaner.referenceTracking.cleanCheckpoints") == "true")
+      assert(opts("spark.ui.enabled") == "false")
+      assert(opts("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        == GraftSession.advisoryBytes(4).toString)
+      // no input bytes: the initial count clamps up to cpus
+      assert(opts("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+        == sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS", "4"))
+      // the test context's spark.sql.extensions puts the stage rule in
+      // every session once; configure's withExtensions adds it once more
+      def stageRules(x: SparkSession): Int =
+        x.sessionState.adaptiveRulesHolder.queryStagePrepRules
+          .count(_.isInstanceOf[DropOnePartitionExchange])
+      assert(stageRules(s) == stageRules(shared.newSession()) + 1)
+    } finally {
+      SparkSession.setDefaultSession(shared)
+      SparkSession.setActiveSession(shared)
+    }
+    assert(shared.conf.getOption(
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes") == advisoryBefore)
+  }
+
+  test("every SparkSession.builder() in src/main is built through configure") {
+    val call = "SparkSession.builder()"
+    val sites = Files.walk(Paths.get("src/main/scala")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { f =>
+        val text = Files.readString(f)
+        Iterator.iterate(text.indexOf(call))(i => text.indexOf(call, i + 1))
+          .takeWhile(_ >= 0)
+          .map(i => (s"$f:${text.take(i).count(_ == '\n') + 1}",
+            text.take(i).trim.endsWith("GraftSession.configure(")))
+      }
+    assert(sites.nonEmpty)
+    val own = sites.collect { case (at, false) => at }
+    assert(own.isEmpty, s"sessions built without GraftSession.configure: $own")
   }
 }

@@ -41,16 +41,5 @@ object SparkSpec {
     sc.statusTracker.getJobIdsForGroup(tag).length
   }
 
-  {
-    // reliable-checkpoint scratch: iterative ops (DedupClusters) hand their
-    // results off through checkpoint files so no RDD blocks outlive a call
-    val dir = java.nio.file.Files.createTempDirectory("graft-test-ckpt")
-    session.sparkContext.setCheckpointDir(dir.toString)
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir.toFile)
-    }
-  }
+  GraftSession.checkpointScratch(session)
 }
