@@ -91,13 +91,20 @@ object GraftSession {
     * outlives a query): a fresh temp dir, set as the context's checkpoint
     * dir and deleted at JVM exit.
     */
-  def checkpointScratch(spark: SparkSession): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
-    spark.sparkContext.setCheckpointDir(dir.toString)
+  def checkpointScratch(spark: SparkSession): Unit =
+    spark.sparkContext.setCheckpointDir(scratchDir("graft-ckpt").toString)
+
+  /** A fresh temp dir under `prefix` that is deleted, with everything in
+    * it, at JVM exit (symlinks are removed, not followed).
+    */
+  def scratchDir(prefix: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
     def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
+      if (!java.nio.file.Files.isSymbolicLink(f.toPath)) Option(f.listFiles()).foreach(_.foreach(rm))
+      f.delete(): Unit
     }
-    sys.addShutdownHook(rm(dir)): Unit
+    sys.addShutdownHook(rm(dir.toFile)): Unit
+    dir
   }
 
   /** Raise the log level for Spark's window exec nodes to ERROR (round-27,

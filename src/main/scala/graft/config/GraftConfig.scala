@@ -10,9 +10,11 @@ package graft.config
   *   GMAIL_QUERY                -> sourceGlob (pushdown predicate on the source listing)
   *   GCS_UNPROCESSED_PATH       -> inputDir (the polled "mailbox" directory)
   *   BIGQUERY_DATASET/TABLE     -> sinkDir (destination table path)
-  *   NOTIFICATION_RECIPIENTS    -> notificationRecipients
-  *   HTTP_REQUEST_TIMEOUT (900) -> httpRequestTimeoutSec (default mirrored, main.py:39)
   *   BIGQUERY_BATCH_SIZE (500)  -> batchSize (default mirrored, main.py:40)
+  *
+  * NOTIFICATION_RECIPIENTS and HTTP_REQUEST_TIMEOUT (900, main.py:39) have
+  * no engine counterpart: the engine makes no HTTP calls, and a notifier
+  * takes its recipients when it is built (`LogNotifier(recipients)`).
   */
 final case class GraftConfig(
     inputDir: String,
@@ -20,9 +22,7 @@ final case class GraftConfig(
     errorsDir: String,
     checkpointDir: String,
     archiveDir: String,
-    notificationRecipients: String = "ops@localhost",
     sourceGlob: String = "*",
-    httpRequestTimeoutSec: Int = 900,
     batchSize: Int = 500)
 
 object GraftConfig {
@@ -52,9 +52,7 @@ object GraftConfig {
       errorsDir = req("GRAFT_ERRORS_DIR"),
       checkpointDir = req("GRAFT_CHECKPOINT_DIR"),
       archiveDir = req("GRAFT_ARCHIVE_DIR"),
-      notificationRecipients = env.getOrElse("GRAFT_NOTIFY_TO", "ops@localhost"),
       sourceGlob = env.getOrElse("GRAFT_SOURCE_GLOB", "*"),
-      httpRequestTimeoutSec = posInt("GRAFT_HTTP_TIMEOUT", 900),
       batchSize = posInt("GRAFT_BATCH_SIZE", 500))
   }
 }

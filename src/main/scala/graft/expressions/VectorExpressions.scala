@@ -292,24 +292,21 @@ object GraftFunctions {
 
 /** `spark.sql.extensions` entry point: the native functions, the
   * [[DotProductRewrite]] optimizer rule (declarative HOF dot products
-  * compile down to the codegen'd kernel), the conf-gated
-  * [[BitmapDistinctRewrite]] (COUNT(DISTINCT bigint) -> mergeable-bitmap
-  * aggregate, spark.graft.rewriteDistinctCount=true to opt in) and the
+  * compile down to the codegen'd kernel) and the
   * [[DropOnePartitionExchange]] AQE stage rule. `GraftSession.configure`
   * installs it, and every `main` builds its session through `configure`,
   * so Bench, Verify, Explain and the probes all run these rules. A live
   * session cannot take an AQE stage rule afterwards; it gets only the
-  * functions, through [[GraftFunctions.register]]. Of the declared queries only `fn_hof`'s
-  * plan changes under DotProductRewrite: sim_topk's arrays hold nullable
-  * elements, so its built-in vs native contrast with sim_topk_native
-  * stays, and BitmapDistinctRewrite is off unless opted in, so agg_bitmap
-  * vs agg_bitmap_native does too.
+  * functions, through [[GraftFunctions.register]]. Of the declared queries
+  * only `fn_hof`'s plan changes under DotProductRewrite: sim_topk's arrays
+  * hold nullable elements, so its built-in vs native contrast with
+  * sim_topk_native stays. `agg_bitmap_native` calls the bitmap aggregate
+  * ([[BitmapDistinct]]) by name; no rule rewrites COUNT(DISTINCT) into it.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => DotProductRewrite)
-    ext.injectOptimizerRule(_ => BitmapDistinctRewrite)
     ext.injectQueryStagePrepRule(DropOnePartitionExchange)
   }
 }

@@ -67,15 +67,14 @@ object Bpe {
 
   /** Dispatch bound for [[train]]: collapsed (word, freq) tables at or
     * under this row count train DRIVER-SIDE in one collect + local loop.
-    * Rationale (the MaxLiteralFoldCells discipline): each distributed
-    * round is one Spark job, so a production 30–50k-merge vocabulary
-    * means 30–50k sequential jobs — days of pure per-stage scheduling
-    * floor at ANY data size. Zipf makes the collapsed table small (a
-    * 100 TB corpus has ~10^7–10^8 distinct words, but MOST corpora used
-    * for vocab training are pre-sampled far below that), so when it fits
-    * comfortably on the driver (64k rows ≈ a few MB) the local loop is
-    * strictly better; above the bound the distributed rounds keep memory
-    * bounded. Both paths share segment/baseSymbols and the identical
+    * Rationale: each distributed round is one Spark job, so a production
+    * 30–50k-merge vocabulary means 30–50k sequential jobs — days of pure
+    * per-stage scheduling floor at ANY data size. Zipf makes the collapsed
+    * table small (a 100 TB corpus has ~10^7–10^8 distinct words, but MOST
+    * corpora used for vocab training are pre-sampled far below that), so
+    * when it fits comfortably on the driver (64k rows ≈ a few MB) the local
+    * loop is strictly better; above the bound the distributed rounds keep
+    * memory bounded. Both paths share segment/baseSymbols and the identical
     * (max freq, lexicographic-min pair) tiebreak — parity is pinned by
     * BpeSpec.
     */

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental IVF index maintenance: add batches of vectors to a persisted
@@ -31,17 +31,6 @@ import org.apache.spark.sql.functions._
   * merge sums, probe — is identical and is what's under test here).
   */
 object IvfIncremental {
-
-  /** Probe-side broadcast bound for [[probeBatch]] (nq×nprobe rows). Each
-    * probe row carries the full quantized query vector (~8·dim bytes), so
-    * 64k rows at dim 256 is ≈128 MiB of executor-resident hash table —
-    * the ceiling of sane broadcast territory. Above this the join falls
-    * back to a shuffle equi-join on `cell`: a million-query shard must
-    * never be collected into a broadcast. Same dispatch discipline as
-    * [[KMeans.MaxLiteralFoldCells]]; both shapes are bit-identical
-    * (parity spec in IvfIncrementalSpec).
-    */
-  val MaxBroadcastProbeRows = 65536L
 
   private def vecDir(p: String) = s"$p/vectors"
   private def centDir(p: String) = s"$p/centroids"
@@ -206,53 +195,33 @@ object IvfIncremental {
     q.unpersist(false): Unit
   }
 
-  /** Nearest-cell assignment, strictly NARROW in both shapes: mean-dot
-    * ranking (one codegen'd exact-integer dot + one double division per
-    * candidate), top-1 by (score, lower-cell tie). Zero Exchange: no
-    * #cells-way row fanout, no re-group on vec_id (the round-9 shape
-    * shuffled the full batch per call). Centroids arrive as driver-side
-    * rows — bounded by #cells, the control plane every caller already
-    * holds. ≤ [[KMeans.MaxLiteralFoldCells]] cells take the flat
-    * `greatest` over per-candidate literal structs (all-codegen); above
-    * that, the single-literal `aggregate` fold whose plan size is O(1) in
-    * #cells (see [[KMeans.MaxLiteralFoldCells]] for the trade). An EMPTY
-    * centroid set yields an empty assignment frame with the output schema
-    * (not an analysis-time crash) — the bootstrap-over-empty-batch edge.
+  /** Per centroid of `cents` (a literal array of (cell, csum, cnt)), the
+    * struct (ns = −mean dot with `v`, cell). Structs order field by field,
+    * so ascending order is (score desc, lower cell first).
     */
-  private[ops] def assignTo(q: DataFrame, centroids: Array[(Long, Array[Long], Long)]): DataFrame =
-    if (centroids.isEmpty)
-      q.select(col("vec_id"), col("q"), lit(0L).as("cell")).limit(0)
-    else if (centroids.length <= KMeans.MaxLiteralFoldCells) {
-      val cands = centroids.map { case (cell, csum, cnt) =>
-        struct(
-          (call_function("graft_dot_i64", col("q"), typedlit(csum.toSeq)).cast("double")
-            / lit(cnt.toDouble)).as("score"),
-          lit(-cell).as("tie"),
-          lit(cell).as("cell"))
-      }
-      val best = if (cands.length == 1) cands.head else greatest(cands.toIndexedSeq: _*)
-      q.select(col("vec_id"), col("q"), best.getField("cell").as("cell"))
-    } else assignToFolded(q, centroids)
+  private def negMeanDots(v: Column, cents: Column): Column =
+    transform(cents, c => struct(
+      (-(call_function("graft_dot_i64", v, c.getField("_2")).cast("double")
+        / c.getField("_3").cast("double"))).as("ns"),
+      c.getField("_1").as("cell")))
 
-  /** Large-#cells shape: ONE typed literal holding every (cell, csum, cnt)
-    * plus an `aggregate` argmax lambda with the identical (score, lower
-    * cell) tie-break — package-visible so the spec can pin bit-parity with
-    * the flat shape without constructing 500+ cells.
+  /** Nearest-cell assignment, strictly NARROW: mean-dot ranking (one
+    * codegen'd exact-integer dot + one double division per candidate),
+    * top-1 by (score, lower-cell tie). Zero Exchange: no #cells-way row
+    * fanout, no re-group on vec_id (the round-9 shape shuffled the full
+    * batch per call). Centroids arrive as driver-side rows — bounded by
+    * #cells, the control plane every caller already holds — and ride in
+    * ONE typed literal, scored by a `transform` lambda and reduced by
+    * `array_min`, so the plan is the same size at any #cells (the
+    * [[KMeans.assign]] shape). An EMPTY centroid set yields an empty
+    * assignment frame with the output schema (not an analysis-time
+    * crash) — the bootstrap-over-empty-batch edge.
     */
-  private[ops] def assignToFolded(q: DataFrame,
-      centroids: Array[(Long, Array[Long], Long)]): DataFrame = {
-    val centLit = typedlit(centroids.map { case (cell, csum, cnt) => (cell, csum.toSeq, cnt) }.toSeq)
-    val best = aggregate(
-      centLit,
-      struct(lit(Double.NegativeInfinity).as("score"), lit(Long.MaxValue).as("cell")),
-      (acc, c) => {
-        val score = call_function("graft_dot_i64", col("q"), c.getField("_2")).cast("double") /
-          c.getField("_3").cast("double")
-        val cell = c.getField("_1")
-        val better = (score > acc.getField("score")) ||
-          (score === acc.getField("score") && cell < acc.getField("cell"))
-        when(better, struct(score.as("score"), cell.as("cell"))).otherwise(acc)
-      })
+  private[ops] def assignTo(q: DataFrame, centroids: Array[(Long, Array[Long], Long)]): DataFrame = {
+    if (centroids.isEmpty)
+      return q.select(col("vec_id"), col("q"), lit(0L).as("cell")).limit(0)
+    val best = array_min(negMeanDots(col("q"),
+      typedlit(centroids.map { case (cell, csum, cnt) => (cell, csum.toSeq, cnt) }.toSeq)))
     q.select(col("vec_id"), col("q"), best.getField("cell").as("cell"))
   }
 
@@ -414,35 +383,29 @@ object IvfIncremental {
     (assigned, fire)
   }
 
-  /** Top-k neighbors for EVERY row of a query table in ONE job — the
-    * batch serving form of [[probe]], the shape an embedding pipeline
-    * actually runs (score a whole shard of fresh embeddings against the
-    * index, not one vector at a time):
+  /** Top-k neighbors for EVERY row of a query table — the batch serving
+    * form of [[probe]], the shape an embedding pipeline actually runs
+    * (score a whole shard of fresh embeddings against the index, not one
+    * vector at a time):
     *
     *   1. per-query cell ranking folds IN-ROW against the bounded
-    *      centroid table (the [[assignTo]] discipline: literal structs +
-    *      sort_array/slice below [[KMeans.MaxLiteralFoldCells]] cells, a
-    *      single-literal transform fold above — zero Exchange over the
-    *      query table);
+    *      centroid table (the [[assignTo]] discipline: one typed literal
+    *      of every centroid, ranked by `transform` + sort_array/slice —
+    *      the same plan size at any #cells, zero Exchange over the query
+    *      table);
     *   2. the UNION of probed cells — bounded by #cells, collected from
     *      the nq×nprobe probe pairs — prunes the partitioned vector
     *      store to exactly the directories ANY query needs
     *      (partition-column IN-list: file-level pruning, no index scan);
     *   3. one equi-join on `cell` + exact integer dots + a per-query
-    *      top-k window, SIZE-DISPATCHED like the centroid fold: at or
-    *      below [[MaxBroadcastProbeRows]] nq×nprobe probe rows the probe
-    *      side is broadcast (small by construction in the
-    *      many-vectors-per-cell regime); above it — the "score a whole
-    *      shard" regime where each probe row carries the full quantized
-    *      query vector and a broadcast would be GBs — it is a plain
-    *      shuffle equi-join on `cell`. Both shapes are bit-identical
-    *      (parity spec). The window shuffles only (q_id, cell, dot)
-    *      triples of the probed cells' members — never the store's `q`
-    *      arrays, and never anything outside the probed cells.
+    *      top-k window. Broadcast or shuffle is the planner's and AQE's
+    *      choice from the probe side's size, as for any join. The window
+    *      shuffles only (q_id, cell, dot) triples of the probed cells'
+    *      members — never the store's `q` arrays, and never anything
+    *      outside the probed cells.
     *
-    * The persisted probe subplan serves the two control-plane actions
-    * (the dispatch count and the probed-cells collect) and is released
-    * before return — the returned lazy plan recomputes the centroid
+    * Construction runs two control-plane collects (the centroid table and
+    * the probed cells); the returned lazy plan recomputes the centroid
     * fold, an in-row zero-shuffle map over the query table.
     *
     * Output: (q_id, vec_id, cell, dot_q, rnk ≤ k), ordering per query
@@ -450,57 +413,31 @@ object IvfIncremental {
     * integer dots, so ranks are deterministic everywhere).
     */
   def probeBatch(spark: SparkSession, queries: DataFrame, indexPath: String,
-      nprobe: Int = 2, k: Int = 10,
-      maxBroadcastProbeRows: Long = MaxBroadcastProbeRows): DataFrame = {
+      nprobe: Int = 2, k: Int = 10): DataFrame = {
     val centRows = readCentroids(spark, indexPath).collect() // #cells — control plane
     val q = quantized(queries).select(col("vec_id").as("q_id"), col("q").as("pq"))
     if (centRows.isEmpty)
       return q.select(col("q_id"), lit(0L).as("vec_id"), lit(0L).as("cell"),
         lit(0L).as("dot_q"), lit(1).as("rnk")).limit(0)
-    val cents = centRows.map(r => (r.getAs[Long]("cell"),
-      r.getAs[Seq[Long]]("csum").toArray, r.getAs[Long]("cnt")))
-    val np = math.min(nprobe, cents.length)
-    val probes =
-      if (cents.length <= KMeans.MaxLiteralFoldCells) {
-        val cands = cents.map { case (cell, csum, cnt) =>
-          struct(
-            (-(call_function("graft_dot_i64", col("pq"), typedlit(csum.toSeq)).cast("double")
-              / lit(cnt.toDouble))).as("ns"),
-            lit(cell).as("cell"))
-        }
-        q.select(col("q_id"), col("pq"),
-          explode(slice(sort_array(array(cands.toIndexedSeq: _*)), 1, np)).as("c"))
-          .select(col("q_id"), col("pq"), col("c.cell").as("cell"))
-      } else {
-        val centLit = typedlit(cents.map { case (cell, csum, cnt) => (cell, csum.toSeq, cnt) }.toSeq)
-        q.select(col("q_id"), col("pq"),
-          explode(slice(sort_array(transform(centLit, c =>
-            struct(
-              (-(call_function("graft_dot_i64", col("pq"), c.getField("_2")).cast("double")
-                / c.getField("_3").cast("double"))).as("ns"),
-              c.getField("_1").as("cell")))), 1, np)).as("c"))
-          .select(col("q_id"), col("pq"), col("c.cell").as("cell"))
-      }
-    val probesP = probes.persist()
-    try {
-      val nProbeRows = probesP.count() // materializes the cache; drives the dispatch
-      val cells = probesP.select(col("cell")).distinct()
-        .collect().map(_.getLong(0)) // ≤ #cells — control plane
-      val probeSide = probesP.withColumnRenamed("cell", "pcell")
-      val hits = readVectors(spark, indexPath)
-        .filter(col("cell").isin(cells: _*))
-        // partition-column read type is directory-inferred (int); pin long
-        .select(col("vec_id"), col("cell").cast("long").as("cell"), col("q"))
-        .join(if (nProbeRows <= maxBroadcastProbeRows) broadcast(probeSide) else probeSide,
-          col("cell") === col("pcell"))
-        .select(col("q_id"), col("vec_id"), col("cell"),
-          call_function("graft_dot_i64", col("q"), col("pq")).as("dot_q"))
-        .withColumn("rnk", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("q_id"))
-            .orderBy(col("dot_q").desc, col("vec_id").asc)))
-        .filter(col("rnk") <= k)
-      hits
-    } finally { probesP.unpersist(false); () }
+    val centLit = typedlit(centRows.map(r => (r.getAs[Long]("cell"),
+      r.getAs[Seq[Long]]("csum"), r.getAs[Long]("cnt"))).toSeq)
+    val probes = q.select(col("q_id"), col("pq"),
+        explode(slice(sort_array(negMeanDots(col("pq"), centLit)), 1,
+          math.min(nprobe, centRows.length))).as("c"))
+      .select(col("q_id"), col("pq"), col("c.cell").as("pcell"))
+    val cells = probes.select(col("pcell")).distinct()
+      .collect().map(_.getLong(0)) // ≤ #cells — control plane
+    readVectors(spark, indexPath)
+      .filter(col("cell").isin(cells: _*))
+      // partition-column read type is directory-inferred (int); pin long
+      .select(col("vec_id"), col("cell").cast("long").as("cell"), col("q"))
+      .join(probes, col("cell") === col("pcell"))
+      .select(col("q_id"), col("vec_id"), col("cell"),
+        call_function("graft_dot_i64", col("q"), col("pq")).as("dot_q"))
+      .withColumn("rnk", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("q_id"))
+          .orderBy(col("dot_q").desc, col("vec_id").asc)))
+      .filter(col("rnk") <= k)
   }
 
   /** Top-k by exact integer dot among the vectors of the `nprobe` cells

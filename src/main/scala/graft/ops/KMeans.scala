@@ -92,32 +92,20 @@ object KMeans {
     Model(cents, round, shiftSq, shiftSq <= tolSq)
   }
 
-  /** Bound for the FLAT literal-fold assignment shape ([[assignFlat]]):
-    * above this many candidate cells, [[assign]] switches to the
-    * single-literal HOF fold ([[assignFolded]]). Why a bound at all: the
-    * flat shape materializes one `least`/`greatest` branch PER candidate —
-    * k codegen'd dot-kernel calls in one expression tree — which is the
-    * fastest plan at k-means-scale k (tens), but at IVF-scale cell counts
-    * (thousands) the O(k) expression tree risks Janino method-size splits,
-    * constant-pool pressure, and interpreted fallback. The folded shape is
-    * ONE Literal node holding all centroids plus one `aggregate` lambda —
-    * O(1) plan size at any k, evaluated per-element without codegen
-    * branches. Both shapes are strictly narrow (zero Exchange); the bound
-    * only picks which narrow form codegen can digest. 512×64 longs ≈
-    * 256 KB of literal — comfortably under task-serialization concern,
-    * well past where the flat tree stops being the right call.
-    */
-  private[ops] val MaxLiteralFoldCells = 512
-
   /** One exact argmin assignment pass of `vecs` against a centroid set:
-    * adds (`cell`, `d2`). Strictly NARROW in BOTH shapes — the k
-    * candidates fold in-row, so the plan is scan → project with ZERO
-    * Exchange (the round-9 shape fanned each vector to k rows and
-    * re-grouped on vec_id, which at 100 TB was a full corpus shuffle per
-    * Lloyd round; the fold makes each round scan-bound). k ≤
-    * [[MaxLiteralFoldCells]] takes the codegen'd flat fold, larger k the
-    * O(1)-plan-size literal-array fold — see [[MaxLiteralFoldCells]] for
-    * the trade.
+    * adds (`cell`, `d2`). Strictly NARROW — the k candidates fold in-row,
+    * so the plan is scan → project with ZERO Exchange (the round-9 shape
+    * fanned each vector to k rows and re-grouped on vec_id, which at
+    * 100 TB was a full corpus shuffle per Lloyd round; the fold makes each
+    * round scan-bound).
+    *
+    * One shape at every k: ALL centroids ride in ONE typed literal
+    * (array<struct<cell, cv, n2c>> — a single Literal node, not k
+    * branches), a `transform` lambda scores each one as a (part, cell)
+    * struct and `array_min` picks the winner, so the plan's expression
+    * tree is the same size at 8 cells and at thousands. The lambda
+    * evaluates interpreted per element; each dot stays in the native
+    * `graft_dot_i64` kernel.
     *
     * Arithmetic: |v|² is row-constant, so
     * argmin_c (d² = |v|² − 2·v·c + |c|²) ≡ argmin_c (|c|² − 2·v·c) with the
@@ -130,8 +118,18 @@ object KMeans {
     // fit and summarize reach here before any graft_* column, so this is
     // the object's one registration
     graft.expressions.GraftFunctions.register(vecs.sparkSession)
-    if (cents.length <= MaxLiteralFoldCells) assignFlat(vecs, cents)
-    else assignFolded(vecs, cents)
+    val centLit = typedlit(cents.map { case (cell, cv) => (cell, cv.toSeq, selfDot(cv)) }.toSeq)
+    // structs order field by field: the minimum is the lowest part, ties
+    // to the lower cell
+    val best = array_min(transform(centLit, c => struct(
+      (c.getField("_3") - lit(2L) * call_function("graft_dot_i64", col("v"), c.getField("_2")))
+        .as("part"),
+      c.getField("_1").as("cell"))))
+    vecs
+      .select(col("vec_id"), col("v"), best.as("best"),
+        call_function("graft_dot_i64", col("v"), col("v")).as("n2v"))
+      .select(col("vec_id"), col("v"), col("best.cell").as("cell"),
+        (col("n2v") + col("best.part")).as("d2"))
   }
 
   private def selfDot(cv: Array[Long]): Long = {
@@ -140,51 +138,6 @@ object KMeans {
     while (i < cv.length) { n2c += cv(i) * cv(i); i += 1 }
     n2c
   }
-
-  /** Flat shape: one `least` branch per candidate, every 2·v·c in the
-    * codegen'd `graft_dot_i64` kernel against its own literal array — k+1
-    * tight long-loop dots per row, all inside whole-stage codegen.
-    */
-  private[ops] def assignFlat(vecs: DataFrame, cents: Array[(Int, Array[Long])]): DataFrame = {
-    val cands = cents.map { case (cell, cv) =>
-      struct(
-        (lit(selfDot(cv)) - lit(2L) * call_function("graft_dot_i64", col("v"), typedlit(cv.toSeq)))
-          .as("part"),
-        lit(cell).as("cell"))
-    }
-    val best = if (cands.length == 1) cands.head else least(cands.toIndexedSeq: _*)
-    finishAssign(vecs, best)
-  }
-
-  /** Folded shape for large k: ALL centroids ride in ONE typed literal
-    * (array<struct<cell, cv, n2c>> — a single Literal node, not k
-    * branches) and the argmin is an `aggregate` lambda with the same
-    * (part, cell) lexicographic tie-break as the flat `least`. Plan size
-    * is independent of k; the lambda evaluates interpreted per element,
-    * the dot itself still in the native kernel.
-    */
-  private[ops] def assignFolded(vecs: DataFrame, cents: Array[(Int, Array[Long])]): DataFrame = {
-    val centLit = typedlit(cents.map { case (cell, cv) => (cell, cv.toSeq, selfDot(cv)) }.toSeq)
-    val best = aggregate(
-      centLit,
-      struct(lit(Long.MaxValue).as("part"), lit(Int.MaxValue).as("cell")),
-      (acc, c) => {
-        val part = c.getField("_3") - lit(2L) *
-          call_function("graft_dot_i64", col("v"), c.getField("_2"))
-        val cell = c.getField("_1")
-        val better = (part < acc.getField("part")) ||
-          (part === acc.getField("part") && cell < acc.getField("cell"))
-        when(better, struct(part.as("part"), cell.as("cell"))).otherwise(acc)
-      })
-    finishAssign(vecs, best)
-  }
-
-  private def finishAssign(vecs: DataFrame, best: org.apache.spark.sql.Column): DataFrame =
-    vecs
-      .select(col("vec_id"), col("v"), best.as("best"),
-        call_function("graft_dot_i64", col("v"), col("v")).as("n2v"))
-      .select(col("vec_id"), col("v"), col("best.cell").as("cell"),
-        (col("n2v") + col("best.part")).as("d2"))
 
   /** Per-cell size + inertia summary of a fitted model over `vecs` — the
     * `ml_kmeans` oracle's output shape.

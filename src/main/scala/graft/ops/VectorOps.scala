@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
 import Tables._
 
 /** Similarity search over the `embeddings` table (`Array[Float]`, unit-norm).
@@ -902,8 +903,9 @@ object VectorOps extends Pack {
   /** Float k-NN JOIN — the production form of the oracle-checked
     * `sim_knn_join`: every corpus vector's top-k cosine neighbors, blocked
     * by IVF cell with an `nprobe` recall dial. Query vectors probe their
-    * `nprobe` nearest cell centroids (#cells literal structs, ranked by an
-    * in-row sort_array fold — no corpus shuffle), so
+    * `nprobe` nearest cell centroids (one broadcast row holding every
+    * centroid, ranked by an in-row `transform` + sort_array fold whose
+    * plan size does not grow with #cells — no corpus shuffle), so
     * cross-cell true neighbors are recovered as nprobe grows — at
     * nprobe = #cells this is EXACTLY brute force (the equivalence the spec
     * asserts), at nprobe = 1 it is the within-cell query. Cost scales as
@@ -912,11 +914,8 @@ object VectorOps extends Pack {
     *
     * @param corpus (vec_id, label, embedding) — label is the cell id from
     *               the coarse quantizer (a clustering pass at deployment)
-    * @param maxFlatCells shape-dispatch bound (package-visible for the
-    *               parity spec; production callers keep the default)
     */
-  def knnJoinCells(corpus: DataFrame, k: Int, nprobe: Int = 2,
-      maxFlatCells: Int = KMeans.MaxLiteralFoldCells): DataFrame = {
+  def knnJoinCells(corpus: DataFrame, k: Int, nprobe: Int = 2): DataFrame = {
     graft.expressions.GraftFunctions.register(corpus.sparkSession)
     // float cell centroids: one (cell, dim) aggregation, reassembled in order
     val cent = corpus.select(col("label"), posexplode(col("embedding")))
@@ -924,50 +923,36 @@ object VectorOps extends Pack {
       .groupBy(col("label"))
       .agg(expr("transform(sort_array(collect_list(struct(pos, m))), x -> cast(x.m as float))")
         .as("centroid"))
-    // Each query vector's nprobe nearest cells, selected IN-ROW: the
-    // #cells centroid table is control plane (collected once), ranked by
-    // sort_array + slice per row — ascending struct order on (-cos, label)
-    // IS (cos desc, label asc). NaN pin: a zero-norm centroid or embedding
-    // makes the cosine NaN, whose sort placement would otherwise be an
-    // accident of the sort direction (the pre-round-10 window put NaN
-    // FIRST, the sort_array form put it LAST); nanvl(cos, -1) makes the
-    // choice explicit — a NaN cell ranks below every real similarity and
-    // is probed only at exhaustive nprobe. Strictly narrow up to the
-    // explode (×nprobe row growth, still no Exchange); the round-9 shape
-    // re-grouped the full corpus on vec_id via a window just to rank
-    // #cells candidates. Shape dispatch mirrors KMeans.assign: ≤
-    // MaxLiteralFoldCells builds one candidate struct per cell (codegen'd
-    // flat tree); above that, the whole centroid table rides as ONE
-    // broadcast 1-row array column folded with transform() — O(1) plan
-    // size at any cell count, and no driver-side literal typing on the
-    // caller's label column.
+    // Each query vector's nprobe nearest cells, selected IN-ROW: the #cells
+    // centroid table is control plane (collected once) and rides back as ONE
+    // broadcast 1-row array column typed by the table's own schema (so the
+    // caller's label type passes through), ranked by transform + sort_array
+    // + slice per row — ascending struct order on (-cos, label) IS (cos
+    // desc, label asc). NaN pin: a zero-norm centroid or embedding makes the
+    // cosine NaN, whose sort placement would otherwise be an accident of the
+    // sort direction (the pre-round-10 window put NaN FIRST, the sort_array
+    // form put it LAST); nanvl(cos, -1) makes the choice explicit — a NaN
+    // cell ranks below every real similarity and is probed only at
+    // exhaustive nprobe. Strictly narrow up to the explode (×nprobe row
+    // growth, still no Exchange); the round-9 shape re-grouped the full
+    // corpus on vec_id via a window just to rank #cells candidates.
     val centRows = cent.collect() // #cells rows — control plane
     if (centRows.isEmpty) { // empty corpus: empty result, output schema intact
       return corpus.select(col("vec_id").as("q_id"), col("vec_id").as("n_id"),
         call_function("graft_cos_f32", col("embedding"), col("embedding")).as("cosine"),
         lit(1).as("rnk")).limit(0)
     }
-    val probes =
-      if (centRows.length <= maxFlatCells) {
-        val cellCands = centRows.map { r =>
+    val centArr = corpus.sparkSession.createDataFrame(
+      java.util.List.of(Row(centRows.toSeq)),
+      StructType(Seq(StructField("cents", ArrayType(cent.schema, containsNull = false)))))
+    val probes = corpus.crossJoin(broadcast(centArr)) // 1-row build side: narrow in practice
+      .select(col("vec_id").as("q_id"),
+        explode(slice(sort_array(transform(col("cents"), c =>
           struct(
-            (-nanvl(call_function("graft_cos_f32", col("embedding"),
-              typedlit(r.getSeq[Float](1))).cast("double"), lit(-1d))).as("nc"),
-            lit(r.get(0)).as("label"))
-        }
-        corpus.select(col("vec_id").as("q_id"),
-            explode(slice(sort_array(array(cellCands.toIndexedSeq: _*)), 1, nprobe)).as("c"))
-          .select(col("q_id"), col("c.label").as("label"))
-      } else {
-        val centArr = cent.agg(collect_list(struct(col("label"), col("centroid"))).as("cents"))
-        corpus.crossJoin(broadcast(centArr)) // 1-row build side: narrow in practice
-          .select(col("vec_id").as("q_id"),
-            explode(slice(sort_array(expr(
-              """transform(cents, c -> struct(
-                |  -nanvl(cast(graft_cos_f32(embedding, c.centroid) as double), -1.0d) as nc,
-                |  c.label as label))""".stripMargin)), 1, nprobe)).as("c"))
-          .select(col("q_id"), col("c.label").as("label"))
-      }
+            (-nanvl(call_function("graft_cos_f32", col("embedding"), c.getField("centroid"))
+              .cast("double"), lit(-1d))).as("nc"),
+            c.getField("label").as("label")))), 1, nprobe)).as("c"))
+      .select(col("q_id"), col("c.label").as("label"))
     // candidates = members of each probed cell (a neighbor lives in exactly
     // one cell, so no pair duplicates); exact cosine ranks per query
     probes

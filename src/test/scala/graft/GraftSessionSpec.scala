@@ -45,7 +45,7 @@ class GraftSessionSpec extends AnyFunSuite {
     val shared = SparkSpec.session
     val advisoryBefore =
       shared.conf.getOption("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-    val noInput = Files.createTempDirectory("graft-no-input").toString
+    val noInput = SparkSpec.tempDir("graft-no-input").toString
     val s = GraftSession.configure(SparkSession.builder(), 4, noInput).create()
     try {
       val opts = GraftSessionHooks.builderOptions(s)

@@ -72,7 +72,7 @@ object CtbIngestProps extends Properties("CtbIngest") {
       (rows, eol) =>
       // CRLF rendering leaves "\r" on every non-final line — per-field
       // whitespace-strip (reference str.strip()) must absorb it
-      val f = java.nio.file.Files.createTempFile("prop", ".tsv")
+      val f = graft.SparkSpec.tempDir("prop").resolve("prop.tsv")
       java.nio.file.Files.write(f,
         (header +: rows.map(_.rendered)).mkString(eol).getBytes("UTF-8"))
       val res = CtbIngest.ingestFile(spark, f.toString)

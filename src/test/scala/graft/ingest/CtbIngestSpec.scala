@@ -35,7 +35,7 @@ class CtbIngestSpec extends AnyFunSuite with SparkSpec {
   }
 
   private def writeTsv(lines: Seq[String]): Path = {
-    val f = Files.createTempFile("ctb", ".tsv")
+    val f = SparkSpec.tempDir("ctb").resolve("ctb.tsv")
     Files.write(f, lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
     f
   }
@@ -62,7 +62,7 @@ class CtbIngestSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("multi-file input fails the file instead of interleaving line numbers") {
-    val dir = Files.createTempDirectory("ctbmulti")
+    val dir = SparkSpec.tempDir("ctbmulti")
     Seq("a.tsv", "b.tsv").foreach { n =>
       Files.write(dir.resolve(n),
         (Seq(headerLine) ++ Seq(validRow().mkString("\t"))).mkString("\n")
@@ -74,7 +74,7 @@ class CtbIngestSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("ingestMany: a directory of mixed files ingests as one plan with per-file accounting") {
-    val dir = Files.createTempDirectory("ctbmany")
+    val dir = SparkSpec.tempDir("ctbmany")
     def put(name: String, lines: Seq[String]): Unit =
       Files.write(dir.resolve(name), lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
     // two files sharing the full layout, one with a valid SUBSET layout
@@ -121,7 +121,7 @@ class CtbIngestSpec extends AnyFunSuite with SparkSpec {
   test("ingestMany: a 0-byte file is failed as B1 despite yielding no scan rows") {
     // a truly empty file (0 bytes, not blank lines) contributes nothing to
     // the text scan — ingestMany must catch it from its own FS listing
-    val dir = Files.createTempDirectory("ctbzero")
+    val dir = SparkSpec.tempDir("ctbzero")
     Files.write(dir.resolve("zero.tsv"), Array.empty[Byte])
     Files.write(dir.resolve("ok.tsv"),
       Seq(headerLine, validRow(Map(0 -> "ZZZ")).mkString("\t"))
@@ -169,7 +169,7 @@ class CtbIngestSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("ingestMany scales to a 50-file directory with per-file accounting intact") {
-    val dir = Files.createTempDirectory("ctb50")
+    val dir = SparkSpec.tempDir("ctb50")
     (1 to 50).foreach { i =>
       val rows = (1 to 1 + i % 3).map(r => validRow(Map(0 -> f"F$i%02dR$r")).mkString("\t"))
       Files.write(dir.resolve(f"f$i%02d.tsv"),
@@ -186,7 +186,7 @@ class CtbIngestSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("CRLF files ingest cleanly: the CR on each row's last field is stripped") {
-    val f = Files.createTempFile("ctbcrlf", ".tsv")
+    val f = SparkSpec.tempDir("ctbcrlf").resolve("ctbcrlf.tsv")
     Files.write(f, (headerLine.stripSuffix("\r") +: Seq(
       validRow().mkString("\t"),
       validRow(Map(0 -> "ORG2")).mkString("\t"))).mkString("\r\n").getBytes(StandardCharsets.UTF_8))
@@ -364,7 +364,7 @@ class CtbIngestSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("ingestFile on a directory of one CTB file and a 0-byte file ingests the CTB file") {
-    val dir = Files.createTempDirectory("ctbonezero")
+    val dir = SparkSpec.tempDir("ctbonezero")
     Files.write(dir.resolve("zero.tsv"), Array.empty[Byte])
     Files.write(dir.resolve("ok.tsv"), Seq(
       Seq("Org Code", "Demand Qty", "Demand Due Date").mkString("\t"),
@@ -382,7 +382,7 @@ class CtbIngestSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("ingestFile on an empty directory fails as an empty file") {
-    val res = CtbIngest.ingestFile(spark, Files.createTempDirectory("ctbnone").toString)
+    val res = CtbIngest.ingestFile(spark, SparkSpec.tempDir("ctbnone").toString)
     assert(res.fileFailed)
     assert(res.failureReason.contains("File is empty"))
     assert(res.clean.columns.toSeq == graft.schema.CtbSchema.canonicalColumns)

@@ -22,7 +22,7 @@ class CtbTagCodegenSpec extends AnyFunSuite with SparkSpec with AdaptiveSparkPla
 
   /** The executed plan of `ingestManyLines(...).tagged` over two files. */
   private def taggedPlan(): SparkPlan = {
-    val dir = Files.createTempDirectory("ctb-codegen")
+    val dir = SparkSpec.tempDir("ctb-codegen")
     val header = CtbSchema.canonicalColumns.mkString("\t")
     val row = Seq("ORG1", "ACME", "C1", "I1", "CP", "desc", "2025-01-15", "1,000", "90",
       "2025-01-20", "F-A", "2025-01-22", "10", "2", "1", "GP", "M", "14", "GCP", "d",

@@ -54,7 +54,7 @@ class LifecycleObjectStoreSpec extends AnyFunSuite with SparkSpec {
   private def freshDir(): String = {
     spark.sparkContext.hadoopConfiguration
       .set("fs.nonatomic.impl", classOf[NonAtomicFs].getName)
-    Files.createTempDirectory("lifecycle-os").toString
+    SparkSpec.tempDir("lifecycle-os").toString
   }
 
   private def mkSrc(dir: String, name: String, content: String): String = {

@@ -8,7 +8,7 @@ import java.nio.file.{Files, Paths}
 class LifecycleSpec extends AnyFunSuite with SparkSpec {
 
   private def tmpDir(): String =
-    Files.createTempDirectory("lifecycle").toString
+    SparkSpec.tempDir("lifecycle").toString
 
   test("C1: archive copies raw bytes, leaving the source in place") {
     val dir = tmpDir()

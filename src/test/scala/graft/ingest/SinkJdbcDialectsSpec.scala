@@ -40,7 +40,7 @@ class SinkJdbcDialectsSpec extends AnyFunSuite with SparkSpec {
   // dir BEFORE the engine loads; only this suite touches Derby, so the
   // constructor runs early enough.
   System.setProperty("derby.system.home",
-    java.nio.file.Files.createTempDirectory("derby-home").toString)
+    SparkSpec.tempDir("derby-home").toString)
 
   // ---- arm 1: Derby in-memory through Spark's full JDBC writer -----------
 

@@ -1,6 +1,5 @@
 package graft.ingest
 
-import java.nio.file.Files
 
 import graft.SparkSpec
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class SinkJdbcSpec extends AnyFunSuite with SparkSpec {
 
   private def freshDb(name: String): String = {
-    val dir = Files.createTempDirectory(name).resolve("db")
+    val dir = SparkSpec.tempDir(name).resolve("db")
     s"jdbc:derby:$dir;create=true"
   }
 
@@ -76,7 +75,7 @@ class SinkJdbcSpec extends AnyFunSuite with SparkSpec {
     import org.apache.spark.sql.functions._
     val url = freshDb("jdbc_chaos")
     SinkJdbc.init(url, "sink", "doc_id BIGINT NOT NULL, batch_id BIGINT NOT NULL")
-    val ckpt = Files.createTempDirectory("jdbc-chaos-ckpt").toString
+    val ckpt = SparkSpec.tempDir("jdbc-chaos-ckpt").toString
     val want = spark.read.format(classOf[DocGenSource].getName)
       .option("rows", "300").option("partitions", "2").load()
       .select("doc_id").collect().map(_.getLong(0)).toSet

@@ -8,7 +8,7 @@ import java.nio.file.Files
 class SinkSpec extends AnyFunSuite with SparkSpec {
 
   private def tmp(name: String): String =
-    Files.createTempDirectory(name).resolve("t").toString
+    SparkSpec.tempDir(name).resolve("t").toString
 
   test("C2: tableExists is false for a missing path, true after init") {
     val path = tmp("sink")
@@ -59,7 +59,7 @@ class SinkSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("C2: tableExists rejects a non-empty directory that is not a parquet table") {
-    val dir = Files.createTempDirectory("notatable")
+    val dir = SparkSpec.tempDir("notatable")
     Files.writeString(dir.resolve("readme.txt"), "unrelated")
     assert(!Sink.tableExists(spark, dir.toString))
   }

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class BitmapIncrementalSpec extends AnyFunSuite with SparkSpec {
 
   private def tmpDir(): String =
-    java.nio.file.Files.createTempDirectory("graft-bitmap").toString + "/state"
+    SparkSpec.tempDir("graft-bitmap").toString + "/state"
 
   private def report(df: org.apache.spark.sql.DataFrame): Map[String, (Long, Long)] =
     df.collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap

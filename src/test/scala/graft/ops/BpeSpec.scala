@@ -74,9 +74,8 @@ class BpeSpec extends AnyFunSuite with SparkSpec {
   test("size dispatch parity: local and distributed rounds learn identical merges") {
     // the dispatch bound exists so a 30-50k-merge vocabulary doesn't pay
     // one Spark job per round; parity between the two shapes is the
-    // contract that makes the bound safe (the MaxLiteralFoldCells
-    // discipline). localMaxWords=0 forces the distributed rounds on a
-    // corpus that would otherwise dispatch local.
+    // contract that makes the bound safe. localMaxWords=0 forces the
+    // distributed rounds on a corpus that would otherwise dispatch local.
     val docs = (0L until 60L).map(i => (i, s"low lower newest widest ab${i % 5} xy"))
     val df = spark.sparkContext.parallelize(docs, 3).toDF("doc_id", "text")
     val local = Bpe.train(df, 8)

@@ -114,7 +114,7 @@ class CorpusOpsSpec extends AnyFunSuite with SparkSpec {
     val shared = (0 until 100).map(i => s"shared$i").mkString(" ")
     val doc1 = (0 until 200).map(i => s"a$i").mkString(" ") + " " + shared
     val doc2 = (0 until 66000).map(i => s"b$i").mkString(" ") + " " + shared
-    val dir = java.nio.file.Files.createTempDirectory("winnow-clamp").toString
+    val dir = SparkSpec.tempDir("winnow-clamp").toString
     Seq((1L, doc1), (2L, doc2)).toDF("doc_id", "text")
       .writeTable(dir, "documents")
     val out = CorpusOps.queries("dedup_winnowing")(spark, dir).collect()

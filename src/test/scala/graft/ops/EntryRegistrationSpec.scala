@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.SparkSpec
 import graft.expressions.GraftFunctions
-import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -60,14 +59,14 @@ class EntryRegistrationSpec extends AnyFunSuite with SparkSpec {
     * need one; the entry under test then runs on a bare session.
     */
   private def index(): String = {
-    val dir = Files.createTempDirectory("ivf-reg").toString
+    val dir = SparkSpec.tempDir("ivf-reg").toString
     IvfIncremental.bootstrap(spark, floatVecs(spark, 0, 16), nCells = 4, dir)
     dir
   }
 
   onBare("IvfIncremental.bootstrap") { ns =>
     IvfIncremental.bootstrap(ns, floatVecs(ns, 0, 16), nCells = 4,
-      Files.createTempDirectory("ivf-reg").toString)
+      SparkSpec.tempDir("ivf-reg").toString)
   }
   onBare("IvfIncremental.addBatch") { ns =>
     analyzed(IvfIncremental.addBatch(ns, floatVecs(ns, 16, 8), index()))
@@ -93,7 +92,7 @@ class EntryRegistrationSpec extends AnyFunSuite with SparkSpec {
       (3L, (1 to 30).map(i => s"alpha$i").mkString(" ")))).toDF("doc_id", "text")
 
   onBare("MinHashIncremental.dedupBatch") { ns =>
-    val state = Files.createTempDirectory("mh-reg").resolve("bands").toString
+    val state = SparkSpec.tempDir("mh-reg").resolve("bands").toString
     analyzed(MinHashIncremental.dedupBatch(ns, docs(ns), state).pairs)
   }
   onBare("MinHashIncremental.dedupBatchBucketed") { ns =>

@@ -18,7 +18,7 @@ class GramDfIncrementalSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("two batches == one from-scratch pass; history flags today's boilerplate") {
-    val dir = java.nio.file.Files.createTempDirectory("gramdf").toString
+    val dir = SparkSpec.tempDir("gramdf").toString
     val state = s"$dir/gram_df"
 
     val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet

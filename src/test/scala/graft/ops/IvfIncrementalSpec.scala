@@ -25,7 +25,7 @@ class IvfIncrementalSpec extends AnyFunSuite with SparkSpec {
 
   test("bootstrap + addBatch + probe matches brute force; state stays consistent") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ivf-inc").toString
+    val dir = SparkSpec.tempDir("ivf-inc").toString
     val all = (0 until 100).map(i => (i.toLong, mkVec(i)))
     val batch1 = all.take(50).toDF("vec_id", "embedding")
     val batch2 = all.drop(50).toDF("vec_id", "embedding")
@@ -77,7 +77,7 @@ class IvfIncrementalSpec extends AnyFunSuite with SparkSpec {
 
     // incremental == batch: an index built from both batches at once ranks
     // identically under the same centroid seeds' cell structure
-    val dir2 = java.nio.file.Files.createTempDirectory("ivf-all").toString
+    val dir2 = SparkSpec.tempDir("ivf-all").toString
     IvfIncremental.bootstrap(spark, all.toDF("vec_id", "embedding"), nCells = 4, dir2)
     val got2 = IvfIncremental.probe(spark, dir2, probeVec, nprobe = 4, k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(2)))
@@ -86,7 +86,7 @@ class IvfIncrementalSpec extends AnyFunSuite with SparkSpec {
 
   test("recluster rebalances a drifted index with the convergent KMeans kernel") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ivf-recluster").toString
+    val dir = SparkSpec.tempDir("ivf-recluster").toString
     val all = (0 until 120).map(i => (i.toLong, mkVec(i)))
     // adversarial bootstrap: the first batch is ONLY cluster-0 vectors
     // (ids ≡ 0 mod 4), so all 4 seed cells sit inside one true cluster —
@@ -143,7 +143,7 @@ class IvfIncrementalSpec extends AnyFunSuite with SparkSpec {
 
     // drifted index fixture: cluster-0-only bootstrap, rest added after
     def build(): String = {
-      val dir = java.nio.file.Files.createTempDirectory("ivf-atomic").toString
+      val dir = SparkSpec.tempDir("ivf-atomic").toString
       IvfIncremental.bootstrap(spark,
         all.filter(_._1 % 4 == 0).toDF("vec_id", "embedding"), nCells = 4, dir)
       IvfIncremental.addBatch(spark,
@@ -212,7 +212,7 @@ class IvfIncrementalSpec extends AnyFunSuite with SparkSpec {
 
   test("addBatchAuto self-heals accretion skew: trigger fires, rebalances, then stays quiet") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ivf-auto").toString
+    val dir = SparkSpec.tempDir("ivf-auto").toString
     val all = (0 until 120).map(i => (i.toLong, mkVec(i)))
     // adversarial accretion: cluster-0-only bootstrap collapses the cell
     // structure (all 4 seeds inside one true cluster), so the batch that
@@ -250,7 +250,7 @@ class IvfIncrementalSpec extends AnyFunSuite with SparkSpec {
 
   test("probe completes an interrupted centroid swap") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ivf-crash").toString
+    val dir = SparkSpec.tempDir("ivf-crash").toString
     val all = (0 until 40).map(i => (i.toLong, mkVec(i)))
     IvfIncremental.bootstrap(spark, all.toDF("vec_id", "embedding"), nCells = 4, dir)
 
@@ -275,24 +275,43 @@ class IvfIncrementalSpec extends AnyFunSuite with SparkSpec {
     assert(fs.exists(cd) && !fs.exists(old))
   }
 
-  test("assignToFolded (large-#cells shape) is bit-equal to the flat fold; empty set guarded") {
+  /** `n` pseudo-random (cell, csum, cnt) centroids in shuffled cell order,
+    * with the first one repeated under a higher and a lower cell id (the
+    * exact score ties).
+    */
+  private def randomCents(n: Int): Array[(Long, Array[Long], Long)] = {
+    val rnd = new scala.util.Random(n)
+    val base = (0 until n).map(i =>
+      (3L * i + 10, Array.fill(8)(rnd.nextInt(4000).toLong), 1L + rnd.nextInt(9)))
+    val (_, csum, cnt) = base.head
+    rnd.shuffle(base ++ Seq((3L * n + 10, csum, cnt), (5L, csum, cnt))).toArray
+  }
+
+  test("assignTo = driver-side argmax at 8 and 600 cells; empty set guarded") {
     import spark.implicits._
     graft.expressions.GraftFunctions.register(spark)
-    val q = (0 until 40).map(i => (i.toLong, quant(mkVec(i)))).toDF("vec_id", "q")
+    val vecs = (0 until 40).map(i => (i.toLong, quant(mkVec(i))))
+    val q = vecs.toDF("vec_id", "q")
     val cents: Array[(Long, Array[Long], Long)] = (0 until 4).map { c =>
       val members = (0 until 40).filter(_ % 4 == c).map(i => quant(mkVec(i)))
       val sums = (0 until 8).map(d => members.map(_(d)).sum).toArray
       (c.toLong, sums, members.size.toLong)
     }.toArray
-    val flat = IvfIncremental.assignTo(q, cents).orderBy("vec_id").collect()
-    val folded = IvfIncremental.assignToFolded(q, cents).orderBy("vec_id").collect()
-    assert(flat.length == 40 && flat.sameElements(folded))
+    // mean-dot argmax, ties to the lower cell
+    def brute(cs: Array[(Long, Array[Long], Long)]): Map[Long, Long] =
+      vecs.map { case (id, v) =>
+        id -> cs.map { case (cell, csum, cnt) =>
+          (-(dot(v, csum.toSeq).toDouble / cnt.toDouble), cell)
+        }.min._2
+      }.toMap
+    def got(cs: Array[(Long, Array[Long], Long)]): Map[Long, Long] =
+      IvfIncremental.assignTo(q, cs).select($"vec_id", $"cell").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    for (cs <- Seq(cents ++ randomCents(2), randomCents(598)))
+      assert(got(cs) == brute(cs), s"at ${cs.length} cells")
     // a duplicated centroid ties every row's best score: lower cell wins
-    // in BOTH shapes (the greatest()-with-negated-tie vs lambda parity)
-    val dup = Array((3L, cents(0)._2, cents(0)._3), (9L, cents(0)._2, cents(0)._3))
-    val ft = IvfIncremental.assignTo(q, dup).select($"cell").collect().map(_.getLong(0))
-    val fo = IvfIncremental.assignToFolded(q, dup).select($"cell").collect().map(_.getLong(0))
-    assert(ft.forall(_ == 3L) && fo.forall(_ == 3L))
+    val dup = Array((9L, cents(0)._2, cents(0)._3), (3L, cents(0)._2, cents(0)._3))
+    assert(got(dup).values.forall(_ == 3L))
     // empty centroid set: empty frame with the assigned schema, no throw
     // (the bootstrap-over-empty-batch edge — used to die at analysis time)
     val e = IvfIncremental.assignTo(q, Array.empty)
@@ -301,7 +320,7 @@ class IvfIncrementalSpec extends AnyFunSuite with SparkSpec {
 
   test("probeBatch answers every query exactly like per-query probe, in one job") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ivf-batch-probe").toString
+    val dir = SparkSpec.tempDir("ivf-batch-probe").toString
     val all = (0 until 120).map(i => (i.toLong, mkVec(i)))
     IvfIncremental.bootstrap(spark, all.take(60).toDF("vec_id", "embedding"), nCells = 4, dir)
     IvfIncremental.addBatch(spark, all.drop(60).toDF("vec_id", "embedding"), dir).count()
@@ -329,37 +348,87 @@ class IvfIncrementalSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("probeBatch size dispatch: the shuffle shape is broadcast-free and bit-identical to the broadcast shape") {
+  /** Driver-side brute force of [[IvfIncremental.probeBatch]] over the
+    * index's collected tables: per query the `nprobe` best mean-dot cells
+    * (ties to the lower cell), then the top-k members by (dot desc,
+    * vec_id asc).
+    */
+  private def bruteProbe(dir: String, queries: Seq[(Long, Seq[Float])],
+      nprobe: Int, k: Int): Map[Long, Seq[(Long, Long, Long)]] = {
+    val cents = spark.read.parquet(s"$dir/centroids").select("cell", "csum", "cnt").collect()
+      .map(r => (r.getLong(0), r.getSeq[Long](1), r.getLong(2)))
+    val stored = spark.read.parquet(s"$dir/vectors")
+      .selectExpr("vec_id", "cast(cell as long) as cell", "q").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2)))
+    queries.map { case (qid, v) =>
+      val pq = quant(v)
+      val cells = cents.map { case (c, csum, cnt) => (-(dot(pq, csum).toDouble / cnt.toDouble), c) }
+        .sorted.take(nprobe).map(_._2).toSet
+      qid -> stored.filter(s => cells(s._2)).map { case (id, c, sq) => (id, c, dot(sq, pq)) }
+        .sortBy { case (id, _, d) => (-d, id) }.take(k).toSeq
+    }.toMap
+  }
+
+  private def probeRows(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[(Long, Long, Long)]] =
+    df.collect().groupBy(_.getAs[Long]("q_id")).map { case (qid, rows) =>
+      qid -> rows.sortBy(_.getAs[Int]("rnk")).map(r =>
+        (r.getAs[Long]("vec_id"), r.getAs[Long]("cell"), r.getAs[Long]("dot_q"))).toSeq
+    }
+
+  test("probeBatch equals a driver-side top-nprobe, top-k at 8 and 600 cells") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ivf-batch-dispatch").toString
+    val rnd = new scala.util.Random(3)
+    def rndVec(): Seq[Float] = Seq.fill(8)(rnd.nextFloat())
+    for (nCells <- Seq(8, 600)) {
+      // the index written directly, two members per cell; the first two
+      // cells' centroid rows are replaced by one equal, dominant mean, so
+      // they tie for every query's best score
+      val dir = SparkSpec.tempDir("ivf-batch-brute").toString
+      val vecs = (0 until 2 * nCells).map(i => (i.toLong, (i % nCells).toLong * 3 + 10, quant(rndVec())))
+      vecs.toDF("vec_id", "cell", "q").coalesce(1)
+        .write.partitionBy("cell").parquet(s"$dir/vectors")
+      val sums = vecs.groupBy(_._2).map { case (cell, ms) =>
+        (cell, ms.map(_._3).transpose.map(_.sum), ms.size.toLong)
+      }.toSeq.sortBy(_._1)
+      val top = Seq.fill(8)(50000L)
+      (sums.take(2).map(_.copy(_2 = top, _3 = 2L)) ++ sums.drop(2))
+        .toDF("cell", "csum", "cnt").write.parquet(s"$dir/centroids")
+      val queries = (0 until 6).map(i => (i.toLong + 1000, rndVec()))
+      for (nprobe <- Seq(1, 3)) {
+        val got = probeRows(IvfIncremental.probeBatch(spark,
+          queries.toDF("vec_id", "embedding"), dir, nprobe = nprobe, k = 5))
+        assert(got == bruteProbe(dir, queries, nprobe, k = 5), s"at $nCells cells, nprobe=$nprobe")
+        if (nprobe == 1) assert(got.values.flatten.forall(_._2 == 10L), "tie must break to the lower cell")
+      }
+    }
+  }
+
+  test("probeBatch: same rows with auto-broadcast on and off, in 5 build jobs") {
+    import spark.implicits._
+    val dir = SparkSpec.tempDir("ivf-batch-join").toString
     val all = (0 until 120).map(i => (i.toLong, mkVec(i)))
     IvfIncremental.bootstrap(spark, all.toDF("vec_id", "embedding"), nCells = 4, dir)
     val queries = (0 until 25).map(i => (i.toLong + 1000, mkVec(i * 3))).toDF("vec_id", "embedding")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("vec_id"),
-        r.getAs[Long]("cell"), r.getAs[Long]("dot_q"), r.getAs[Int]("rnk"))).toSet
-    val small = IvfIncremental.probeBatch(spark, queries, dir, nprobe = 2, k = 5)
-    // sparkPlan predates exchange insertion — the join node is the signal
-    assert(small.queryExecution.sparkPlan.toString.contains("BroadcastHashJoin"),
-      "below the bound the probe side must broadcast")
-    // kill auto-broadcast so the assertion sees the shape the code asked
-    // for, not one the optimizer substituted from tiny test-data stats
+    // building the plan reads two table schemas, collects the centroid
+    // table and collects the probed cells (a shuffle stage and a result
+    // job): 5 jobs
+    var auto: org.apache.spark.sql.DataFrame = null
+    assert(SparkSpec.jobsOf("probe-batch-build") {
+      auto = IvfIncremental.probeBatch(spark, queries, dir, nprobe = 2, k = 5)
+    } == 5)
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      // bound 0 forces the score-a-whole-shard shape on the same input
-      val large = IvfIncremental.probeBatch(spark, queries, dir, nprobe = 2, k = 5,
-        maxBroadcastProbeRows = 0L)
-      val lp = large.queryExecution.sparkPlan.toString
-      assert(!lp.contains("BroadcastHashJoin") && !lp.contains("BroadcastExchange"),
-        "above the bound the probe side must shuffle, never broadcast")
-      assert(rows(large) == rows(small), "dispatch shapes must be bit-identical")
+      val shuffled = IvfIncremental.probeBatch(spark, queries, dir, nprobe = 2, k = 5)
+      assert(!shuffled.queryExecution.sparkPlan.toString.contains("Broadcast"))
+      assert(probeRows(shuffled) == probeRows(auto))
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    assert(probeRows(auto).size == 25)
   }
 
   test("addBatchAuto trigger scales by the persisted cell target, not the caller's nCells") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ivf-auto-stale").toString
+    val dir = SparkSpec.tempDir("ivf-auto-stale").toString
     val all = (0 until 80).map(i => (i.toLong, mkVec(i)))
     IvfIncremental.bootstrap(spark, all.take(40).toDF("vec_id", "embedding"), nCells = 4, dir)
     assert(IvfIncremental.readCellTarget(spark, dir).contains(4))

@@ -114,23 +114,60 @@ class KMeansSpec extends AnyFunSuite with SparkSpec {
     } finally { vecs.unpersist(); () }
   }
 
-  test("assignFolded (the large-k shape) is bit-equal to assignFlat, ties included") {
-    val vecs = clustered()
-    val m = KMeans.fit(vecs, k = 3, maxRounds = 5)
-    val flat = KMeans.assignFlat(vecs, m.centroids).orderBy("vec_id").collect()
-    val folded = KMeans.assignFolded(vecs, m.centroids).orderBy("vec_id").collect()
-    assert(flat.length == 60 && flat.sameElements(folded),
-      "shape dispatch must be invisible in the output")
-    // duplicate centroids force an exact (part) tie on every row: both
-    // shapes must break to the LOWER cell id
-    val dup = Array((2, m.centroids(0)._2), (7, m.centroids(0)._2))
-    val ft = KMeans.assignFlat(vecs, dup).select(col("cell")).collect().map(_.getInt(0))
-    val fo = KMeans.assignFolded(vecs, dup).select(col("cell")).collect().map(_.getInt(0))
-    assert(ft.forall(_ == 2) && fo.forall(_ == 2), "tie must break to the lower cell")
-    // the public dispatch rejects an empty centroid set with a clear error
-    assertThrows[IllegalArgumentException] {
-      KMeans.assign(vecs, Array.empty[(Int, Array[Long])])
-    }
+  /** Driver-side brute force of [[KMeans.assign]]: per vector the
+    * (|c|² − 2·v·c, cell) lexicographic minimum, reported as (cell, d2).
+    */
+  private def bruteAssign(vecs: DataFrame, cents: Array[(Int, Array[Long])]): Map[Long, (Int, Long)] = {
+    def dot(a: Array[Long], b: Array[Long]): Long = a.zip(b).map { case (x, y) => x * y }.sum
+    vecs.select("vec_id", "v").collect().map { r =>
+      val v = r.getSeq[Long](1).toArray
+      val (part, cell) = cents.map { case (c, cv) => (dot(cv, cv) - 2 * dot(v, cv), c) }.min
+      r.getLong(0) -> (cell, dot(v, v) + part)
+    }.toMap
+  }
+
+  private def assigned(vecs: DataFrame, cents: Array[(Int, Array[Long])]): Map[Long, (Int, Long)] =
+    KMeans.assign(vecs, cents).select("vec_id", "cell", "d2").collect()
+      .map(r => r.getLong(0) -> (r.getInt(1), r.getLong(2))).toMap
+
+  /** `n` pseudo-random 4-d centroids over the clustered range, listed in
+    * shuffled cell order, with the first centroid's vector repeated under
+    * a higher and a lower cell id (the exact ties).
+    */
+  private def randomCents(n: Int): Array[(Int, Array[Long])] = {
+    val rnd = new scala.util.Random(n)
+    val base = (0 until n).map(i => (3 * i + 10, Array.fill(4)(rnd.nextInt(6000).toLong)))
+    val tied = Seq((3 * n + 10, base.head._2), (5, base.head._2))
+    rnd.shuffle(base ++ tied).toArray
+  }
+
+  test("assign equals a driver-side argmin at 8 and 600 cells, ties included") {
+    val vecs = clustered().persist()
+    try {
+      // the fitted 3-cell model plus 5 random cells, then 600 random cells
+      val m = KMeans.fit(vecs, k = 3, maxRounds = 5)
+      for (cents <- Seq(m.centroids ++ randomCents(3), randomCents(598))) {
+        assert(assigned(vecs, cents) == bruteAssign(vecs, cents), s"at ${cents.length} cells")
+      }
+      // duplicate centroids force an exact (part) tie on every row: the
+      // LOWER cell id wins
+      val dup = Array((7, m.centroids(0)._2), (2, m.centroids(0)._2))
+      assert(assigned(vecs, dup).values.forall(_._1 == 2), "tie must break to the lower cell")
+      assertThrows[IllegalArgumentException] {
+        KMeans.assign(vecs, Array.empty[(Int, Array[Long])])
+      }
+    } finally { vecs.unpersist(); () }
+  }
+
+  test("assign's optimized plan is as large at 2,048 cells as at 8") {
+    // a range, not a local Seq: the optimizer would fold a projection of
+    // local rows into a LocalRelation and leave no expressions to count
+    val vecs = spark.range(60).select(col("id").as("vec_id"),
+      array((0 until 4).map(j => col("id") * 71 + j): _*).as("v"))
+    def exprNodes(n: Int): Int =
+      KMeans.assign(vecs, randomCents(n - 2)).queryExecution.optimizedPlan
+        .collect { case p => p.expressions.map(_.collect { case e => e }.size).sum }.sum
+    assert(exprNodes(8) > 0 && exprNodes(8) == exprNodes(2048))
   }
 
   test("fit leaves no persisted RDDs behind (centroids are driver state)") {

@@ -23,7 +23,7 @@ class LayoutOpsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("range-clustered layout prunes row groups an unclustered layout reads") {
-    val root = java.nio.file.Files.createTempDirectory("layout").toString
+    val root = SparkSpec.tempDir("layout").toString
     val src = spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet")
     val total = src.count()
 
@@ -60,7 +60,7 @@ class LayoutOpsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("z-order layout prunes on BOTH dimensions from one write order") {
-    val root = java.nio.file.Files.createTempDirectory("zorder").toString
+    val root = SparkSpec.tempDir("zorder").toString
     // synthetic 2-d table: both coords uniform on the 16-bit grid
     import spark.implicits._
     val src = (0L until 40000L).toDF("id")
@@ -116,7 +116,7 @@ class LayoutOpsSpec extends AnyFunSuite with SparkSpec {
 
   test("column bloom filters prune equality lookups that min/max stats cannot") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("bloom").toString
+    val root = SparkSpec.tempDir("bloom").toString
     // high-cardinality scrambled key: every file's [min, max] spans the
     // whole domain, so stats prune nothing for a point lookup
     val src = (1L to 40000L).toDF("id")
@@ -142,7 +142,7 @@ class LayoutOpsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("file-stats manifest prunes at planning time and preserves results") {
-    val root = java.nio.file.Files.createTempDirectory("fstats").toString
+    val root = SparkSpec.tempDir("fstats").toString
     val src = spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet")
     LayoutOps.writeRangeClustered(src, s"$root/t", Seq("l_orderkey"),
       targetRowsPerFile = 4000, numPartitions = Some(4))
@@ -171,7 +171,7 @@ class LayoutOpsSpec extends AnyFunSuite with SparkSpec {
 
   test("compactSmallFiles: 64 micro-files become 1, rows and content preserved") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("compact").toString
+    val root = SparkSpec.tempDir("compact").toString
     val path = s"$root/t"
     val df = (1L to 5000L).toDF("id").withColumn("v", col("id") * 7)
     df.repartition(64).write.parquet(path) // the streaming-sink debris shape
@@ -190,7 +190,7 @@ class LayoutOpsSpec extends AnyFunSuite with SparkSpec {
 
   test("compactSmallFiles: targetBytes bounds output file count from actual bytes") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("compact").toString
+    val root = SparkSpec.tempDir("compact").toString
     val path = s"$root/t"
     (1L to 20000L).toDF("id").withColumn("pad", md5(col("id").cast("string")))
       .repartition(32).write.parquet(path)

@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.SparkSpec
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** Incremental MinHash dedup: each batch is checked against the persisted
   * band table — historical TEXT is never re-read, old-vs-old pairs are
@@ -20,7 +19,7 @@ class MinHashIncrementalSpec extends AnyFunSuite with SparkSpec {
   private val textC = (1 to 30).map(i => s"gamma$i").mkString(" ")
 
   test("batches dedup against accumulated state without re-reading old text") {
-    val state = Files.createTempDirectory("mhinc").resolve("bands").toString
+    val state = SparkSpec.tempDir("mhinc").resolve("bands").toString
 
     // batch 1: two unrelated docs — no pairs, state seeded
     val b1 = MinHashIncremental.dedupBatch(spark, docs(1L -> textA, 2L -> textB), state)

@@ -15,14 +15,14 @@ class MiningOpsSpec extends AnyFunSuite with SparkSpec {
 
   private def writeDocs(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("mining").toString
+    val dir = SparkSpec.tempDir("mining").toString
     rows.toDF("doc_id", "text").writeTable(dir, "documents")
     dir
   }
 
   private def writeOrders(rows: Seq[(Long, String, Double, java.sql.Timestamp)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("mining").toString
+    val dir = SparkSpec.tempDir("mining").toString
     rows.toDF("o_orderkey", "o_orderpriority", "o_totalprice", "o_orderdate")
       .writeTable(dir, "orders")
     dir
@@ -75,7 +75,7 @@ class MiningOpsSpec extends AnyFunSuite with SparkSpec {
 
   test("events_paths: path order follows event_id, not input row order") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("mining").toString
+    val dir = SparkSpec.tempDir("mining").toString
     // rows deliberately written out of sequence order
     Seq((3L, 30L * 1000000000L, 1L, "purchase", 1.0),
         (1L, 10L * 1000000000L, 1L, "view", 1.0),
@@ -115,7 +115,7 @@ class MiningOpsSpec extends AnyFunSuite with SparkSpec {
 
   test("events_attribution: window edges and integer credit split") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("mining").toString
+    val dir = SparkSpec.tempDir("mining").toString
     val G = 1000000000L
     // purchase at t=5000s, value 1.00 -> 100 cents
     Seq((10L, 5000L * G, 1L, "purchase", 1.0),

@@ -19,7 +19,7 @@ class MultimodalOpsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("binaryFile source reads real files into envelopes with kind from extension") {
-    val dir = java.nio.file.Files.createTempDirectory("media")
+    val dir = SparkSpec.tempDir("media")
     java.nio.file.Files.write(dir.resolve("a.png"), Array[Byte](1, 2, 3, 4))
     java.nio.file.Files.write(dir.resolve("b.wav"), Array[Byte](5, 6))
     java.nio.file.Files.write(dir.resolve("c.mp4"), Array[Byte](7, 8, 9))

@@ -16,7 +16,7 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpec {
     */
   private def writeEvents(rows: Seq[(Long, Long, Long, String, Double)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("pipeops").toString
+    val dir = SparkSpec.tempDir("pipeops").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value")
       .writeTable(dir, "events")
     dir
@@ -99,7 +99,7 @@ class PipelineOpsSpec extends AnyFunSuite with SparkSpec {
 
   test("text_gram_df flags a crafted corpus-common gram") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("pipeops-doc").toString
+    val dir = SparkSpec.tempDir("pipeops-doc").toString
     val common = "alpha beta gamma" // shared 3-gram across 6 docs
     val docs = (0 until 6).map(i =>
       (i.toLong, s"$common unique$i tail$i words$i here$i", "en", "src", 40L)) :+

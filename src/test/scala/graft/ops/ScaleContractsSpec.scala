@@ -406,29 +406,13 @@ class ScaleContractsSpec extends AnyFunSuite with SparkSpec {
 
   // ---- synthetic heavy-dup + boilerplate corpus ---------------------------
 
-  /** Temp fixture dir that does NOT outlive the JVM: repeated CI runs would
-    * otherwise accrete one parquet corpus per invocation. A shutdown hook
-    * (not afterAll) because the fixtures are lazy vals shared across tests
-    * while the shared session is still serving other suites.
-    */
-  private def tmpFixtureDir(prefix: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(dir.toFile)
-    }
-    dir.toString
-  }
-
   /** 300 docs = 60 distinct templates x 5 exact copies, every doc ending in
     * the same 9-token boilerplate run: exact-dup collapse is material (the
     * simhash contract's teeth) and one fingerprint appears in ALL docs (the
     * df-cap contract's teeth).
     */
   private lazy val synthDir: String = {
-    val dir = tmpFixtureDir("contracts")
+    val dir = SparkSpec.tempDir("contracts").toString
     import spark.implicits._
     val boiler = "the quick brown fox jumps over the lazy dog"
     val rows = (0 until 300).map { id =>
@@ -735,7 +719,7 @@ class ScaleContractsSpec extends AnyFunSuite with SparkSpec {
     * contract-test scale.
     */
   private lazy val hotDir: String = {
-    val dir = tmpFixtureDir("contracts-hot")
+    val dir = SparkSpec.tempDir("contracts-hot").toString
     val src = spark.read.parquet(s"$sf/documents.parquet")
     val hotText = (0 until 40).map(i => s"hotblk$i").mkString(" ")
     val hot = spark.range(1024)
@@ -754,7 +738,7 @@ class ScaleContractsSpec extends AnyFunSuite with SparkSpec {
     * regression would pay for 5x over.
     */
   private lazy val dupDir: String = {
-    val dir = tmpFixtureDir("contracts-dup")
+    val dir = SparkSpec.tempDir("contracts-dup").toString
     val src = spark.read.parquet(s"$sf/documents.parquet")
     (0 until 5).map(k => src.withColumn("doc_id",
         col("doc_id") + lit(k.toLong * 100000L)))
@@ -768,7 +752,7 @@ class ScaleContractsSpec extends AnyFunSuite with SparkSpec {
     * four (band, sig) buckets.
     */
   private lazy val hotEmbDir: String = {
-    val dir = tmpFixtureDir("contracts-hotemb")
+    val dir = SparkSpec.tempDir("contracts-hotemb").toString
     val src = spark.read.parquet(s"$sf/embeddings.parquet")
     val one = src.orderBy("vec_id").limit(1).select(col("embedding"), col("label"))
     val hot = spark.range(256).crossJoin(one)
@@ -785,7 +769,7 @@ class ScaleContractsSpec extends AnyFunSuite with SparkSpec {
     * tokens (see the dedup_spans_near per-task contract).
     */
   private lazy val spansDir: String = {
-    val dir = tmpFixtureDir("contracts-spans")
+    val dir = SparkSpec.tempDir("contracts-spans").toString
     import spark.implicits._
     val rows = for { f <- 0 until 8; i <- 0 until 48 } yield {
       val common = (0 until 6).map(j => s"c${f}q$j").mkString(" ")
@@ -802,7 +786,7 @@ class ScaleContractsSpec extends AnyFunSuite with SparkSpec {
     * sessions — C(64,2) interval pairs per bin, spread over 16 bin keys.
     */
   private lazy val hotEventsDir: String = {
-    val dir = tmpFixtureDir("contracts-hotev")
+    val dir = SparkSpec.tempDir("contracts-hotev").toString
     val src = spark.read.parquet(s"$sf/events.parquet")
     import spark.implicits._
     val rows = for { h <- 0 until 16; u <- 0 until 64 } yield {

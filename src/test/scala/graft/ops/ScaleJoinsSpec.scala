@@ -78,7 +78,7 @@ class ScaleJoinsSpec extends AnyFunSuite with SparkSpec {
     // must not be broadcast (broadcast already prunes), and both sides
     // must be real scans (a LocalRelation constant-folds away, the DPP
     // gotcha again).
-    val dir = java.nio.file.Files.createTempDirectory("graft-rtbf").toString
+    val dir = SparkSpec.tempDir("graft-rtbf").toString
     (1L to 200000L).map(k => (k, k % 1000)).toDF("k", "payload")
       .write.mode("overwrite").parquet(s"$dir/fact")
     (1L to 5000L).map(k => (k, k % 50)).toDF("fk", "cat")
@@ -109,7 +109,7 @@ class ScaleJoinsSpec extends AnyFunSuite with SparkSpec {
   test("dynamic partition pruning: filtered dim prunes fact partitions at runtime") {
     import spark.implicits._
     import org.apache.spark.sql.execution.FileSourceScanExec
-    val root = java.nio.file.Files.createTempDirectory("dpp").toString
+    val root = SparkSpec.tempDir("dpp").toString
     // fact: 10k rows over 10 partitions on k
     (1L to 10000L).toDF("id").withColumn("k", col("id") % 10)
       .write.partitionBy("k").parquet(s"$root/fact")

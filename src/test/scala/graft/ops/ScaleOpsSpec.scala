@@ -111,7 +111,7 @@ class ScaleOpsSpec extends AnyFunSuite with SparkSpec {
     }
     // one table file of small row groups: the scan's split size then sets
     // how many input partitions the sketch is merged over
-    val dir = java.nio.file.Files.createTempDirectory("ams").toString
+    val dir = SparkSpec.tempDir("ams").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value")
       .writeTable(dir, "events", Map("parquet.block.size" -> "4096"))
     def runAt(splitBytes: Long): (Int, Long, Long, Long, Seq[Long]) = {

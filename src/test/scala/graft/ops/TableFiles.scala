@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.SparkSpec
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.DataFrame
 
@@ -13,7 +14,7 @@ object TableFiles {
   implicit class TableWriter(private val df: DataFrame) extends AnyVal {
     def writeTable(sfDir: String, name: String,
         options: Map[String, String] = Map.empty): Unit = {
-      val stage = Files.createTempDirectory("graft-table")
+      val stage = SparkSpec.tempDir("graft-table")
       val out = stage.resolve("out")
       df.coalesce(1).write.options(options).parquet(out.toString)
       val parts = out.toFile.listFiles().filter { f =>
@@ -22,11 +23,7 @@ object TableFiles {
       require(parts.length == 1, s"expected one part file in $out, got ${parts.length}")
       val target = Paths.get(sfDir, s"$name.parquet")
       Files.createDirectories(target.getParent)
-      Files.move(parts.head.toPath, target, StandardCopyOption.REPLACE_EXISTING)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      rm(stage.toFile)
+      Files.move(parts.head.toPath, target, StandardCopyOption.REPLACE_EXISTING): Unit
     }
   }
 }

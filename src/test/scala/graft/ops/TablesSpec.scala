@@ -35,7 +35,7 @@ class TablesSpec extends AnyFunSuite with SparkSpec {
     df.selectExpr("unix_micros(ts)").collect().map(_.getLong(0)).toSeq.sorted
 
   private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    SparkSpec.tempDir(prefix).toString
 
   private def session(ntz: Boolean, nanosAsLong: Boolean): SparkSession = {
     // sibling session: same SparkContext, independent SQL conf — flipping

@@ -15,7 +15,7 @@ class TemporalOpsSpec extends AnyFunSuite with SparkSpec {
 
   private def writeEvents(rows: Seq[(Long, Long, Long, String, Double)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("temporal").toString
+    val dir = SparkSpec.tempDir("temporal").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value")
       .writeTable(dir, "events")
     dir
@@ -81,7 +81,7 @@ class TemporalOpsSpec extends AnyFunSuite with SparkSpec {
 
   test("merge_upsert: latest version wins, inserts get new keys, ops are labeled") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("temporal").toString
+    val dir = SparkSpec.tempDir("temporal").toString
     val ts = java.sql.Timestamp.valueOf("2025-01-01 00:00:00")
     (1L to 20L).map(k => (k, k, "O", 100.37 * k, ts, "1-URGENT"))
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
@@ -102,7 +102,7 @@ class TemporalOpsSpec extends AnyFunSuite with SparkSpec {
 
   test("merge_ivm: retractions, inserts, zero-count deletion, brand-new keys") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("temporal").toString
+    val dir = SparkSpec.tempDir("temporal").toString
     val ts = java.sql.Timestamp.valueOf("2025-01-01 00:00:00")
     // custkey 1 owns orders 9 and 18 (both retracted: %9==0) -> count hits
     // zero -> the view row must DISAPPEAR, not survive as (1, 0, 0).
@@ -134,7 +134,7 @@ class TemporalOpsSpec extends AnyFunSuite with SparkSpec {
 
   test("events_cusum: prefix identity matches the direct recursion; alarm classes") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("temporal").toString
+    val dir = SparkSpec.tempDir("temporal").toString
     // one type, crafted daily counts: quiet, then a sustained level shift
     val cnts = Seq(10, 10, 10, 9, 11, 10, 30, 32, 31, 10, 10)
     var id = 0L

@@ -84,24 +84,43 @@ class VectorOpsSpec extends AnyFunSuite with SparkSpec {
     one.foreach { case (q, n) => assert(labelOf(q) == labelOf(n)) }
   }
 
-  test("knnJoinCells: folded centroid ranking (large-#cells shape) matches the flat shape") {
+  test("knnJoinCells equals a driver-side brute force at 8 and 600 cells") {
     import spark.implicits._
-    // small deterministic corpus, 3 cells; forcing maxFlatCells = 0 routes
-    // through the 1-row-broadcast transform() fold that production uses
-    // above MaxLiteralFoldCells — results must be indistinguishable
-    val rows = for (c <- 0 until 3; j <- 0 until 6) yield {
-      val v = Array.tabulate(8)(d =>
-        (if (d == c) 1.0f else 0.0f) + ((c * 11 + j * 7 + d * 3) % 5) * 0.01f)
-      ((c * 6 + j).toLong, c, v)
+    // the kernel's arithmetic: float inputs, double accumulators
+    def cos(a: Array[Float], b: Array[Float]): Double = {
+      var dot = 0.0; var na = 0.0; var nb = 0.0
+      a.indices.foreach { i =>
+        val (x, y) = (a(i).toDouble, b(i).toDouble)
+        dot += x * y; na += x * x; nb += y * y
+      }
+      dot / math.sqrt(na * nb)
     }
-    val df = rows.toDF("vec_id", "label", "embedding")
-    def norm(r: org.apache.spark.sql.Row) =
-      (r.getAs[Long]("q_id"), r.getAs[Int]("rnk"), r.getAs[Long]("n_id"),
-        r.getAs[Float]("cosine"))
-    val flat = VectorOps.knnJoinCells(df, k = 3, nprobe = 2).collect().map(norm).sorted
-    val folded = VectorOps.knnJoinCells(df, k = 3, nprobe = 2, maxFlatCells = 0)
-      .collect().map(norm).sorted
-    assert(flat.nonEmpty && flat.sameElements(folded))
+    val rnd = new scala.util.Random(5)
+    for (nCells <- Seq(8, 600)) {
+      // two members per cell, so a centroid (the float-cast mean of two
+      // doubles) is exact whatever the summation order; cells 1 and 2
+      // hold the same two vectors, so their centroids tie exactly
+      val vecs = Array.fill(2 * nCells)(Array.fill(8)(rnd.nextGaussian().toFloat))
+      Seq(1, 1 + nCells).foreach(i => vecs(i + 1) = vecs(i))
+      val rows = vecs.indices.map(i => (i.toLong, i % nCells, vecs(i)))
+      val cents = rows.groupBy(_._2).map { case (label, ms) =>
+        label -> ms.map(_._3).reduce((x, y) =>
+          x.indices.map(d => ((x(d).toDouble + y(d).toDouble) / 2).toFloat).toArray)
+      }
+      val nprobe = 3
+      val want = rows.map { case (q, _, qv) =>
+        val cells = cents.toSeq.map { case (l, c) =>
+          val cs = cos(qv, c); (if (cs.isNaN) 1.0 else -cs, l)
+        }.sorted.take(nprobe).map(_._2).toSet
+        q -> rows.filter(r => r._1 != q && cells(r._2))
+          .map { case (n, _, nv) => (-cos(qv, nv), n) }.sorted.take(3).map(_._2)
+      }.toMap
+      val got = VectorOps.knnJoinCells(rows.toDF("vec_id", "label", "embedding"), k = 3, nprobe)
+        .collect().groupBy(_.getAs[Long]("q_id")).map { case (q, rs) =>
+          q -> rs.sortBy(_.getAs[Int]("rnk")).map(_.getAs[Long]("n_id")).toSeq
+        }
+      assert(got == want, s"at $nCells cells")
+    }
   }
 
   test("knnJoinCells: zero-norm vectors (NaN cosine) are pinned last, not sort-placed") {
@@ -117,13 +136,11 @@ class VectorOpsSpec extends AnyFunSuite with SparkSpec {
       (3L, 1, Array(0.0f, 0.2f, 0.9f, 0.0f)),
       (4L, 9, Array(0.0f, 0.0f, 0.0f, 0.0f)))
     val df = rows.toDF("vec_id", "label", "embedding")
-    for (maxFlat <- Seq(512, 0)) { // both shapes inherit the same pin
-      val got = VectorOps.knnJoinCells(df, k = 2, nprobe = 1, maxFlatCells = maxFlat)
-        .collect().map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("n_id")))
-      assert(got.nonEmpty)
-      got.filter(_._1 != 4L).foreach { case (q, n) =>
-        assert(n != 4L, s"query $q probed the NaN cell at nprobe=1 (shape $maxFlat)")
-      }
+    val got = VectorOps.knnJoinCells(df, k = 2, nprobe = 1)
+      .collect().map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("n_id")))
+    assert(got.nonEmpty)
+    got.filter(_._1 != 4L).foreach { case (q, n) =>
+      assert(n != 4L, s"query $q probed the NaN cell at nprobe=1")
     }
   }
 
@@ -149,7 +166,7 @@ class VectorOpsSpec extends AnyFunSuite with SparkSpec {
     val rows = (0L until n.toLong).map { i =>
       (i, Array.fill(dim)((rnd.nextGaussian() * 0.5).toFloat), (i % 2).toInt)
     }
-    val dir = java.nio.file.Files.createTempDirectory("knn-sf").toString
+    val dir = SparkSpec.tempDir("knn-sf").toString
     rows.toDF("vec_id", "embedding", "label")
       .writeTable(dir, "embeddings")
     val got = VectorOps.queries("sim_knn_join")(spark, dir).collect()

@@ -55,7 +55,7 @@ class DocGenSourceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("micro-batch stream: rate-limited batches cover the table exactly once") {
-    val root = java.nio.file.Files.createTempDirectory("docgen-stream").toString
+    val root = SparkSpec.tempDir("docgen-stream").toString
     val stream = spark.readStream.format(classOf[DocGenSource].getName)
       .option("rows", "1000").option("partitions", "4")
       .option("rowsPerBatch", "300").load()
@@ -84,7 +84,7 @@ class DocGenSourceSpec extends AnyFunSuite with SparkSpec {
 
   test("the DocGen stream feeds the continuous prep pipeline with batch parity") {
     import graft.streaming.StreamingPrep
-    val root = java.nio.file.Files.createTempDirectory("docgen-prep").toString
+    val root = SparkSpec.tempDir("docgen-prep").toString
     val tsCol = timestamp_seconds(lit(1700000000L) + col("doc_id"))
     val batch = docs(2000).withColumn("ts", tsCol)
     val benchGrams = StreamingPrep.benchGramHashes(batch.filter(col("doc_id") < 10))

@@ -14,7 +14,7 @@ class FormatsSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    SparkSpec.tempDir(prefix).toString
 
   private def rows = (1L to 100L).map(i => (i, s"name$i", (i % 7).toInt, i * 10))
 

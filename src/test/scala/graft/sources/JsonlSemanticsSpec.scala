@@ -24,7 +24,7 @@ class JsonlSemanticsSpec extends AnyFunSuite with SparkSpec {
     StructField("_corrupt_record", StringType)))
 
   private def writeFixture(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("jsonl").toString
+    val dir = SparkSpec.tempDir("jsonl").toString
     val lines = Seq(
       """{"id": 1, "qty": 10, "name": "ok"}""",
       """{"id": 2, "qty": "not-a-number", "name": "bad-type"}""",

@@ -80,7 +80,7 @@ class MediaGenSourceSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("micro-batch stream: rate-limited batches deliver each id exactly once") {
-    val root = java.nio.file.Files.createTempDirectory("mediagen-stream").toString
+    val root = SparkSpec.tempDir("mediagen-stream").toString
     val stream = spark.readStream.format(classOf[MediaGenSource].getName)
       .option("rows", "400").option("partitions", "4")
       .option("rowsPerBatch", "150").load()

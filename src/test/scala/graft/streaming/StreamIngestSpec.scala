@@ -29,7 +29,7 @@ class StreamIngestSpec extends AnyFunSuite with SparkSpec {
     "GC", "cpd", "2025-01-01")
 
   private def mkCfg(): GraftConfig = {
-    val root = Files.createTempDirectory("stream").toString
+    val root = SparkSpec.tempDir("stream").toString
     Files.createDirectories(Paths.get(root, "in"))
     GraftConfig(
       inputDir = s"$root/in",
@@ -360,7 +360,6 @@ class StreamIngestSpec extends AnyFunSuite with SparkSpec {
       "GRAFT_ERRORS_DIR" -> "/e", "GRAFT_CHECKPOINT_DIR" -> "/c",
       "GRAFT_ARCHIVE_DIR" -> "/a"))
     assert(cfg.batchSize == 500)            // BIGQUERY_BATCH_SIZE default (main.py:40)
-    assert(cfg.httpRequestTimeoutSec == 900) // HTTP_REQUEST_TIMEOUT default (main.py:39)
     val e = intercept[IllegalArgumentException](GraftConfig.fromEnv(Map.empty))
     assert(e.getMessage.contains("GRAFT_INPUT_DIR"))
   }
@@ -374,7 +373,7 @@ class StreamIngestSpec extends AnyFunSuite with SparkSpec {
       GraftConfig.fromEnv(base + ("GRAFT_BATCH_SIZE" -> "0")))
     assert(zero.getMessage.contains("GRAFT_BATCH_SIZE"))
     val junk = intercept[IllegalArgumentException](
-      GraftConfig.fromEnv(base + ("GRAFT_HTTP_TIMEOUT" -> "soon")))
-    assert(junk.getMessage.contains("GRAFT_HTTP_TIMEOUT"))
+      GraftConfig.fromEnv(base + ("GRAFT_BATCH_SIZE" -> "soon")))
+    assert(junk.getMessage.contains("GRAFT_BATCH_SIZE") && junk.getMessage.contains("integer"))
   }
 }

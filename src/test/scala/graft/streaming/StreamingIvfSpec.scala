@@ -24,8 +24,8 @@ class StreamingIvfSpec extends AnyFunSuite with SparkSpec {
   test("streamed batches accrete like the batch API; replay of a batchId is a no-op") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("ivf-stream").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("ivf-stream-ckpt").toString
+    val dir = SparkSpec.tempDir("ivf-stream").toString
+    val ckpt = SparkSpec.tempDir("ivf-stream-ckpt").toString
     IvfIncremental.bootstrap(spark,
       (0 until 40).map(i => (i.toLong, mkVec(i))).toDF("vec_id", "embedding"),
       nCells = 4, dir)
@@ -42,7 +42,7 @@ class StreamingIvfSpec extends AnyFunSuite with SparkSpec {
 
     // every streamed vector is probe-able; nearest neighbors of a probe
     // match the batch-built twin index
-    val twin = java.nio.file.Files.createTempDirectory("ivf-stream-twin").toString
+    val twin = SparkSpec.tempDir("ivf-stream-twin").toString
     IvfIncremental.bootstrap(spark,
       (0 until 40).map(i => (i.toLong, mkVec(i))).toDF("vec_id", "embedding"),
       nCells = 4, twin)
@@ -69,7 +69,7 @@ class StreamingIvfSpec extends AnyFunSuite with SparkSpec {
 
   test("adversarial stream drift fires the auto-recluster through the batch hook") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ivf-stream-drift").toString
+    val dir = SparkSpec.tempDir("ivf-stream-drift").toString
     // collapsed bootstrap: only cluster-0 vectors seed the cells
     IvfIncremental.bootstrap(spark,
       (0 until 40).map(i => (i.toLong * 4, mkVec(i * 4))).toDF("vec_id", "embedding"),

@@ -35,7 +35,7 @@ class StreamingMediaPrepSpec extends AnyFunSuite with SparkSpec {
       r.getAs[Long]("n_outputs"), r.getAs[String]("artifact_fp"))).toSet
 
   test("stream/batch parity: artifacts and datasheet agree on the generated corpus") {
-    val root = java.nio.file.Files.createTempDirectory("mediaprep-parity").toString
+    val root = SparkSpec.tempDir("mediaprep-parity").toString
     val want = StreamingMediaPrep.prepBatch(batchEnv(), maxDim = 24, frameStride = 2)
       .toDF().collect()
     assert(want.length < ROWS, "dedup must collapse the decade duplicates")
@@ -68,7 +68,7 @@ class StreamingMediaPrepSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("chaos restart: crash after sink write, before commit — no loss, no dups") {
-    val root = java.nio.file.Files.createTempDirectory("mediaprep-chaos").toString
+    val root = SparkSpec.tempDir("mediaprep-chaos").toString
     val want = keyed(StreamingMediaPrep.prepBatch(batchEnv(), maxDim = 24,
       frameStride = 2).toDF().collect())
 

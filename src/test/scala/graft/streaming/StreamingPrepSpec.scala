@@ -66,7 +66,7 @@ class StreamingPrepSpec extends AnyFunSuite with SparkSpec {
     import graft.sources.DocGenSource
     import org.apache.spark.sql.{DataFrame, Row, Dataset}
     import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files.createTempDirectory("prep-chaos").toString
+    val root = SparkSpec.tempDir("prep-chaos").toString
     val tsCol = timestamp_seconds(lit(1700000000L) + col("doc_id"))
     val batch = spark.read.format(classOf[DocGenSource].getName)
       .option("rows", "2000").option("partitions", "4").load()
