@@ -203,39 +203,6 @@ object Bench {
       else s"${outFile}_c$cpus"
     }
 
-    // Ambient-contention self-defense (round-16 verdict #4), SINGLE-pass
-    // mode only (medians make it redundant at >= 2 passes): if a committed
-    // protocol-median file is present (BENCH_LOCAL.json), re-run ONCE any
-    // query whose time exceeds k x its committed median and report the
-    // min, flagged under "ambient_rerun": [first, rerun]. A REAL
-    // regression survives the re-run; an ambient spike doesn't.
-    val rerunFactor =
-      sys.env.getOrElse("SPARK_GRAFT_RERUN_FACTOR", "5").toDouble
-    val mediansPath = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_MEDIANS", "BENCH_LOCAL.json"))
-    // the committed medians are sf0.1 solo numbers — against any other
-    // scale factor EVERY query reads >5x and the whole run double-times,
-    // so the default file only applies at sf0.1 (the driver's bench sf);
-    // an explicit SPARK_GRAFT_MEDIANS opts in anywhere
-    val mediansApply = sys.env.contains("SPARK_GRAFT_MEDIANS") ||
-      sfDir.replaceAll("/+$", "").endsWith("sf0.1")
-    val medians: Map[String, Double] =
-      if (!mediansApply || !Files.isReadable(mediansPath)) Map.empty
-      else try {
-        val text = Files.readString(mediansPath)
-        // the artifact is flat inside "queries": { "name": secs, ... } —
-        // slice that object and regex the pairs (no JSON lib on purpose)
-        val start = text.indexOf("\"queries\"")
-        val open = if (start < 0) -1 else text.indexOf('{', start)
-        val close = if (open < 0) -1 else text.indexOf('}', open)
-        if (close < 0) Map.empty
-        else "\"([A-Za-z0-9_]+)\"\\s*:\\s*(-?[0-9.]+)".r
-          .findAllMatchIn(text.substring(open, close))
-          .map(m => m.group(1) -> m.group(2).toDouble)
-          .filter(_._2 > 0).toMap
-      } catch { case _: Exception => Map.empty }
-    val reruns = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
-
     val passes = scala.collection.mutable.ArrayBuffer.empty[Seq[(String, Either[String, Double])]]
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted
@@ -270,16 +237,11 @@ object Bench {
       // construction, and immune to a transient one-pass failure deflating
       // a pass total (median-of-pass-totals was not: the deflated total
       // skewed the median while the per-query medians ignored it). A
-      // single pass degrades to the sum of its per-query times — which
-      // the ambient-rerun channel may have denoised, so sum the RESULTS.
+      // single pass degrades to the sum of its per-query times.
       val total = results.collect { case (_, Right(v)) => v }.sum
       val runsJson = ",\"runs\":" + passes.length +
         ",\"run_totals\":" + runTotals.map(t => f"$t%.3f").mkString("[", ",", "]") +
         ",\"run_failed\":" + runFailed.mkString("[", ",", "]")
-      val rerunJson = if (reruns.isEmpty) ""
-      else ",\"ambient_rerun\":" + reruns.map { case (k, (a, b)) =>
-        "\"" + k + "\":[" + a + "," + b + "]"
-      }.mkString("{", ",", "}")
       val spillJson = if (spillOn)
         ",\"spill_bytes\":" + spill.map { case (k, (m, dd)) =>
           "\"" + k + "\":[" + m + "," + dd + "]"
@@ -293,7 +255,7 @@ object Bench {
       // totals incommensurable — it is now pinned and self-describing);
       // "cpus" records the slot count so per-core-count artifacts are
       // attributable without exegesis.
-      s"""{"metric":"total","value":$total,"unit":"sec","headline":"sum_of_medians","cpus":$cpus,"queries":$qs,"sf":"$sfDir","failed":$failed$runsJson$rerunJson$spillJson}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","headline":"sum_of_medians","cpus":$cpus,"queries":$qs,"sf":"$sfDir","failed":$failed$runsJson$spillJson}"""
     }
     def writeArtifact(results: Seq[(String, Either[String, Double])]): Unit = {
       val bytes = (record(results) + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -320,27 +282,15 @@ object Bench {
       writeArtifact(combined) // progressive: a killed later pass still leaves a valid artifact
     }
 
-    val results: Seq[(String, Either[String, Double])] =
-      if (passes.length > 1) combined
-      else combined.map { // single pass: the r16 ambient-rerun channel
-        case (n, Right(v)) if medians.get(n).exists(m => v > rerunFactor * m) =>
-          System.err.println(f"[bench] $n%s ${v}%.2fs > $rerunFactor x committed " +
-            f"median ${medians(n)}%.2fs — ambient re-run")
-          runOnce(n) match {
-            case Right(v2) => reruns(n) = (v, v2); n -> Right(math.min(v, v2))
-            case Left(_)   => n -> Right(v) // re-run failed: keep the honest first pass
-          }
-        case other => other
-      }
+    val results = combined
     // Two channels, two shapes (round-14 verdict #1): the FULL record —
     // per-query map included — goes to bench_result.json (the unambiguous
-    // artifact); stdout's FINAL line is a COMPACT summary with no
-    // per-query map. The driver keeps only a ~2 KB tail of stdout, and
-    // the full record is >25 KB, so printing it last still truncated
-    // mid-object and left BENCH_rN `parsed: null` four rounds running.
-    // The compact line is a few hundred bytes and always survives the
-    // tail window.
-    writeArtifact(results)
+    // artifact, written after every pass above); stdout's FINAL line is a
+    // COMPACT summary with no per-query map. The driver keeps only a ~2 KB
+    // tail of stdout, and the full record is >25 KB, so printing it last
+    // still truncated mid-object and left BENCH_rN `parsed: null` four
+    // rounds running. The compact line is a few hundred bytes and always
+    // survives the tail window.
     val failedJson = results.collect { case (k, Left(_)) => "\"" + k + "\"" }
       .mkString("[", ",", "]")
     // same rule as record(): sum of per-query medians (multi-pass) / times

@@ -24,9 +24,12 @@ import org.apache.spark.sql.functions._
   * Resource lifecycle (a round-4 verdict defect, fixed here): iterative
   * DataFrame loops must `localCheckpoint` every round to truncate lineage,
   * but `spark.catalog.clearCache()` cannot release RDD-level checkpoint
-  * blocks — a long-lived session leaks storage memory per call unless each
-  * superseded round's blocks are explicitly unpersisted. [[CheckpointChain]]
-  * releases round N-1's blocks as soon as round N materializes, and the
+  * blocks — a long-lived session leaks block-manager storage per call unless
+  * each superseded round's blocks are explicitly unpersisted.
+  * [[CheckpointChain]] stores every local round DISK_ONLY (one level at
+  * every frame size, so the edges and labels chains share no state),
+  * releases round N-2's blocks as soon as round N materializes (round N-1
+  * stays for the convergence check), and the
   * FINAL result is handed off through a reliable `checkpoint()` (when
   * `sc.setCheckpointDir` is configured — all engine entry points set it) so
   * the returned frame holds NO block-manager storage at all: after a call
@@ -87,10 +90,7 @@ object DedupClusters {
   def components(pairs: DataFrame, maxIter: Int = 25,
       localMaxEdges: Long = LocalComponentsMaxEdges,
       distinctPairs: Boolean = false): DataFrame = {
-    // one size-dispatch group per query: the edges and labels chains must
-    // share the "a round frame crossed the local dispatch bound" evidence
-    val group = new IterativeCompute.DispatchGroup
-    val chain = new CheckpointChain(pairs.sparkSession, group)
+    val chain = new CheckpointChain(pairs.sparkSession)
     // Both edge orientations from ONE pass over the pair source (a
     // self-union would execute the upstream pair pipeline twice), then
     // materialized once for all iterations.
@@ -115,7 +115,7 @@ object DedupClusters {
     // the plan (and its analysis/stringification) grows exponentially —
     // localCheckpoint materializes AND cuts the lineage to the stored
     // partitions.
-    val labelChain = new CheckpointChain(pairs.sparkSession, group)
+    val labelChain = new CheckpointChain(pairs.sparkSession)
     var labels = labelChain.next(edges.select(col("dst").as("doc_id")).distinct()
       .withColumn("component", col("doc_id")))
     var iter = 0
@@ -161,7 +161,7 @@ object DedupClusters {
       labelChain.release()
       val canon = edges.filter(col("src") > col("dst")) // self-edges drop; distinct inherited
       val allIds = edges.select(col("src").as("doc_id")).distinct()
-      return logNCore(canon, allIds, 60, group, chain)
+      return logNCore(canon, allIds, 60, chain)
     }
     chain.release() // edges
     handoff(labels, labelChain)
@@ -243,8 +243,7 @@ object DedupClusters {
     // algorithms must agree on coverage. Deriving edges AND the node set
     // from this one materialization also avoids executing the (possibly
     // expensive) upstream pair pipeline twice.
-    val group = new IterativeCompute.DispatchGroup
-    val srcChain = new CheckpointChain(pairs.sparkSession, group)
+    val srcChain = new CheckpointChain(pairs.sparkSession)
     val rawPairs = srcChain.next(pairs.select(col("doc_a"), col("doc_b")))
     val allIds = rawPairs
       .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id")).distinct()
@@ -253,16 +252,15 @@ object DedupClusters {
       .select(greatest(col("doc_a"), col("doc_b")).as("src"),
         least(col("doc_a"), col("doc_b")).as("dst"))
       .filter(col("src") =!= col("dst"))
-      .distinct(), allIds, maxIter, group, srcChain)
+      .distinct(), allIds, maxIter, srcChain)
   }
 
   /** Contraction core over an already-canonical (src > dst, distinct)
     * edge frame; `upstream` chains are released with the result handoff.
     */
   private def logNCore(canonEdges: DataFrame, allIds: DataFrame, maxIter: Int,
-      group: IterativeCompute.DispatchGroup,
       upstream: CheckpointChain*): DataFrame = {
-    val chain = new CheckpointChain(canonEdges.sparkSession, group)
+    val chain = new CheckpointChain(canonEdges.sparkSession)
     val canonObs = canonEdges.observe("ls_n0", count(lit(1)).as("n"))
     var edges = chain.next(canonObs)
 

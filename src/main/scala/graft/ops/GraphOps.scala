@@ -116,7 +116,6 @@ object GraphOps {
       localMaxEdges: Long = DedupClusters.LocalComponentsMaxEdges): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val group = new IterativeCompute.DispatchGroup
     val dir = edges.select(col("src").cast("long"), col("dst").cast("long"))
     // both orientations from ONE pass (r19): the old self-union executed
     // the whole upstream pair pipeline once per branch; distinct stays —
@@ -156,7 +155,7 @@ object GraphOps {
         .select(col("dst").as("node")).distinct()
         .join(gated(settled.select(col("node")), sN), Seq("node"), "left_anti")
         .withColumn("hop", lit(h))
-    val distChain = new CheckpointChain(spark, group)
+    val distChain = new CheckpointChain(spark)
     var dist = distChain.next(Seq(src0).toDF("node").withColumn("hop", lit(0L)))
     var hop = 0L
     var lastN = 1L // |level hop|
@@ -280,8 +279,7 @@ object GraphOps {
   private[ops] def pagerankWithRounds(edges: DataFrame, damping: Double = 0.85,
                maxIter: Int = 30, tol: Double = 1e-7): (DataFrame, Int) = {
     val spark = edges.sparkSession
-    val group = new IterativeCompute.DispatchGroup
-    val chain = new CheckpointChain(spark, group)
+    val chain = new CheckpointChain(spark)
 
     val e = edges.select(col("src").cast("long"), col("dst").cast("long")).distinct()
     // one materialized pass: every edge carries its source's 1/out-degree so
@@ -306,7 +304,7 @@ object GraphOps {
     val nodes = chain.next(nodesObs)
     val n = IterativeCompute.metric(nodesObs, "pr_n").getLong(0)
 
-    val rankChain = new CheckpointChain(spark, group)
+    val rankChain = new CheckpointChain(spark)
     def massOf(row: org.apache.spark.sql.Row, i: Int): Double =
       if (row.isNullAt(i)) 0.0 else row.getDouble(i)
     val ranks0 = nodes.withColumn("pr", lit(1.0 / n))
@@ -385,9 +383,8 @@ object GraphOps {
     */
   def kcore(edges: DataFrame, maxK: Int = 1 << 20, maxRounds: Int = 100000): DataFrame = {
     val spark = edges.sparkSession
-    val group = new IterativeCompute.DispatchGroup
-    val chain = new CheckpointChain(spark, group)
-    val resChain = new CheckpointChain(spark, group)
+    val chain = new CheckpointChain(spark)
+    val resChain = new CheckpointChain(spark)
     val dir = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .filter(col("src") =!= col("dst"))
     // symmetrized: each undirected edge present in both orientations, so
@@ -398,7 +395,7 @@ object GraphOps {
     // whose neighbors are all removed decrements to degree 0 and peels
     // like any other sub-k-degree node (its core is k−1) — the explicit
     // frame keeps it from vanishing unassigned
-    val nodeChain = new CheckpointChain(spark, group)
+    val nodeChain = new CheckpointChain(spark)
     // survivor count, live degree mass (= directed edge rows of the
     // survivor-induced subgraph, since the maintained degrees are exact)
     // and the MINIMUM surviving degree all ride each survivor-frame
@@ -486,10 +483,9 @@ object GraphOps {
     */
   def boruvkaMst(edges: DataFrame, maxRounds: Int = 40): DataFrame = {
     val spark = edges.sparkSession
-    val group = new IterativeCompute.DispatchGroup
-    val chain = new CheckpointChain(spark, group)
-    val compChain = new CheckpointChain(spark, group)
-    val mstChain = new CheckpointChain(spark, group)
+    val chain = new CheckpointChain(spark)
+    val compChain = new CheckpointChain(spark)
+    val mstChain = new CheckpointChain(spark)
     val e0 = chain.next(edges
       .select(least(col("src"), col("dst")).cast("long").as("a"),
         greatest(col("src"), col("dst")).cast("long").as("b"),

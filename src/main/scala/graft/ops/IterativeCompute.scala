@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Shared resource-lifecycle kit for iterative DataFrame loops (connected
   * components, PageRank, any fixed-point computation).
@@ -8,33 +9,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Iterative plans must `localCheckpoint` every round to truncate lineage
   * (persist() keeps the logical plan, so N rounds nest N joins and the plan
   * grows without bound), but `spark.catalog.clearCache()` cannot release
-  * RDD-level checkpoint blocks — a long-lived session leaks storage memory
-  * per call unless each superseded round's blocks are explicitly
+  * RDD-level checkpoint blocks — a long-lived session leaks block-manager
+  * storage per call unless each superseded round's blocks are explicitly
   * unpersisted (a round-4 verdict defect, fixed by this kit).
   */
 private[ops] object IterativeCompute {
-
-  /** Shared size-dispatch latch for the chains of ONE iterative query: a
-    * round frame at or above the local dispatch bound — measured from its
-    * actual stored bytes, or estimated from plan stats — flips every LATER
-    * round of the same query to the reliable branch. Scoped per query (not
-    * per session) because the loops in DedupClusters split edges and labels
-    * across SEPARATE chains that must share the evidence, while a plan-stats
-    * over-estimate in one query must not tax every subsequent query of a
-    * 320-query bench session with file checkpoints.
-    */
-  final class DispatchGroup {
-    @volatile private[IterativeCompute] var big: Boolean = false
-    /** Counter-evidence (round-27 advisory): the largest SANE plan-stats
-      * estimate whose class-1 probe MEASURED well under the bound. A loop
-      * whose stats chronically over-estimate (join-product stats inflate
-      * sub-MB frames 10³–10⁴×) would otherwise re-enter the DISK_ONLY
-      * probe on EVERY round, paying a disk write+read per iteration; once
-      * an estimate is probed small, later rounds re-probe only when the
-      * estimate GROWS materially (>2×) past the cleared level.
-      */
-    @volatile private[IterativeCompute] var clearedEst: BigInt = BigInt(-1)
-  }
 
   /** Tracks the localCheckpoint blocks of an iterative loop's live frame and
     * releases the superseded round's blocks as soon as the next round
@@ -43,8 +22,7 @@ private[ops] object IterativeCompute {
     * reach it (it only clears the SQL cache), so release goes through
     * `sc.getPersistentRDDs` by id-diff around the eager checkpoint.
     */
-  final class CheckpointChain(spark: SparkSession,
-      group: DispatchGroup = new DispatchGroup) {
+  final class CheckpointChain(spark: SparkSession) {
     private val sc = spark.sparkContext
 
     /** Executor-loss resilience (round-25, found live by [[graft.ChaosProbe]]):
@@ -70,32 +48,6 @@ private[ops] object IterativeCompute {
       spark.conf.getOption("spark.graft.iter.resilient").map(_.toBoolean)
         .getOrElse(!sc.isLocal) && sc.getCheckpointDir.isDefined
 
-    /** Local-mode SIZE DISPATCH bound, in SER bytes (round-26, root-caused
-      * by [[CheckpointOomProbe]]): block-manager round storage raw-OOMs on
-      * huge round frames even though serialized unroll accounts bytes
-      * exactly — the probe pins the failing allocation to
-      * `MemoryStore.putIteratorAsBytes`'s `SerializedValuesHolder` chunk
-      * allocation (`ChunkedByteBufferOutputStream.allocateNewChunkIfNeeded`)
-      * under 32 CONCURRENT task unrolls: storage accounting admits bytes up
-      * to the unified pool, but the pool is sized against the whole heap
-      * while execution state, row buffers, and the 32 in-flight chunk
-      * overshoots hold raw heap the accounting cannot see. Rather than
-      * tune around the JVM's margins, round frames whose size approaches
-      * the pool take the RELIABLE branch (files) — measured at sf100 to
-      * match the 16 GiB block-manager time at HALF the heap (BASELINE.md
-      * "Third scaling decade"). Default bound: maxMemory/4 ≈ half the
-      * unified pool — crossed only by frames that would contend the pool;
-      * every sf0.1/sf1 round frame sits orders of magnitude under it.
-      * `spark.graft.iter.localReliableBytes` overrides; 0 disables (the
-      * probe's reproduction arm).
-      */
-    private def localReliableBytes: Long =
-      spark.conf.getOption("spark.graft.iter.localReliableBytes").map(_.toLong)
-        .getOrElse(Runtime.getRuntime.maxMemory / 4)
-
-    private def debug: Boolean =
-      spark.conf.getOption("spark.graft.iter.debug").exists(_.toBoolean)
-
     private var liveIds: Set[Int] = Set.empty // round N (just materialized)
     private var prevIds: Set[Int] = Set.empty // round N-1 (may feed N's convergence check)
 
@@ -108,86 +60,24 @@ private[ops] object IterativeCompute {
       * register no persistent RDDs; their files are reclaimed by the
       * context cleaner (`cleanCheckpoints=true` in every entry point) or
       * the entry point's checkpoint-dir deletion at exit.
+      *
+      * Local rounds store DISK_ONLY at every size. The put path streams
+      * serialized bytes straight to the disk store: no memory-store unroll,
+      * so none of the `MemoryStore.putIteratorAsBytes` chunk allocations
+      * that raw-OOM the heap when 32 tasks unroll huge SER blocks at once
+      * ([[CheckpointOomProbe]] reproduces that failure). Round frames stay
+      * out of the storage pool, and no size estimate is needed to choose.
       */
     def next(df: DataFrame): DataFrame = {
       val before = sc.getPersistentRDDs.keySet.toSet
-      // Local SIZE DISPATCH (see [[localReliableBytes]]), three storage
-      // classes per materialization:
-      //   - fast path (class 0): MEMORY_AND_DISK_SER block storage — every
-      //     ordinary round frame;
-      //   - disk probe (class 1): plan stats SANELY estimate the frame at
-      //     or above the bound (the pre-materialization signal the probe
-      //     showed is required — the FIRST huge round already OOMs) but the
-      //     estimate alone is not trusted: join-product stats over-estimate
-      //     small frames by 10³–10⁴× (measured 17–46 GB on sub-MB sf0.1
-      //     frames), and taxing every such loop with file checkpoints would
-      //     move the bench protocol. DISK_ONLY is the safe probe: the put
-      //     path streams serialized bytes straight to the disk store —
-      //     no memory-store unroll, no chunk allocation, no OOM risk at
-      //     ANY size — and the frame's ACTUAL bytes come back from the
-      //     block manager;
-      //   - reliable (class 2): some round of this query's group MEASURED
-      //     at/above the bound — all later rounds take checkpoint files
-      //     (the branch every multi-executor master runs anyway; measured
-      //     at sf100 to match the 16 GiB block-manager time at half the
-      //     heap). Plan stats are consulted only when SANE: a lineage
-      //     already cut to an RDD scan reports the unknown-size sentinel
-      //     (defaultSizeInBytes), which must not read as "huge".
-      val bound = localReliableBytes
-      var probedEst: BigInt = BigInt(-1) // the estimate behind a class-1 probe
-      val sizeClass: Int =
-        if (resilient || bound <= 0) 0
-        else if (group.big) 2
-        else {
-          val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-          val sane = est >= 0 && est < BigInt(Long.MaxValue) / 4
-          // counter-evidence gate: an estimate no bigger than 2× one this
-          // group already probed small is the same known-inflated signal —
-          // stay on the fast path instead of re-probing every round
-          val hit = sane && est > bound && est > group.clearedEst * 2
-          if (debug) System.err.println(
-            s"[iter] size-dispatch est=$est sane=$sane bound=$bound " +
-              s"cleared=${group.clearedEst} diskProbe=$hit")
-          if (hit) { probedEst = est; 1 } else 0
-        }
       // Dataset.checkpoint ALSO leaves its internal RDD persisted (the
       // write-side cache), so BOTH branches run the same id-diff
       // release; for reliable rounds the unpersist only drops the cache
       // — the FILES stay, and that is what recovery reads.
-      // SERIALIZED block storage for the fast path (round-25 third-decade
-      // finding): deserialized unroll (putIteratorAsValues) books SAMPLED
-      // object-size estimates, so 32 tasks concurrently unrolling a 5M-row
-      // round frame under-reserve and raw-OOM the heap where serialized
-      // unroll (putIteratorAsBytes) books exact bytes and degrades to
-      // disk. Round frames are compact (ids/labels) — SER is also ~3-5x
-      // denser. (putIteratorAsBytes itself still raw-OOMs on HUGE frames —
-      // the probe-pinned chunk-allocation site — which is what classes
-      // 1/2 exist to keep it away from.)
       val out =
-        if (resilient || (sizeClass == 2 && sc.getCheckpointDir.isDefined))
-          df.checkpoint()
-        else if (sizeClass >= 1)
-          df.localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        else df.localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        if (resilient) df.checkpoint()
+        else df.localCheckpoint(true, StorageLevel.DISK_ONLY)
       val added = sc.getPersistentRDDs.keySet.toSet.diff(before)
-      // latch on MEASURED bytes (the disk probe's verdict, and the catch
-      // for plan-stats UNDER-estimates in later rounds / sibling chains)
-      if (!resilient && bound > 0 && sizeClass <= 1) {
-        val stored = sc.getRDDStorageInfo
-          .filter(i => added.contains(i.id)).map(i => i.memSize + i.diskSize).sum
-        if (stored > bound) group.big = true
-        // a probe that measures WELL under the bound (half, to keep frames
-        // near the boundary re-probing) clears its estimate level: the
-        // stats are proven inflated at that level, so equal-or-smaller
-        // estimates skip the per-round disk probe from here on
-        else if (sizeClass == 1 && stored <= bound / 2 &&
-            probedEst > group.clearedEst)
-          group.clearedEst = probedEst
-        if (debug) System.err.println(
-          s"[iter] size-dispatch stored=$stored bound=$bound " +
-            s"latched=${group.big} cleared=${group.clearedEst}")
-      }
       releaseIds(prevIds)
       prevIds = liveIds
       liveIds = added

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 
 /** Incremental IVF index maintenance: add batches of vectors to a persisted
   * approximate-nearest-neighbor index without re-clustering or re-reading
@@ -149,16 +150,27 @@ object IvfIncremental {
     }
   }
 
+  /** The schemas every writer of `centroids/` and `vectors/` produces
+    * (`q` and `csum` come out of nullable lambdas, so their elements are
+    * nullable). Reading with them skips Spark's schema-inference job, and
+    * pins the `cell` partition column to the writers' long instead of the
+    * directory-inferred int.
+    */
+  private val centSchema = StructType(Seq(StructField("cell", LongType),
+    StructField("csum", ArrayType(LongType)), StructField("cnt", LongType)))
+  private val vecSchema = StructType(Seq(StructField("vec_id", LongType),
+    StructField("q", ArrayType(LongType)), StructField("cell", LongType)))
+
   private def readCentroids(spark: SparkSession, indexPath: String): DataFrame = {
     repair(spark, indexPath)
     completeSwap(spark, centDir(indexPath))
-    spark.read.parquet(centDir(indexPath))
+    spark.read.schema(centSchema).parquet(centDir(indexPath))
   }
 
   private def readVectors(spark: SparkSession, indexPath: String): DataFrame = {
     repair(spark, indexPath)
     completeSwap(spark, vecDir(indexPath))
-    spark.read.parquet(vecDir(indexPath))
+    spark.read.schema(vecSchema).parquet(vecDir(indexPath))
   }
 
   /** Quantize raw float embeddings to the engine's integer vector form.
@@ -429,8 +441,7 @@ object IvfIncremental {
       .collect().map(_.getLong(0)) // ≤ #cells — control plane
     readVectors(spark, indexPath)
       .filter(col("cell").isin(cells: _*))
-      // partition-column read type is directory-inferred (int); pin long
-      .select(col("vec_id"), col("cell").cast("long").as("cell"), col("q"))
+      .select(col("vec_id"), col("cell"), col("q"))
       .join(probes, col("cell") === col("pcell"))
       .select(col("q_id"), col("vec_id"), col("cell"),
         call_function("graft_dot_i64", col("q"), col("pq")).as("dot_q"))
@@ -459,9 +470,7 @@ object IvfIncremental {
     readVectors(spark, indexPath)
       .filter(col("cell").isin(cells: _*))
       .crossJoin(broadcast(pq))
-      // `cell` is a partition column on read, so its type is directory-name
-      // inferred (int); pin the engine's long cell-id type at the boundary
-      .select(col("vec_id"), col("cell").cast("long").as("cell"),
+      .select(col("vec_id"), col("cell"),
         call_function("graft_dot_i64", col("q"), col("pq")).as("dot_q"))
       .orderBy(col("dot_q").desc, col("vec_id").asc)
       .limit(k)

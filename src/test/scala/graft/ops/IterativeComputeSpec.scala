@@ -4,12 +4,9 @@ import graft.SparkSpec
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Size-dispatch counter-evidence (round-27 advisory): a chain whose plan
-  * stats chronically OVER-estimate must pay the DISK_ONLY probe once, not
-  * once per round — after a probe measures the frame well under the bound,
-  * equal-or-smaller estimates ride the fast MEMORY_AND_DISK_SER path.
-  * (The big-latch / reliable branch itself is probe-verified at scale by
-  * CheckpointOomProbe — see tools/checkpoint_oom_probe.py.)
+/** CheckpointChain's local round storage and its observed-metrics channel.
+  * (The MEMORY_AND_DISK_SER OOM that DISK_ONLY rounds avoid is reproduced
+  * at scale by CheckpointOomProbe — see tools/checkpoint_oom_probe.py.)
   */
 class IterativeComputeSpec extends AnyFunSuite with SparkSpec {
 
@@ -24,55 +21,22 @@ class IterativeComputeSpec extends AnyFunSuite with SparkSpec {
     sc.getPersistentRDDs(added.head).getStorageLevel
   }
 
-  test("an estimate probed small is not re-probed: DISK_ONLY once, then fast path") {
+  test("every local round stores DISK_ONLY, whatever its plan stats estimate") {
     import spark.implicits._
-    // join-product stats: two ~2k-row children estimate their inner join at
-    // children-size PRODUCT bytes while the actual frame is a few MB — the
-    // measured 10^3-10^4x inflation class the dispatch comment documents
-    def inflated() = {
-      val a = spark.range(2000).toDF("ida")
-      val b = spark.range(2000).toDF("idb")
-      a.join(b, $"ida" % 4 === $"idb" % 4)
-    }
-    val est = inflated().queryExecution.optimizedPlan.stats.sizeInBytes
+    // join-product stats: two 2k-row children estimate their inner join at
+    // children-size PRODUCT bytes while the actual frame is a few MB
+    val a = spark.range(2000).toDF("ida")
+    val b = spark.range(2000).toDF("idb")
+    val inflated = a.join(b, $"ida" % 4 === $"idb" % 4)
+    val est = inflated.queryExecution.optimizedPlan.stats.sizeInBytes
     assert(est > (64L << 20), s"precondition: stats must over-estimate (est=$est)")
-    val bound = est / 2 // est > bound, while actual bytes sit far under bound/2
-    spark.conf.set("spark.graft.iter.localReliableBytes", bound.toString)
+    val chain = new IterativeCompute.CheckpointChain(spark)
     try {
-      val chain = new IterativeCompute.CheckpointChain(spark)
-      try {
-        assert(nextLevel(chain, inflated()) == StorageLevel.DISK_ONLY,
-          "first over-estimated round takes the disk probe")
-        assert(nextLevel(chain, inflated()) == StorageLevel.MEMORY_AND_DISK_SER,
-          "probed-small estimate must not re-probe on the next round")
-        assert(nextLevel(chain, inflated()) == StorageLevel.MEMORY_AND_DISK_SER)
-      } finally chain.release()
-    } finally spark.conf.unset("spark.graft.iter.localReliableBytes")
-  }
-
-  test("counter-evidence is scoped to the group: a fresh group re-probes") {
-    import spark.implicits._
-    def inflated() = {
-      val a = spark.range(2000).toDF("ida")
-      val b = spark.range(2000).toDF("idb")
-      a.join(b, $"ida" % 4 === $"idb" % 4)
-    }
-    val est = inflated().queryExecution.optimizedPlan.stats.sizeInBytes
-    spark.conf.set("spark.graft.iter.localReliableBytes", (est / 2).toString)
-    try {
-      val g1 = new IterativeCompute.DispatchGroup
-      val c1 = new IterativeCompute.CheckpointChain(spark, g1)
-      val c2 = new IterativeCompute.CheckpointChain(spark, g1)
-      val fresh = new IterativeCompute.CheckpointChain(spark)
-      try {
-        assert(nextLevel(c1, inflated()) == StorageLevel.DISK_ONLY)
-        // sibling chain of the SAME group shares the evidence (the
-        // DedupClusters edges+labels split)
-        assert(nextLevel(c2, inflated()) == StorageLevel.MEMORY_AND_DISK_SER)
-        // a different query's group must not inherit it
-        assert(nextLevel(fresh, inflated()) == StorageLevel.DISK_ONLY)
-      } finally { c1.release(); c2.release(); fresh.release() }
-    } finally spark.conf.unset("spark.graft.iter.localReliableBytes")
+      assert(nextLevel(chain, spark.range(1000).toDF("id")) == StorageLevel.DISK_ONLY,
+        "an ordinary round frame")
+      assert(nextLevel(chain, inflated) == StorageLevel.DISK_ONLY,
+        "an over-estimated join-product round frame")
+    } finally chain.release()
   }
 
   test("observed metrics populate during the round's checkpoint job (r20 job-count fold)") {

@@ -1,14 +1,14 @@
-#!/usr/bin/env python3
 """Driver for graft.ops.CheckpointOomProbe — the minimal reproduction of the
 round-25 third-decade local-checkpoint OOM, and the verification harness for
-the round-26 size-dispatch fix.
+CheckpointChain's one local round level (DISK_ONLY at every frame size).
 
 Runs three arms in child JVMs at a constrained heap (default 2g, 200M-row
 (id, label) round frames, 3 rounds — sized so each of the 32 concurrent
 tasks unrolls a ~100 MB SER block into a 64 MB/slot heap):
 
-  blockmanager  spark.graft.iter.localReliableBytes=0 (dispatch disabled) —
-                the pre-fix local path. EXPECTED rc != 0: raw
+  blockmanager  the probe's own round loop storing every round
+                localCheckpoint(true, MEMORY_AND_DISK_SER) — the pre-fix
+                local path. EXPECTED rc != 0: raw
                 java.lang.OutOfMemoryError inside
                 MemoryStore.putIteratorAsBytes -> SerializedValuesHolder ->
                 ChunkedByteBufferOutputStream.allocateNewChunkIfNeeded
@@ -16,12 +16,11 @@ tasks unrolls a ~100 MB SER block into a 64 MB/slot heap):
                 accounting admits bytes up to the unified pool, but 32
                 concurrent unroll chunk allocations plus non-storage heap
                 raw-OOM before accounting intervenes).
-  default       no overrides — the size-dispatched reliable branch must
-                engage (plan-stats estimate: the FIRST huge round already
-                OOMs, so a measured-only latch is insufficient) and the run
-                must complete.
-  reliable      spark.graft.iter.resilient=true — the confirmed mitigation,
-                timing control.
+  default       CheckpointChain with no overrides — DISK_ONLY local rounds
+                stream straight to the disk store (no memory-store unroll)
+                and the run must complete.
+  reliable      spark.graft.iter.resilient=true — reliable checkpoint files
+                per round, the timing control.
 
 Exit 0 iff the matrix matches expectations. Usage:
   python3 tools/checkpoint_oom_probe.py [heap=2g] [rows=200000000]
