@@ -21,16 +21,17 @@ import org.apache.spark.storage.StorageLevel
   * (id, label) round frame, one checkpoint per round with one superseded
   * generation kept live (the convergence-check contract), 32 concurrent
   * slots. Frame size and heap come from the runner
-  * (`tools/checkpoint_oom_probe.py`), which drives three arms in child
+  * (`tools/checkpoint_oom_probe.py`), which drives four arms in child
   * JVMs at a constrained heap:
   *
   *   - `blockmanager`: its own round loop storing each round
   *     `localCheckpoint(true, MEMORY_AND_DISK_SER)` — the pre-fix local
   *     path; EXPECTED to exit nonzero (raw OOM) at the probe's heap.
+  *   - `disk`: the chain with `spark.graft.iter.resilient=false` —
+  *     DISK_ONLY block-manager rounds, recorded for comparison.
   *   - `default`: [[IterativeCompute.CheckpointChain]] with no overrides —
-  *     DISK_ONLY local rounds, which must complete.
-  *   - `reliable`: `spark.graft.iter.resilient=true` — reliable checkpoint
-  *     files per round, the timing control.
+  *     reliable checkpoint files, which must complete.
+  *   - `reliable`: `spark.graft.iter.resilient=true` — the timing control.
   *
   * Exit contract: prints ONE JSON line and exits 0 on completion; an OOM
   * kills the JVM (the runner reads the nonzero rc as the reproduction).
@@ -46,6 +47,7 @@ object CheckpointOomProbe {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus), cpus.toInt, "")
     if (mode == "reliable") b.config("spark.graft.iter.resilient", "true")
+    if (mode == "disk") b.config("spark.graft.iter.resilient", "false")
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.GraftSession.checkpointScratch(spark)
@@ -79,8 +81,8 @@ object CheckpointOomProbe {
   }
 
   /** The pre-fix local round storage: MEMORY_AND_DISK_SER blocks, one
-    * superseded generation kept, the one before it unpersisted — the same
-    * id-diff lifecycle as [[IterativeCompute.CheckpointChain]].
+    * superseded generation kept, the one before it unpersisted once the
+    * new round is written — the pre-fix id-diff lifecycle.
     */
   private def serChain(spark: SparkSession): (DataFrame => DataFrame, () => Unit) = {
     val sc = spark.sparkContext

@@ -22,14 +22,14 @@ import org.apache.spark.sql.functions._
   *     safety net for pathological graphs.
   *
   * Resource lifecycle (a round-4 verdict defect, fixed here): iterative
-  * DataFrame loops must `localCheckpoint` every round to truncate lineage,
-  * but `spark.catalog.clearCache()` cannot release RDD-level checkpoint
+  * DataFrame loops must checkpoint every round to truncate lineage, but
+  * `spark.catalog.clearCache()` cannot release RDD-level checkpoint
   * blocks — a long-lived session leaks block-manager storage per call unless
   * each superseded round's blocks are explicitly unpersisted.
-  * [[CheckpointChain]] stores every local round DISK_ONLY (one level at
-  * every frame size, so the edges and labels chains share no state),
-  * releases round N-2's blocks as soon as round N materializes (round N-1
-  * stays for the convergence check), and the
+  * [[CheckpointChain]] checkpoints every round one way (reliable files
+  * whenever a checkpoint dir is set, at every frame size, so the edges and
+  * labels chains share no state), releases round N-2 before round N is
+  * written (round N-1 stays for the convergence check), and the
   * FINAL result is handed off through a reliable `checkpoint()` (when
   * `sc.setCheckpointDir` is configured — all engine entry points set it) so
   * the returned frame holds NO block-manager storage at all: after a call

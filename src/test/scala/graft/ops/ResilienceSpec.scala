@@ -6,11 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Gates the executor-loss-resilient iterative path in the regular suite.
   *
   * The real executor-loss evidence is [[graft.ChaosProbe]] (multi-process
-  * `local-cluster`, SIGKILL mid-query — `CHAOS_PROBE.json`); this spec keeps
-  * the RESILIENT CheckpointChain branch from rotting between probe runs: in
-  * local mode the branch is off by default (auto-detection), so without this
-  * gate no test would ever execute it and a regression would only surface on
-  * a real cluster.
+  * `local-cluster`, SIGKILL mid-query — `CHAOS_PROBE.json`); this spec pins
+  * the RESILIENT CheckpointChain branch (reliable files, the default in
+  * every mode) against the block-manager branch it can be switched to.
   */
 class ResilienceSpec extends AnyFunSuite with SparkSpec {
 
@@ -31,7 +29,7 @@ class ResilienceSpec extends AnyFunSuite with SparkSpec {
     // (simhash_clusters). The fixed-round oracle twins (graph_pagerank
     // etc.) never construct a chain — testing them here would be vacuous.
     for (q <- Seq("graph_bfs_hops", "dedup_cluster_sizes", "dedup_simhash_clusters")) {
-      val local = rows(q)
+      val local = withResilient(on = false)(rows(q))
       val resilient = withResilient(on = true)(rows(q))
       assert(resilient == local, s"$q: resilient-checkpoint result diverged")
     }
